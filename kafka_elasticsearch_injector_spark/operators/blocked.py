@@ -398,10 +398,7 @@ def containment_pairs_blocked(
     keep the documented O(N²/B²) contract instead of drifting
     superquadratic with v_tile (the r11 rehearsal's 2.51 exponent).
     Both regimes produce identical exact-integer intersections → pair
-    output is bit-identical. The whole-corpus alternative for large
-    FLAT vocabularies stays operators/posting.py
-    containment_pairs_posting / jaccard_pairs_posting (same output
-    contract, equivalence-tested; auto-routed by jaccard_pairs_auto).
+    output is bit-identical.
     """
     base = df.select(F.col(id_col), F.col(set_col))
     if n_blocks is None:

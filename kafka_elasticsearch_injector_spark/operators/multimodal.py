@@ -2,17 +2,13 @@
 with typed metadata, processed via Arrow-batched mapInPandas.
 
 Real kernels by lane: header dims decode for PNG/GIF/BMP/JPEG/WebP
-lives here (parse_image_header, r12; WebP r15); PIXEL decode + resize
-for all five — PNG, BMP, GIF (spec LZW), JPEG baseline + progressive
-(huffman + IDCT, T.81 Annex G in r14), WebP VP8L (RFC 9649 §5 in
-r15) — is operators/pixels.py + operators/jpeg_codec.py +
-operators/webp_codec.py (pure stdlib + numpy, no image libs); PCM
-16/24-bit, IEEE-float, and G.711 audio features are real below. Only
-out-of-scope encodings stay stubbed (arithmetic-coded JPEG, lossy VP8,
-video frames, compressed audio — resize_stub marks the boundary);
-everything Spark-side is real
-and tested: schema contracts, binary column handling, Arrow batch
-shape, and the mapInPandas partition-parallel execution path.
+lives here (parse_image_header, r12; WebP r15), as does the Exif
+orientation walk; PCM 16/24-bit, IEEE-float, and G.711 audio features
+are real below. There is no pixel decode or resize: images stay
+opaque past the header (resize_stub marks that boundary), as do video
+frames and compressed audio. Everything Spark-side is real and tested:
+schema contracts, binary column handling, Arrow batch shape, and the
+mapInPandas partition-parallel execution path.
 
 100 TB design:
 - media bytes live in the parquet as binary columns (or as object-store
@@ -103,11 +99,8 @@ def decode_media(df_media: DataFrame) -> DataFrame:
 # height — are parseable from the first bytes with the stdlib alone
 # for all five formats. That makes dims-based pruning (min-resolution
 # gates, aspect filters, thumbnail routing) REAL, not faked, while
-# keeping the blob opaque past the header. Since r13 pixel decode is
-# real for all four formats too (operators/pixels.py + jpeg_codec.py:
-# stdlib zlib + numpy + spec LZW/huffman/IDCT); header-only parsing
-# here stays the cheap path for dims-only gates — it reads a few
-# hundred bytes where full decode touches every pixel.
+# keeping the blob opaque past the header: it reads a few hundred
+# bytes, where a pixel decode would touch every pixel.
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # JPEG start-of-frame markers that carry dimensions: C0-CF minus the
@@ -122,8 +115,8 @@ def _tiff_ifd0_tags(t: bytes,
     """Resolve the wanted IFD0 tags of a TIFF structure to integer
     lists (TIFF 6.0 §2: II/MM byte order, magic 42, 12-byte entries;
     SHORT and LONG values, inline or offset-stored). None for anything
-    malformed. Shared by the Exif orientation walk, TIFF header dims,
-    and the TIFF raster decode in pixels.py."""
+    malformed. Shared by the Exif orientation walk and TIFF header
+    dims."""
     try:
         if t[:2] == b"II":
             e = "<"
@@ -229,8 +222,8 @@ def _walk_chunks(buf: bytes, start: int, end: int):
     """Yield (fourcc, payload_start, payload_size) over word-aligned
     RIFF-style chunks in buf[start:end], stopping at the first
     structural inconsistency — truncated chunks simply end the walk,
-    callers decide whether what they saw was enough. Shared by the
-    container walk below and the ANMF frame walk in webp_codec."""
+    callers decide whether what they saw was enough. Used by the
+    WebP container walk below."""
     pos = start
     while pos + 8 <= end:
         fourcc = buf[pos:pos + 4]
@@ -399,10 +392,9 @@ def decode_image_dims(df_media: DataFrame,
                     # without an Exif carrier (its magic check IS the
                     # format gate — no list to keep in sync here)
                     if parse_exif_orientation(buf) in (5, 6, 7, 8):
-                        # DISPLAY dims, consistent with the pixel
-                        # kernels: orientations 5-8 transpose the
-                        # raster, and an aspect gate fed raster dims
-                        # passes sideways photos
+                        # DISPLAY dims: orientations 5-8 transpose
+                        # the raster, and an aspect gate fed raster
+                        # dims passes sideways photos
                         w, h = h, w
                     fmts.append(fmt)
                     ws.append(w)
@@ -481,21 +473,17 @@ def extract_features(df_media: DataFrame, n_bins: int = 16) -> DataFrame:
 
 
 def resize_stub(df_media: DataFrame, width: int, height: int) -> DataFrame:
-    """Plumbing-only resize marking the remaining codec boundary —
-    formats outside the pure-Python decoders' scope (arithmetic-coded
-    JPEG, lossy VP8, video frames) need a native codec
-    (PIL/opencv/ffmpeg, not in this container), so this kernel raises
-    from the executors, by design. For PNG, BMP, GIF, JPEG
-    (baseline + progressive), and WebP VP8L the REAL path exists:
-    operators/pixels.resize_images decodes, resamples, and re-encodes
-    deterministic PNG thumbnails with pure stdlib + numpy."""
+    """Plumbing-only resize marking the codec boundary: no pixel
+    decode or resize exists in this package, and a real one needs a
+    native codec (PIL/opencv/ffmpeg, not available here), so this
+    kernel raises from the executors, by design. Header-level image
+    facts (format, dims, Exif orientation) are real:
+    parse_image_header / parse_exif_orientation."""
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         raise NotImplementedError(
-            "resize for codecs outside the pure-Python scope requires "
-            "PIL/opencv (not available in this container); "
-            "PNG/BMP/GIF/JPEG/WebP-VP8L resize is implemented in "
-            "operators/pixels.resize_images")
+            "no pixel resize exists in this package; it requires a "
+            "native codec such as PIL/opencv (not available here)")
         yield  # pragma: no cover
 
     return df_media.mapInPandas(_kernel, schema=MEDIA_SCHEMA)
@@ -531,7 +519,7 @@ def attach_audio(df: DataFrame, text_col: str = "text",
 
 class AudioDecodeError(ValueError):
     """WAV container errors — the Spark kernel converts these into the
-    side-drop reason column (same idiom as pixels.PixelDecodeError)."""
+    side-drop reason column."""
 
 
 _G711_TABLES: dict[int, "object"] = {}
@@ -740,7 +728,7 @@ def decode_wav(df_media: DataFrame, media_col: str = "media") -> DataFrame:
     the mono PCM16 lane audio_features consumes (multi-channel mixes
     down by integer mean — deterministic, no float) plus rate/channel
     metadata; undecodable rows side-drop with a reason. Shuffle-free
-    row-local projection, same contract as pixels.image_pixel_stats."""
+    row-local projection."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np

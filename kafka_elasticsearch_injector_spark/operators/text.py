@@ -384,19 +384,19 @@ def winnow_pairs(df: DataFrame, k: int = 3, w: int = 4,
       tiny next to the corpus — so checkpointing it is the cheap side
       of the trade at any scale;
     - `df_ceiling` drops fingerprints appearing in more than that many
-      docs BEFORE the self-join (boilerplate/stop-fingerprints — the
-      same recall trade as posting.py's stop-gram ceiling, documented
-      there): per-fingerprint fan-out is ≤ ceiling², so worst cost is
+      docs BEFORE the self-join (boilerplate/stop-fingerprints — a
+      recall trade: pairs found only via dropped fingerprints are
+      lost): per-fingerprint fan-out is ≤ ceiling², so worst cost is
       |postings|·ceiling, never N²;
     - downstream of the checkpoint, the pair rollup shuffles only
       (doc_a, doc_b, 1) triples with map-side partial counts.
 
-    Like posting.jaccard_pairs_auto, calling this runs an eager Spark
-    job (the materialization) at plan-construction time. The sketch
-    job parallelizes by input split (deliberately NOT fill_cluster'd:
-    measured at sf0.1, round-robin-shuffling the text cost more than
-    the 0.6 s serial sketch it parallelized, and at real scale splits
-    already provide the parallelism).
+    Calling this runs an eager Spark job (the materialization) at
+    plan-construction time. The sketch job parallelizes by input split
+    (deliberately NOT fill_cluster'd: measured at sf0.1,
+    round-robin-shuffling the text cost more than the 0.6 s serial
+    sketch it parallelized, and at real scale splits already provide
+    the parallelism).
 
     Durability trade (`reliable`): the default localCheckpoint stores
     the sketch blocks in EXECUTOR storage with the lineage truncated —

@@ -63,8 +63,8 @@ _WP_CEILING, _WP_MIN_SHARED = 16, 2
     doc="MOSS overlap pair discovery over the winnowing sketch "
         "(operators/text.winnow_pairs): posting join on selected "
         "fingerprints with a df-ceiling dropping boilerplate "
-        "fingerprints before the self-join (fan-out ≤ ceiling², same "
-        "recall trade as posting.py's stop-gram ceiling); |sketch| "
+        "fingerprints before the self-join (fan-out ≤ ceiling², a "
+        "recall-for-cost trade); |sketch| "
         "rides along each posting row, so containment needs no doc-"
         "size side join; overlap is an integer-operand division.",
 )

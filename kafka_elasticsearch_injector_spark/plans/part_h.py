@@ -176,7 +176,7 @@ def q_dedup_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_freq_spectrum): for each df value k, how many distinct "
         "tokens appear in exactly k documents — hapax mass (k=1) is "
         "the Heaps'-law health number, the high-k tail is what a "
-        "df-ceiling (posting.py, winnowing) actually drops. Two "
+        "df-ceiling (winnowing) actually drops. Two "
         "partial-aggregated shuffles (token→df, df→spectrum); the "
         "share window runs over the KB-sized spectrum; token_share "
         "is an integer-operand division.",

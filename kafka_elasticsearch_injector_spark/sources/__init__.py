@@ -3,16 +3,6 @@ registry client, and the pure-Python Avro binary codec backing them when
 the spark-avro artifact isn't loaded."""
 
 from .avro_codec import AvroError, Codec, parse_schema  # noqa: F401
-from .avro_ocf import (  # noqa: F401
-    decode_ocf,
-    df_to_ocf,
-    drop_malformed_ocf,
-    encode_ocf,
-    ocf_schema,
-    ocf_to_parquet,
-    read_ocf,
-    write_ocf,
-)
 from .confluent import (  # noqa: F401
     avro_to_spark_type,
     decode_confluent,
@@ -21,21 +11,8 @@ from .confluent import (  # noqa: F401
     wire_decode,
     wire_encode,
 )
-from .files import (  # noqa: F401
-    csv_to_parquet,
-    drop_malformed,
-    json_to_parquet,
-    malformed_only,
-    read_csv,
-    read_json,
-    read_json_schemaless,
-    read_parquet,
-    split_malformed,
-)
 from .schema_registry import (  # noqa: F401
     SchemaRegistryClient,
     SchemaRegistryError,
     dict_registry,
 )
-from .tfrecord_source import register_tfrecord_source  # noqa: F401
-from .webdataset_source import register_webdataset_source  # noqa: F401

@@ -13,7 +13,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # Tier split (pytest.ini markers): whole modules that are integration
 # tiers — the Spark/DuckDB oracle replica, physical-plan CI, streaming
-# event-time passes, and the live-socket HTTP e2e layer — are `slow`;
+# passes, and the live-socket HTTP e2e layer — are `slow`;
 # everything else is `fast` unless a test carries its own slow marker
 # (heavy brute-force/kernel comparisons inside unit modules). The
 # inner loop is `pytest -m fast` (<60 s); CI and round-end runs stay
@@ -24,7 +24,6 @@ SLOW_MODULES = frozenset({
     "test_physical_plans",
     "test_webdataset_source",
     "test_part_h_ops",
-    "test_event_time",
     "test_streaming",
     "test_es_http_e2e",
     "test_registry_http",
@@ -34,7 +33,6 @@ SLOW_MODULES = frozenset({
     # per test (integration-flavored; the streaming e2e inside is
     # already slow by prefix)
     "test_schemaless_json",
-    "test_posting_ops",
     "test_bitwise_parity",
 })
 
@@ -49,7 +47,6 @@ SLOW_TEST_PREFIXES = (
     "test_ivf_",
     "test_lsh_multi_table_recall",
     "test_containment_kernel_equals_set_arithmetic",
-    "test_posting_paths_equal_set_arithmetic",
     "test_hamming_segment_pairs_equal_brute_force",
     # per-declared-query engine lints: oracle-tier work in a unit module
     "test_no_hasher_killer_output_types",

@@ -15,8 +15,8 @@ import os
 
 import pytest
 
-from kafka_elasticsearch_injector_spark.sources import (
-    AvroError,
+from kafka_elasticsearch_injector_spark.sources import AvroError
+from kafka_elasticsearch_injector_spark.sources.avro_ocf import (
     decode_ocf,
     df_to_ocf,
     drop_malformed_ocf,

@@ -219,53 +219,3 @@ def test_divergent_class_is_real(spark):
     got = spark.createDataFrame([(c,)], "x double").select(
         F.col("x").cast("decimal(12,9)").alias("d")).first()["d"]
     assert str(got) == jvm, (got, jvm, duck)
-
-
-def test_posting_ratio_emissions_bitwise(spark):
-    """Direct certification of the posting path's two division sites
-    (operators/posting.py posting_jaccard_ratio /
-    posting_containment_ratio) — previously covered only transitively
-    via the posting==tile equivalence property. Adversarial
-    (shared, sza, szb) count triples with shared ≤ min(sza, szb),
-    including 2^53-scale set sizes and near-equal unions, evaluated
-    through the PRODUCTION Column expressions vs DuckDB at full bit
-    precision."""
-    from kafka_elasticsearch_injector_spark.operators.posting import (
-        posting_containment_ratio,
-        posting_jaccard_ratio,
-    )
-
-    rng = random.Random(29)
-    triples = []
-    for sza in ADVERSARIAL_INTS:
-        for szb in ADVERSARIAL_INTS:
-            m = min(sza, szb)
-            for shared in {0, 1, m // 2, m - 1, m}:
-                if 0 <= shared <= m and (sza + szb - shared) > 0:
-                    triples.append((shared, sza, szb))
-    while len(triples) < 1500:
-        sza = rng.randrange(1, 2**52)
-        szb = rng.randrange(1, 2**52)
-        triples.append((rng.randrange(0, min(sza, szb) + 1), sza, szb))
-    rows = [(i, s, a, b) for i, (s, a, b) in enumerate(triples)]
-
-    got_jac = _spark_col(
-        spark, rows, "_i long, shared long, sza long, szb long",
-        posting_jaccard_ratio(F.col("shared"), F.col("sza"),
-                              F.col("szb")))
-    got_cont = _spark_col(
-        spark, rows, "_i long, shared long, sza long, szb long",
-        posting_containment_ratio(F.col("shared"), F.col("sza")))
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t (_i BIGINT, shared BIGINT, sza BIGINT, "
-                "szb BIGINT)")
-    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
-    want_jac = [r[0] for r in con.execute(
-        "SELECT CAST(shared AS DOUBLE) / (sza + szb - shared) "
-        "FROM t ORDER BY _i").fetchall()]
-    want_cont = [r[0] for r in con.execute(
-        "SELECT CAST(shared AS DOUBLE) / sza FROM t ORDER BY _i"
-    ).fetchall()]
-    assert _reprs(got_jac) == _reprs(want_jac)
-    assert _reprs(got_cont) == _reprs(want_cont)

@@ -158,9 +158,10 @@ def test_blocked_size_hint_skips_count_job(spark):
         [(1, ["x", "y"]), (2, ["x", "z"])], "doc_id int, g array<string>")
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup() or [])
-    jaccard_pairs_blocked(df, size_hint=2)
+    out = jaccard_pairs_blocked(df, size_hint=2)
     after = set(tracker.getJobIdsForGroup() or [])
     assert after == before
+    assert dict(out.dtypes)["doc_a"] == "bigint"   # int ids widen
 
 
 @pytest.mark.parametrize("max_hamming", [0, 1, 3, 5])

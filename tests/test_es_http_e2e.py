@@ -218,7 +218,7 @@ def test_streaming_pipeline_http_throttled(spark, tmp_path, fake_es):
 def test_streaming_pipeline_crash_recovery_over_shared_checkpoint(
         spark, tmp_path, fake_es):
     """Crash-recovery e2e, composing the shared-checkpoint replay of
-    test_event_time._run_batches with the live fake's failure
+    test_streaming._run_batches with the live fake's failure
     injection: the query dies MID-BATCH after a partial bulk (first
     record lands, then the node starts failing hard), and a restart
     over the SAME checkpoint replays the uncommitted batch — the

@@ -98,7 +98,7 @@ def test_read_json_schemaless(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from kafka_elasticsearch_injector_spark.sources import (
+    from kafka_elasticsearch_injector_spark.sources.files import (
         read_json_schemaless,
     )
 

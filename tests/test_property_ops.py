@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from kafka_elasticsearch_injector_spark.operators import dedup as D
 from kafka_elasticsearch_injector_spark.operators.blocked import (
     containment_pairs_blocked,
+    jaccard_pairs_blocked,
 )
 
 _SETTINGS = dict(max_examples=5, deadline=None)
@@ -96,49 +97,12 @@ def test_containment_kernel_equals_set_arithmetic(spark, sets):
         # exact integer counts is bit-identical to this one
         want[(i, j)] = len(a & b) / len(a)
     assert got == want
-
-
-@settings(**_SETTINGS)
-@given(st.lists(
-    st.sets(st.sampled_from(["a", "b", "c", "d", "e", "f"]),
-            min_size=1, max_size=6),
-    min_size=2, max_size=8),
-    st.one_of(st.none(), st.integers(1, 8)))
-def test_posting_paths_equal_set_arithmetic(spark, sets, ceiling):
-    """Posting-join jaccard/containment vs brute-force set arithmetic,
-    with and without a df-ceiling. With a ceiling the discovered pairs
-    are those sharing a sub-ceiling gram; their values stay exact."""
-    from kafka_elasticsearch_injector_spark.operators.posting import (
-        containment_pairs_posting,
-        jaccard_pairs_posting,
-    )
-
-    rows = [(i, sorted(s)) for i, s in enumerate(sets)]
-    df = spark.createDataFrame(rows, "doc_id long, g array<string>")
-    freq = {}
-    for s in sets:
-        for g in s:
-            freq[g] = freq.get(g, 0) + 1
-    keep = (set(freq) if ceiling is None
-            else {g for g, n in freq.items() if n <= ceiling})
-
     got_j = {(r.doc_a, r.doc_b): r.jac
-             for r in jaccard_pairs_posting(
-                 df, threshold=0.0, df_ceiling=ceiling).collect()}
-    want_j = {}
-    for (i, a), (j, b) in itertools.combinations(enumerate(sets), 2):
-        if a & b & keep:
-            want_j[(i, j)] = len(a & b) / len(a | b)
-    assert got_j == want_j
-
-    got_c = {(r.doc_a, r.doc_b): r.containment
-             for r in containment_pairs_posting(
-                 df, threshold=0.0, df_ceiling=ceiling).collect()}
-    want_c = {}
-    for (i, a), (j, b) in itertools.permutations(enumerate(sets), 2):
-        if a & b & keep:
-            want_c[(i, j)] = len(a & b) / len(a)
-    assert got_c == want_c
+             for r in jaccard_pairs_blocked(
+                 df, threshold=1e-9, n_blocks=2).collect()}
+    assert got_j == {(i, j): len(a & b) / len(a | b)
+                     for (i, a), (j, b) in itertools.combinations(
+                         enumerate(sets), 2) if a & b}
 
 
 # ------------------------------------------ distributed NTILE (r9)
@@ -275,10 +239,6 @@ def test_sparse_regime_spark_outputs_match_dense(spark):
     onto the sparse regime (sparse_cutoff=0) return exactly the default
     dense-regime rows — values compared exactly, not approximately."""
     import random
-
-    from kafka_elasticsearch_injector_spark.operators.blocked import (
-        jaccard_pairs_blocked,
-    )
 
     rng = random.Random(12)
     vocab = [f"t{i}" for i in range(300)]

@@ -205,27 +205,3 @@ def test_quantize_int8_null_and_nan_elements(spark):
     assert out[0].scale == 127.0 / 2.0
     assert list(out[1].qvec) == [None, 127]        # NaN out of the max
     assert out[1].scale == 127.0 / 4.0
-
-
-def test_jaccard_auto_string_ids_route_to_posting(spark):
-    """r12 review: the auto router must not crash on string doc ids
-    (the tile branch rejects them at plan time); it routes to posting,
-    which preserves the id type. Integral ids emit bigint from BOTH
-    branches (schema contract alignment)."""
-    from kafka_elasticsearch_injector_spark.operators.posting import (
-        jaccard_pairs_auto,
-    )
-
-    rows = [("a", ["x", "y"]), ("b", ["x", "y"]), ("c", ["z"])]
-    df = spark.createDataFrame(rows, "doc_id string, g array<string>")
-    got = {(r.doc_a, r.doc_b): r.jac
-           for r in jaccard_pairs_auto(df, threshold=0.5).collect()}
-    assert got == {("a", "b"): 1.0}
-    ints = spark.createDataFrame(
-        [(1, ["x", "y"]), (2, ["x", "y"])],
-        "doc_id int, g array<string>")
-    for forced in ("tile", "posting"):
-        out = jaccard_pairs_auto(ints, threshold=0.5, path=forced,
-                                 size_hint=2)
-        assert dict(out.dtypes)["doc_a"] == "bigint", forced
-        assert {(r.doc_a, r.doc_b) for r in out.collect()} == {(1, 2)}

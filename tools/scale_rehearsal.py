@@ -97,43 +97,7 @@ CONTRACTS: dict[str, tuple[float, str]] = {
                       "baseline; at scale runs only after LSH blocking'"),
     "q_decontaminate": (1.15, "broadcast-probe against eval grams"),
     "q_dedup_embcos": (2.0, "blocked cosine tile kernel, post-LSH at scale"),
-    # r12: the router's OTHER branch, measured on this corpus (whose
-    # per-copy Caesar vocabularies make it exactly the large-flat-vocab
-    # regime the posting join is for). Cost model Σ_g df(g)² under the
-    # stop-gram ceiling: disjoint shard vocabularies keep per-gram df
-    # constant while gram count grows ∝ N → linear, slack to 1.5 for
-    # the candidate-join shuffle fan-in.
-    "q_posting_branch": (1.5, "posting join Σ df(g)² with stop-gram "
-                         "df-ceiling; disjoint-shard vocab → df constant, "
-                         "gram count ∝ N"),
 }
-
-
-def _posting_branch(spark, sf_dir: str):
-    """jaccard_pairs_auto forced onto its posting branch (the tile
-    branch is what the named bench queries measure) — same gram prep
-    as q_containment_pairs, production stop-gram ceiling."""
-    from pyspark.sql import functions as F
-
-    from kafka_elasticsearch_injector_spark.io import table
-    from kafka_elasticsearch_injector_spark.operators.dedup import (
-        tokens, word_ngrams,
-    )
-    from kafka_elasticsearch_injector_spark.operators.posting import (
-        jaccard_pairs_auto,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    grams = docs.select(
-        "doc_id",
-        F.array_distinct(word_ngrams(tokens("text"), 2)).alias("g"))
-    return jaccard_pairs_auto(grams, threshold=0.08, path="posting",
-                              df_ceiling=256)
-
-
-#: Measurables that are not declared bench queries (they measure an
-#: internal branch the named queries don't reach on this corpus).
-EXTRA_QUERIES = {"q_posting_branch": _posting_branch}
 
 
 def _rot(k: int) -> tuple[str, str]:
@@ -194,7 +158,7 @@ def measure(spark, sf_dir: str, names: list[str],
     double the rehearsal's wall-clock for nothing."""
     from kafka_elasticsearch_injector_spark import plans
 
-    inventory = {**plans.queries(), **EXTRA_QUERIES}
+    inventory = plans.queries()
     out: dict[str, float] = {}
     for n in names:
         df = inventory[n](spark, sf_dir)
