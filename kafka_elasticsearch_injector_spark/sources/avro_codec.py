@@ -26,9 +26,10 @@ Codecs are compiled once per schema and cached by the caller (mirroring
 the per-schema-id codec cache at encode_decode.go:123-134) — the
 recursive readers/writers are built at compile time, so per-record decode
 is closure dispatch, no schema interpretation in the hot loop. For Spark,
-the hot path wraps this in Arrow-batched mapInPandas
-(sources/confluent.py); at 100 TB the decode is embarrassingly parallel
-per partition and this codec is only the per-record kernel.
+the hot path wraps this in an Arrow kernel (mapInArrow,
+sources/confluent.py) whose reader-schema conformer is compiled the same
+way; at 100 TB the decode is embarrassingly parallel per partition and
+this codec is only the per-record kernel.
 """
 
 from __future__ import annotations

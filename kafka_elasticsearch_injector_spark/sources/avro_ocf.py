@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .avro_codec import AvroError, Codec, parse_schema, _make_reader
-from .confluent import avro_to_spark_type, _conform
+from .confluent import avro_to_spark_type, compile_conformer
 
 OCF_MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
@@ -227,6 +227,7 @@ def read_ocf(spark: SparkSession, path: str, reader_schema) -> DataFrame:
             T.StructField(ERROR_COL, T.StringType(), True),
         ])
     field_names = [f.name for f in reader_type.fields]
+    conform = compile_conformer(reader_type)
 
     def decode_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -240,7 +241,7 @@ def read_ocf(spark: SparkSession, path: str, reader_schema) -> DataFrame:
                                  ERROR_COL: f"{type(ex).__name__}: {ex}"})
                     continue
                 for rec in records:
-                    shaped = _conform(rec, reader_type) or {}
+                    shaped = conform(rec) or {}
                     shaped[SOURCE_COL] = fpath
                     shaped[ERROR_COL] = None
                     rows.append(shaped)

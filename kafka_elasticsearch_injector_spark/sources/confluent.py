@@ -10,10 +10,13 @@ Decode strategy (SURVEY.md §4.2 custom work #1):
 - the READER schema is resolved at plan time (one registry fetch → a
   constant of the query, the Catalyst analog of the reference's
   sync.Map schema cache) and compiled to the output StructType;
-- the hot path is Arrow-batched `mapInPandas`: per executor, a codec
-  cache keyed by writer schema id (exactly encode_decode.go:123-134)
-  decodes each record and conforms it to the reader struct by field
-  name — so multi-schema-id topics work without replanning;
+- the hot path is an Arrow kernel (`mapInArrow`, no pandas round
+  trip): per executor, a codec cache keyed by writer schema id
+  (exactly encode_decode.go:123-134) decodes each record, and a
+  conformer compiled once from the reader struct projects it by field
+  name — so multi-schema-id topics work without replanning; the
+  conformed values become the Arrow struct column in one `pa.array`
+  call and the input columns pass through untouched;
 - decode failures do NOT fail the batch: the record's `decoded` is
   null and the error lands in `_decode_error` (malformed side-drop,
   consumer.go:154-159 — filter on `_decode_error IS NULL`).
@@ -26,13 +29,18 @@ per-record schema-id dispatch.
 
 from __future__ import annotations
 
+import datetime as dt
+import decimal
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from decimal import Decimal
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .avro_codec import AvroError, Codec, logical_type, parse_schema
 from .schema_registry import SchemaRegistryClient
@@ -117,85 +125,138 @@ def avro_to_spark_type(schema) -> T.DataType:
     raise AvroError(f"unsupported Avro type {t!r}")
 
 
-def _conform(value: Any, dtype: T.DataType) -> Any:
-    """Project a decoded value onto the reader type by field name —
-    missing fields → null, extra fields dropped (name-based resolution;
-    full Avro aliases/defaults are out of scope and documented so).
+def _misfit(value: Any, dtype: T.DataType) -> AvroError:
+    return AvroError(
+        f"writer value of type {type(value).__name__} does not fit "
+        f"reader column type {dtype.simpleString()} (logical-type "
+        "divergence between writer and reader schemas?)")
 
-    Atomic values are TYPE-CHECKED against the reader column: decode
-    surfaces values per the WRITER schema (incl. its logical types), so
-    a writer/reader logical-type divergence (say the producer adds
-    ``timestamp-millis`` to a long the pinned reader still declares
-    plain) would otherwise sail through here and crash the pandas→Arrow
-    conversion OUTSIDE decode_one's try/except — failing the whole
-    micro-batch instead of side-dropping the record
-    (consumer.go:154-159 parity). The AvroError raised here is caught
-    per record."""
-    import datetime as dt
-    from decimal import Decimal
 
-    if value is None:
-        return None
+def compile_conformer(dtype: T.DataType,
+                      session_tz: str | None = None) -> Callable[[Any], Any]:
+    """Compile the projection of decoded values onto the reader type.
+
+    Built once per reader type, like the codec's readers
+    (avro_codec._make_reader): the returned closure does no schema
+    interpretation per record. Its contract:
+
+    - structs project by field name — missing fields → null, extra
+      fields dropped (name-based resolution; full Avro aliases/defaults
+      are out of scope and documented so); a non-dict value → null;
+    - atomic values are TYPE-CHECKED against the reader column. Decode
+      surfaces values per the WRITER schema (incl. its logical types),
+      so a writer/reader logical-type divergence (say the producer adds
+      ``timestamp-millis`` to a long the pinned reader still declares
+      plain) would otherwise sail through here and fail the Arrow
+      conversion of the whole batch instead of side-dropping the record
+      (consumer.go:154-159 parity). The AvroError raised here is caught
+      per record;
+    - `bool` is not an int; an int is accepted for a double;
+    - decimals are quantized to the reader's scale with Inexact and
+      InvalidOperation trapped under prec = reader precision: a
+      LOSSLESS rescale (writer scale differs but the extra digits are
+      zeros) passes, while lossy rescale, precision overflow and NaN
+      raise;
+    - with `session_tz` set, a naive datetime bound for a TimestampType
+      column is a wall-clock time in that zone and comes back as the
+      aware-UTC instant Spark's pandas conversion gives it
+      (``pd.Timestamp(v).tz_localize(session_tz)``); a wall-clock time
+      the zone skips or repeats raises. Without it the value stays
+      naive and the caller's conversion decides.
+    """
     if isinstance(dtype, T.StructType):
-        if not isinstance(value, dict):
-            return None
-        return {f.name: _conform(value.get(f.name), f.dataType)
-                for f in dtype.fields}
+        fields = [(f.name, compile_conformer(f.dataType, session_tz))
+                  for f in dtype.fields]
+
+        def conform_struct(value):
+            if not isinstance(value, dict):
+                return None
+            get = value.get
+            return {name: conform(get(name)) for name, conform in fields}
+
+        return conform_struct
     if isinstance(dtype, T.ArrayType):
-        return [_conform(v, dtype.elementType) for v in value]
+        conform_item = compile_conformer(dtype.elementType, session_tz)
+
+        def conform_array(value):
+            if value is None:
+                return None
+            return [conform_item(v) for v in value]
+
+        return conform_array
     if isinstance(dtype, T.MapType):
-        return {k: _conform(v, dtype.valueType) for k, v in value.items()}
-    ok = True
+        conform_value = compile_conformer(dtype.valueType, session_tz)
+
+        def conform_map(value):
+            if value is None:
+                return None
+            return {k: conform_value(v) for k, v in value.items()}
+
+        return conform_map
+    if isinstance(dtype, T.DecimalType):
+        ctx = decimal.Context(
+            prec=dtype.precision,
+            traps=[decimal.Inexact, decimal.InvalidOperation])
+        quantum = Decimal(1).scaleb(-dtype.scale)
+
+        def conform_decimal(value):
+            if value is None:
+                return None
+            # quiet NaN quantizes to NaN, so finiteness is checked first
+            if isinstance(value, Decimal) and value.is_finite():
+                try:
+                    return ctx.quantize(value, quantum)
+                except decimal.DecimalException:
+                    pass
+            raise _misfit(value, dtype)
+
+        return conform_decimal
+    if isinstance(dtype, T.TimestampType) and session_tz is not None:
+
+        def conform_instant(value):
+            if value is None:
+                return None
+            if not isinstance(value, dt.datetime):
+                raise _misfit(value, dtype)
+            if value.tzinfo is None:
+                # returned in UTC: pyarrow binds an aware datetime to
+                # timestamp[tz=UTC] by its wall clock, ignoring its zone
+                return pd.Timestamp(value).tz_localize(
+                    session_tz).tz_convert("UTC").to_pydatetime()
+            return value
+
+        return conform_instant
+
+    # (the exact type that passes at once, the full gate for the rest)
     if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType,
                           T.ByteType)):
-        ok = isinstance(value, int) and not isinstance(value, bool)
+        exact, accept = int, (lambda v: isinstance(v, int)
+                              and not isinstance(v, bool))
     elif isinstance(dtype, (T.DoubleType, T.FloatType)):
-        ok = isinstance(value, (int, float)) and not isinstance(value, bool)
+        exact, accept = float, (lambda v: isinstance(v, (int, float))
+                                and not isinstance(v, bool))
     elif isinstance(dtype, T.BooleanType):
-        ok = isinstance(value, bool)
+        exact, accept = bool, (lambda v: isinstance(v, bool))
     elif isinstance(dtype, T.StringType):
-        ok = isinstance(value, str)
+        exact, accept = str, (lambda v: isinstance(v, str))
     elif isinstance(dtype, T.BinaryType):
-        ok = isinstance(value, (bytes, bytearray))
-    elif isinstance(dtype, T.DecimalType):
-        ok = isinstance(value, Decimal)
-        if ok:
-            # Type alone is not enough: a writer/reader scale or
-            # precision divergence (producer bumps decimal(10,2) to
-            # decimal(10,4)) passes an isinstance gate and then crashes
-            # the pandas→Arrow conversion with a rescaling error —
-            # failing the whole micro-batch instead of side-dropping
-            # the one record. Quantize to the reader's scale with
-            # Inexact trapped: a LOSSLESS rescale (writer scale
-            # differs but the extra digits are zeros) passes — Arrow
-            # accepts that too — while lossy rescale or precision
-            # overflow (InvalidOperation under prec=reader precision)
-            # raises and side-drops the record.
-            import decimal as _dec
-
-            ctx = _dec.Context(
-                prec=dtype.precision,
-                traps=[_dec.Inexact, _dec.InvalidOperation])
-            if not value.is_finite():  # quiet NaN quantizes to NaN
-                ok = False
-            else:
-                try:
-                    return ctx.quantize(
-                        value, Decimal(1).scaleb(-dtype.scale))
-                except _dec.DecimalException:
-                    ok = False
+        exact, accept = bytes, (lambda v: isinstance(v, (bytes, bytearray)))
     elif isinstance(dtype, T.DateType):
-        ok = isinstance(value, dt.date) and not isinstance(value, dt.datetime)
+        exact, accept = dt.date, (lambda v: isinstance(v, dt.date)
+                                  and not isinstance(v, dt.datetime))
     elif isinstance(dtype, T.TimeType):
-        ok = isinstance(value, dt.time) and not isinstance(value, dt.datetime)
+        exact, accept = dt.time, (lambda v: isinstance(v, dt.time))
     elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        ok = isinstance(value, dt.datetime)
-    if not ok:
-        raise AvroError(
-            f"writer value of type {type(value).__name__} does not fit "
-            f"reader column type {dtype.simpleString()} (logical-type "
-            "divergence between writer and reader schemas?)")
-    return value
+        exact, accept = dt.datetime, (lambda v: isinstance(v, dt.datetime))
+    else:
+        return lambda value: value
+
+    def conform_atomic(value):
+        if value is None or type(value) is exact or accept(value):
+            return value
+        raise _misfit(value, dtype)
+
+    return conform_atomic
 
 
 def decode_confluent(
@@ -210,8 +271,10 @@ def decode_confluent(
 
     Output = input columns + `decoded` struct (reader schema shape) +
     `_decode_error` string (null on success). Works on batch and
-    streaming DataFrames alike — mapInPandas is a narrow, shuffle-free
-    map, so source parallelism is preserved end to end.
+    streaming DataFrames alike — mapInArrow is a narrow, shuffle-free
+    map, so source parallelism is preserved end to end. The input
+    columns pass through as the Arrow arrays they arrived in; only the
+    payload column is read into Python.
     """
     reader_json = registry.get_schema(reader_schema_id)
     reader_type = avro_to_spark_type(reader_json)
@@ -225,16 +288,19 @@ def decode_confluent(
             T.StructField(decoded_col, reader_type, True),
             T.StructField(error_col, T.StringType(), True),
         ])
-    in_cols = [f.name for f in df.schema.fields]
+    decoded_type = to_arrow_type(reader_type)
+    conform = compile_conformer(
+        reader_type, df.sparkSession.conf.get("spark.sql.session.timeZone"))
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode_batches(batches: Iterator[pa.RecordBatch]
+                       ) -> Iterator[pa.RecordBatch]:
         codecs: dict[int, Codec] = {}  # per-worker, keyed by writer id
 
         def decode_one(raw) -> tuple[Any, str | None]:
             if raw is None:
                 return None, "nil message"  # ErrNilMessage path
             try:
-                schema_id, body = wire_decode(bytes(raw))
+                schema_id, body = wire_decode(raw)
                 codec = codecs.get(schema_id)
                 if codec is None:
                     codec = Codec(registry.get_schema(schema_id))
@@ -242,23 +308,20 @@ def decode_confluent(
                 value = codec.decode(body)
                 if not isinstance(value, dict):
                     return None, "non-record payload"
-                return _conform(value, reader_type), None
+                return conform(value), None
             except Exception as ex:  # noqa: BLE001 — side-drop, not fail
                 return None, f"{type(ex).__name__}: {ex}"
 
-        for pdf in batches:
-            # zip(*[]) unpacks to 0 values, not 2 — guard zero-row
-            # Arrow batches so they pass through instead of failing the
-            # task.
-            results = [decode_one(r) for r in pdf[payload_col]]
-            decoded = [d for d, _ in results]
-            errors = [e for _, e in results]
-            out = pdf[in_cols].copy()
-            out[decoded_col] = decoded
-            out[error_col] = errors
-            yield out
+        for batch in batches:
+            results = [decode_one(r)
+                       for r in batch.column(payload_col).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [
+                    pa.array([d for d, _ in results], decoded_type),
+                    pa.array([e for _, e in results], pa.string())],
+                names=batch.schema.names + [decoded_col, error_col])
 
-    return df.mapInPandas(decode_batches, out_schema)
+    return df.mapInArrow(decode_batches, out_schema)
 
 
 def drop_decode_errors(df: DataFrame,

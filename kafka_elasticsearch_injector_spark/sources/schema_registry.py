@@ -8,11 +8,12 @@ a pluggable `fetcher` so tests (and offline runs) can back the registry
 with a dict instead of HTTP — mirroring how the reference's tests run
 against a compose-provisioned registry (docker-compose.yml:28-38).
 
-Executor-side use: the client is pickled into Pandas-UDF closures; the
-cache re-warms per worker on first miss (the reference pays the same
-cold fetch per pod). Plan-time lookups in sources/confluent.py resolve
-the reader schema once per query — the Catalyst-constant analog of the
-codec cache.
+Executor-side use: the client is pickled into the closure of the Arrow
+decode kernel (mapInArrow in sources/confluent.py); the cache re-warms
+per worker on first miss (the reference pays the same cold fetch per
+pod). Plan-time lookups in sources/confluent.py resolve the reader
+schema once per query — the Catalyst-constant analog of the codec
+cache.
 """
 
 from __future__ import annotations

@@ -138,6 +138,18 @@ def test_decode_confluent_spark(spark):
     assert (99, True) in out
     kept = drop_decode_errors(decoded)
     assert kept.count() == 2
+    # one Arrow kernel, no pandas round trip
+    plan = decoded._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+    # zero-row batches and all-nil batches pass through with the schema
+    empty = decode_confluent(df.limit(0), registry, reader_schema_id=1)
+    assert empty.collect() == []
+    assert empty.schema == decoded.schema
+    nils = decode_confluent(spark.createDataFrame([(None,), (None,)],
+                                                  "value binary"),
+                            registry, reader_schema_id=1)
+    assert [tuple(r) for r in nils.collect()] == [
+        (None, None, "nil message")] * 2
 
 
 def test_avro_streaming_end_to_end(spark, tmp_path):
