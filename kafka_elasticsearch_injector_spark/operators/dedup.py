@@ -366,10 +366,13 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     The loop is driver-side control flow over DataFrame ops (each
     iteration: symmetric-edge join → per-node min → convergence count);
     lineage is truncated per iteration with localCheckpoint so plans
-    don't grow unboundedly. Near-dup graphs are clique-like, so
-    convergence takes O(log diameter) ≈ 2-3 iterations in practice;
-    `max_iter` bounds pathological chains. This is the standard
-    large-graph CC shape (label propagation ≙ Hash-Min a la Pregel);
+    don't grow unboundedly. A label moves one hop per round, so a
+    component of diameter d needs about d rounds to converge (one round
+    after the init for the clique-like components near-dup graphs
+    usually form). The loop stops after `max_iter` rounds and then
+    returns the labels as they are, unconverged, without raising: a
+    path of more than about `max_iter` hops comes back split into
+    several labels. This is label propagation (Hash-Min a la Pregel);
     at 100 TB pre-partition edges by src so each iteration's join is
     co-located.
 

@@ -29,6 +29,21 @@ Scale notes (100 TB / 1000-executor design):
   submit unless the deployment overrides it, so a real cluster rollout
   should fold site flags into one line (or pass mode="streaming" and
   own GC entirely in site config).
+- Python worker entry: on a local master (`local`, `local[N]`,
+  `local[*]`) `spark.python.worker.module` is set to the repo-root
+  `pyspark_injector_worker`. PySpark's worker calls
+  `importlib.invalidate_caches()` before every task, and on CPython 3.11
+  that re-reads `pyspark.zip`'s directory once per cached zipimporter,
+  about 0.1 s per task of every Python node (Arrow/pandas kernels, the
+  service's decode and sink). The entry re-reads an archive only when it
+  has changed, imports pandas, pyarrow and the service's kernel modules
+  once in the daemon before it forks the workers, and otherwise runs
+  `pyspark.worker` unchanged. It is local-only because there the workers
+  share the driver's cwd and `PYTHONPATH`, the same way they import this
+  package. Any other master (`local-cluster[...]` included) keeps
+  PySpark's default worker: a cluster image must ship
+  `pyspark_injector_worker.py` on the executors' `PYTHONPATH` before it
+  can be enabled there, or the Python daemon fails to start.
 """
 
 from __future__ import annotations
@@ -47,10 +62,21 @@ def gc_java_options(mode: str) -> str:
     return "-XX:+UseParallelGC" if mode == "batch" else ""
 
 
+def python_worker_module(master: str) -> str | None:
+    """`spark.python.worker.module` for a master (see module docstring):
+    the repo's worker entry on `local`/`local[...]`, else None (PySpark's
+    default worker)."""
+    local = master.split("[", 1)[0] == "local"
+    return "pyspark_injector_worker" if local else None
+
+
 def get_spark(app_name: str = "kafka-elasticsearch-injector-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               mode: str = "batch") -> SparkSession:
+    """The configured session (see module docstring). On a local master
+    Python tasks run under `pyspark_injector_worker`; on any other
+    master, under PySpark's default worker."""
     gc_opts = gc_java_options(mode)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -80,4 +106,7 @@ def get_spark(app_name: str = "kafka-elasticsearch-injector-spark",
         builder = (builder
                    .config("spark.driver.extraJavaOptions", gc_opts)
                    .config("spark.executor.extraJavaOptions", gc_opts))
+    worker_module = python_worker_module(master)
+    if worker_module:
+        builder = builder.config("spark.python.worker.module", worker_module)
     return builder.getOrCreate()

@@ -59,8 +59,10 @@ class BulkStats:
 class HttpTransport:
     """Minimal ES _bulk client over stdlib urllib (no external deps).
 
-    Each executor core holds one transport (connection reuse analog of
-    the reference's singleton client, elasticsearch.go:20,39-62).
+    Each executor core holds one transport, but it keeps no connection:
+    `_open` calls `urllib.request.urlopen` once per request, so every
+    bulk request opens and closes its own connection (the reference
+    keeps one singleton client, elasticsearch.go:20,39-62).
     """
 
     def __init__(self, es_host: str, timeout_s: float = 1.0,

@@ -390,7 +390,7 @@ def test_logical_spark_type_mapping():
 
 
 def test_decode_confluent_logical_end_to_end(spark):
-    """Logical values cross the mapInPandas/Arrow boundary into real
+    """Logical values leave the `mapInArrow` decode kernel as real
     Spark DECIMAL/DATE/TIMESTAMP columns — the full goavro-parity lane."""
     schema = json.dumps({
         "type": "record", "name": "lt", "fields": [

@@ -1,14 +1,16 @@
 """Every package module but the kept shard export/import lane is reached
 from an entrypoint: the service, the query registry, the driver contract,
-the bench CLIs or `perfbench/`. Static `ast` graph, no Spark; function-level
-imports, `__init__` re-exports and parent packages all count as edges."""
+the bench CLIs, the Python worker entry or `perfbench/`. Static `ast`
+graph, no Spark; function-level imports, `__init__` re-exports and parent
+packages all count as edges."""
 
 import ast
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "kafka_elasticsearch_injector_spark"
-ROOT_SCRIPTS = ("__spark_entry__.py", "bench.py", "bench_streaming.py")
+ROOT_SCRIPTS = ("__spark_entry__.py", "bench.py", "bench_streaming.py",
+                "pyspark_injector_worker.py")
 ROOT_MODULES = (f"{PKG}.__main__", f"{PKG}.plans")
 KEPT_UNREACHED = {f"{PKG}.{m}" for m in (
     "sinks", "sinks._staging", "sinks.dataset", "sinks.integrity", "sinks.jsonl",
