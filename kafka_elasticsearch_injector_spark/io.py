@@ -155,9 +155,3 @@ def small_vocab_probe(sf_dir: str, name: str, col: str = "text",
         if seen >= probe_rows:
             break
     return len(vocab)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every substrate table as a temp view (for spark.sql plans)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

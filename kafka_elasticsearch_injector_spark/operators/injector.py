@@ -123,43 +123,6 @@ def drop_corrupt(df: DataFrame, corrupt_col: str = "_corrupt_record") -> DataFra
     return df.filter(F.col(f"decoded.{corrupt_col}").isNull())
 
 
-def decode_confluent_avro(df: DataFrame, avro_schema_json: str,
-                          payload_col: str = "value") -> DataFrame:
-    """Confluent wire-format Avro decode: strip 1-byte magic + 4-byte
-    big-endian schema id, then from_avro with the registry-fetched schema.
-
-    Reference: src/kafka/encode_decode.go:115-147 (header strip),
-    src/schema_registry/schema_registry.go:16-27 (schema fetch+cache).
-    The registry lookup happens at PLAN time (schema is a constant of the
-    query), which is the Catalyst analog of the reference's sync.Map codec
-    cache. Multi-schema-id topics need a per-id dispatch (see
-    streaming/pipeline.py notes).
-
-    Requires the spark-avro artifact on the JVM classpath
-    (`--packages org.apache.spark:spark-avro_2.13:<spark version>`);
-    probed at plan time so a missing artifact fails HERE with guidance
-    instead of deep inside an executor stage. Without it, use
-    sources.decode_confluent — the dependency-free Arrow path with the
-    same semantics plus per-id dispatch.
-    """
-    from pyspark.sql.avro.functions import from_avro
-
-    body = F.expr(f"substring({payload_col}, 6, length({payload_col}) - 5)")
-    try:
-        out = df.withColumn("decoded", from_avro(body, avro_schema_json))
-        out.schema  # force analysis in case resolution was deferred
-    except Exception as ex:
-        if "AVRO_NOT_LOADED" in str(ex):
-            raise NotImplementedError(
-                "spark-avro artifact not on the JVM classpath; use "
-                "sources.decode_confluent (pure-Python Arrow path, same "
-                "semantics + per-schema-id dispatch) or add "
-                "org.apache.spark:spark-avro to spark.jars.packages"
-            ) from ex
-        raise
-    return out
-
-
 def inject_timestamp(df: DataFrame, ts_col: str = "timestamp",
                      out_col: str = "@timestamp") -> DataFrame:
     """Inject `@timestamp` = Kafka message time in epoch MILLIseconds.

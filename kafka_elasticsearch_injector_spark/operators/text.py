@@ -20,20 +20,6 @@ LANG_MARKERS: list[tuple[str, str]] = [
 STOPWORDS = ("the", "a", "of", "and", "to")
 
 
-def marker_counts(spark: SparkSession, df: DataFrame, id_col: str,
-                  text_col: str) -> DataFrame:
-    """(id, lang, cnt) marker-token occurrence counts via a broadcast
-    cross join with the marker table — the shape to use when the
-    profile table is data (thousands of n-gram rows), not code."""
-    markers = spark.createDataFrame(LANG_MARKERS, ["cand_lang", "marker"])
-    toks = tokens(text_col)
-    cnt = F.size(F.filter(toks, lambda t: t == F.col("marker")))
-    return (
-        df.crossJoin(F.broadcast(markers))
-        .select(F.col(id_col), "cand_lang", cnt.cast("int").alias("cnt"))
-    )
-
-
 def predict_language(spark: SparkSession, df: DataFrame,
                      id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
@@ -43,10 +29,7 @@ def predict_language(spark: SparkSession, df: DataFrame,
     The marker list is plan-time constant, so the argmax folds into a
     single zero-shuffle projection: one tokenize per doc, one
     (cnt, lang) struct per language, `array_min` over (-cnt, lang) =
-    max count with lexicographic-smallest tie-break. With a *data*
-    profile table instead, use marker_counts() + groupBy(id).agg(
-    min(struct(-cnt, lang))) — partial-aggregable, one row per doc
-    shuffled — never a row_number window over the exploded counts.
+    max count with lexicographic-smallest tie-break.
     """
     toks = tokens(text_col)
 

@@ -1,6 +1,5 @@
 """Source-side machinery: Confluent wire-format Avro decode, schema
-registry client, and the pure-Python Avro binary codec backing them when
-the spark-avro artifact isn't loaded."""
+registry client, and the pure-Python Avro binary codec backing them."""
 
 from .avro_codec import AvroError, Codec, parse_schema  # noqa: F401
 from .confluent import (  # noqa: F401

@@ -20,11 +20,6 @@ Decode strategy (SURVEY.md §4.2 custom work #1):
 - decode failures do NOT fail the batch: the record's `decoded` is
   null and the error lands in `_decode_error` (malformed side-drop,
   consumer.go:154-159 — filter on `_decode_error IS NULL`).
-
-When the spark-avro artifact IS loaded, prefer the JVM path in
-operators/injector.py (substring + from_avro) for single-schema topics;
-this module is the dependency-free path and the only one that does
-per-record schema-id dispatch.
 """
 
 from __future__ import annotations

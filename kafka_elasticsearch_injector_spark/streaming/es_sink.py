@@ -523,34 +523,3 @@ def write_arrow_factory(cfg, transport_factory):
         }])
 
     return write_arrow
-
-
-def write_partition_factory(cfg, transport_factory, sink_acc=None):
-    """Build the picklable per-partition writer used by foreachBatch.
-
-    Row-at-a-time legacy path (kept for API compatibility and as the
-    semantics twin in tests); the pipeline now uses write_arrow_factory.
-
-    Only (cfg scalars, transport_factory, sink_acc) are captured — all
-    picklable; the transport itself is constructed ON the executor.
-    `sink_acc` (metrics.SinkAccumulators) folds each partition's
-    BulkStats into driver-visible Prometheus counters.
-    """
-    batch_size = cfg.batch_size
-    backoff_s = cfg.bulk_backoff_s
-    max_retries = cfg.max_retries if cfg.max_retries is not None else 10
-    max_bytes = getattr(cfg, "bulk_max_bytes", None)
-
-    def write_partition(rows: Iterator) -> None:
-        actions = [(r.index_name, r.doc_id, r.payload) for r in rows]
-        if not actions:
-            return
-        writer = ElasticBulkWriter(
-            transport_factory(), batch_size=batch_size,
-            backoff_s=backoff_s, max_retries=max_retries,
-            max_bytes=max_bytes)
-        stats = writer.write(actions)
-        if sink_acc is not None:
-            sink_acc.add_stats(stats)
-
-    return write_partition

@@ -20,14 +20,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # `pytest tests/` (unchanged, both tiers).
 SLOW_MODULES = frozenset({
     "test_queries_oracle",
-    "test_tfrecord",
     "test_physical_plans",
-    "test_webdataset_source",
     "test_part_h_ops",
     "test_streaming",
     "test_es_http_e2e",
     "test_registry_http",
-    "test_avro_ocf",
     "test_avro_source",
     # r11: schemaless-ingest parity suite runs full decode→route plans
     # per test (integration-flavored; the streaming e2e inside is
@@ -38,7 +35,7 @@ SLOW_MODULES = frozenset({
 
 # Individually heavy tests inside otherwise-fast unit modules (>2 s
 # each in the r5 duration profile: brute-force completeness sweeps,
-# IVF end-to-end, OCF round-trips). Matched by test-name prefix so
+# IVF end-to-end). Matched by test-name prefix so
 # parametrized variants are covered.
 SLOW_TEST_PREFIXES = (
     "test_simhash",
@@ -55,10 +52,6 @@ SLOW_TEST_PREFIXES = (
     "test_scd2_no_broadcast_same_result",
     "test_mixture_sample_rate_edges_and_determinism",
     # file-IO round-trips and sketch certifications: integration work
-    "test_webdataset_",
-    "test_jsonl_shards",
-    "test_export_layout",
-    "test_manifest_totals",
     "test_include_key_avro",
     "test_compact_",
     "test_metrics_listener",
@@ -78,7 +71,6 @@ SLOW_TEST_PREFIXES = (
     "test_lsh_single_table",
     "test_containment_kernel",
     "test_pack_sequences_positions",
-    "test_export_is_deterministic",
     "test_sample_frames_fan_out",
     "test_bitmask64_overflow_raises",
     "test_minhash_plan_build_launches_no_jobs",
@@ -86,7 +78,6 @@ SLOW_TEST_PREFIXES = (
     "test_repetition_signals_hand_computed",
     "test_mixture_sample_monotone_in_rate",
     "test_corpus_to_training_export_end_to_end",
-    "test_shard_filter_is_partition_pruned",
     "test_profile_metrics_hand_computed",
     "test_profile_handles_duplicate_and_dotted_columns",
     "test_scd2_closes_and_appends",

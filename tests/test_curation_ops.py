@@ -143,20 +143,16 @@ def test_repetition_signals_plan_is_projection(spark):
 def test_corpus_to_training_export_end_to_end(spark, sf_dir, tmp_path):
     """The whole training-data story composed: quality gate → exact
     dedup (hash-agg keep-min) → deterministic mixture sample →
-    WebDataset export → distributed read-back. Each stage is unit- and
-    oracle-tested on its own; this guards the COMPOSITION — schemas,
-    digest types, and determinism surviving stage boundaries — and
-    pins that re-running the pipeline reproduces the identical
-    exported byte set (no RNG, no scheduling dependence)."""
+    parquet export → read-back. Each stage is unit- and oracle-tested
+    on its own; this guards the COMPOSITION — schemas, digest types,
+    and determinism surviving stage boundaries — and pins that
+    re-running the pipeline reproduces the identical row set (no RNG,
+    no scheduling dependence)."""
     from pyspark.sql import functions as F
 
     from kafka_elasticsearch_injector_spark.io import table
     from kafka_elasticsearch_injector_spark.operators import curation as C
     from kafka_elasticsearch_injector_spark.operators import text as T
-    from kafka_elasticsearch_injector_spark.sinks.webdataset import (
-        read_webdataset,
-        write_webdataset,
-    )
 
     docs = table(spark, sf_dir, "documents")
 
@@ -174,23 +170,18 @@ def test_corpus_to_training_export_end_to_end(spark, sf_dir, tmp_path):
                                   "src5", "src6", "src7", "src8", "src9")}
         return C.mixture_sample(rep, rates)
 
-    out1, out2 = str(tmp_path / "run1"), str(tmp_path / "run2")
-    m1 = {r.shard: r.sha256
-          for r in write_webdataset(build(), out1, 4).collect()}
+    out = str(tmp_path / "export")
     sampled = build()
-    n = sampled.count()
-    assert 0 < n < docs.count()
+    sampled.write.parquet(out)
+    rows = sorted(tuple(r) for r in sampled.collect())
+    assert 0 < len(rows) < docs.count()
 
-    back = read_webdataset(spark, out1)
-    got = {r.key: bytes(r.text) for r in back.collect()}
-    assert len(got) == n
-    one = sampled.limit(1).collect()[0]
-    assert got[f"{one.doc_id:012d}"] == one.text.encode()
+    back = spark.read.parquet(out)
+    assert back.columns == ["doc_id", "text", "source"]
+    assert sorted(tuple(r) for r in back.collect()) == rows
 
-    # Determinism across a full re-run: identical per-shard sha256.
-    m2 = {r.shard: r.sha256
-          for r in write_webdataset(build(), out2, 4).collect()}
-    assert m1 == m2
+    # Determinism across a full re-run: identical row set.
+    assert sorted(tuple(r) for r in build().collect()) == rows
 
 
 # ---------------------------------------------- KS drift (r9 verdict)

@@ -395,20 +395,6 @@ def test_probe_server_custom_routes():
         srv.stop()
 
 
-def test_jvm_avro_path_fails_fast_without_artifact(spark):
-    # decode_confluent_avro needs the spark-avro artifact; without it,
-    # the error must fire at plan time with guidance to the Arrow path,
-    # not deep inside an executor stage.
-    df = kafka_df(spark).select(F.col("value").cast("binary").alias("value"))
-    try:
-        out = ops.decode_confluent_avro(df, '"long"')
-    except NotImplementedError as ex:
-        assert "decode_confluent" in str(ex)
-        return
-    # Artifact present in this deployment: the plan must analyze cleanly.
-    assert "decoded" in out.columns
-
-
 def test_starting_offsets_config():
     """KAFKA_STARTING_OFFSETS: latest (reference parity default) /
     earliest (backfill) / per-partition JSON; anything else fails fast."""
