@@ -132,7 +132,7 @@ def run(n_rows: int = N_ROWS) -> dict:
             InjectorMetrics,
         )
 
-        metrics = InjectorMetrics(spark)
+        metrics = InjectorMetrics()
         t0 = time.perf_counter()
         q = start_pipeline(
             spark, cfg, payload_schema,
@@ -144,7 +144,7 @@ def run(n_rows: int = N_ROWS) -> dict:
         )
         q.awaitTermination()
         wall = time.perf_counter() - t0
-        delivered = metrics.sink.created.value
+        delivered = metrics.sink.created
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -20,9 +20,12 @@ Go binary didn't have):
   the pipeline runs SCHEMALESS exactly like the reference (decode into
   a dynamic map, encode_decode.go:87-113): any JSON object ingests
   with its fields passed through faithfully via map<string,variant>.
-- ``AVRO_READER_SCHEMA_ID`` / ``AVRO_KEY_READER_SCHEMA_ID``
-  (optional): pin plan-time reader schemas instead of resolving from
-  the first record's writer id.
+- ``AVRO_READER_SCHEMA_ID`` (required for ``KAFKA_CONSUMER_RECORD_TYPE=
+  avro``) / ``AVRO_KEY_READER_SCHEMA_ID`` (required for avro with
+  ``KAFKA_CONSUMER_INCLUDE_KEY=true``): the registry ids of the
+  plan-time reader schemas that every writer schema is resolved to.
+  There is no default; ``main`` exits naming the missing variable
+  before it starts Spark.
 - ``DEAD_LETTER_DIR`` (optional): quarantine parquet directory for
   undeliverable records (nil/corrupt payloads) — the reference only
   logs-and-skips (consumer.go:154-159).
@@ -65,6 +68,16 @@ def main(env: dict[str, str] | None = None, source_df=None):
     # reference's default mode, which never declares a schema anywhere
     # (encode_decode.go:87-113). With it, decode is typed/projected.
     payload_schema = e.get("PAYLOAD_SCHEMA_DDL") or None
+    # Avro decode compiles against pinned reader schemas; a missing id
+    # would otherwise surface only after the session is up.
+    if cfg.record_type == "avro":
+        if "AVRO_READER_SCHEMA_ID" not in e:
+            raise SystemExit(
+                "AVRO_READER_SCHEMA_ID is required for avro records")
+        if cfg.include_key and "AVRO_KEY_READER_SCHEMA_ID" not in e:
+            raise SystemExit(
+                "AVRO_KEY_READER_SCHEMA_ID is required for avro records "
+                "with KAFKA_CONSUMER_INCLUDE_KEY=true")
 
     # LOG_LEVEL (reference logger_builder.go:20-31) drives both the
     # Python service logs and the Spark driver's log4j level.
@@ -75,7 +88,7 @@ def main(env: dict[str, str] | None = None, source_df=None):
     spark.sparkContext.setLogLevel(cfg.spark_log_level())
     registry = (SchemaRegistryClient(cfg.schema_registry_url)
                 if cfg.schema_registry_url else None)
-    metrics = InjectorMetrics(spark)
+    metrics = InjectorMetrics()
     query = start_pipeline(
         spark, cfg, payload_schema,
         # Constructed ON each executor (from_config pickles cfg scalars).

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 def _parse_duration_seconds(s: str) -> float:
@@ -63,7 +63,6 @@ class InjectorConfig:
     # (the Spark connector's startingOffsets syntax). Once the
     # checkpoint exists it owns the offsets and this is ignored.
     starting_offsets: str = "latest"
-    metrics_interval_s: float = 30.0     # KAFKA_CONSUMER_METRICS_UPDATE_INTERVAL
     schema_registry_url: str | None = None
 
     # Elasticsearch sink (ES_* / ELASTICSEARCH_* env vars)
@@ -71,10 +70,6 @@ class InjectorConfig:
     es_user: str | None = None           # ELASTICSEARCH_USER
     es_password: str | None = None       # ELASTICSEARCH_PASSWORD
     es_ignore_cert: bool = False         # ELASTICSEARCH_IGNORE_CERT
-    # ELASTICSEARCH_DISABLE_SNIFFING: our stdlib transport never sniffs
-    # (it posts only to the configured host), so "true" is the permanent
-    # behavior; the field exists for env-surface parity.
-    es_disable_sniffing: bool = True
     probes_port: int | None = None       # PROBES_PORT (streaming/probes.py)
     # K8S_LIVENESS_ROUTE / K8S_READINESS_ROUTE (reference README.md:23-24,
     # both REQUIRED there; src/probes/probes.go:9-10 reads them raw and
@@ -199,6 +194,11 @@ class InjectorConfig:
 
     @classmethod
     def from_env(cls, env: dict[str, str] | None = None) -> "InjectorConfig":
+        """Build from the reference's env vars. Two are accepted and
+        ignored: ELASTICSEARCH_DISABLE_SNIFFING (the transport posts only
+        to the configured host, it never sniffs) and
+        KAFKA_CONSUMER_METRICS_UPDATE_INTERVAL (metrics update on every
+        micro-batch's progress event, there is no refresh ticker)."""
         e = dict(os.environ) if env is None else env
 
         def get(k: str, default: str = "") -> str:
@@ -215,8 +215,6 @@ class InjectorConfig:
             starting_offsets=get("KAFKA_STARTING_OFFSETS", "latest"),
             buffer_size=(int(e["KAFKA_CONSUMER_BUFFER_SIZE"])
                          if "KAFKA_CONSUMER_BUFFER_SIZE" in e else None),
-            metrics_interval_s=_parse_duration_seconds(
-                get("KAFKA_CONSUMER_METRICS_UPDATE_INTERVAL", "30s")),
             schema_registry_url=e.get("SCHEMA_REGISTRY_URL"),
             es_host=_compose_host(
                 get("ELASTICSEARCH_HOST", "http://localhost:9200"),
@@ -229,8 +227,6 @@ class InjectorConfig:
                                  "false").lower() == "true",
             bulk_max_bytes=(_parse_size_bytes(e["ES_BULK_MAX_BYTES"])
                             if "ES_BULK_MAX_BYTES" in e else None),
-            es_disable_sniffing=get("ELASTICSEARCH_DISABLE_SNIFFING",
-                                    "true").lower() == "true",
             probes_port=(int(e["PROBES_PORT"])
                          if "PROBES_PORT" in e else None),
             liveness_route=get("K8S_LIVENESS_ROUTE", "/healthz"),

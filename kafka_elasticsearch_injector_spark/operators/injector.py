@@ -1,15 +1,18 @@
-"""Injector operator layer — the reference's dataflow ops as composable
-DataFrame transforms (SURVEY.md §2.1 ops 5-18).
+"""Injector operator layer — the per-record pieces of the reference's
+dataflow (SURVEY.md §2.1 ops 5-20) that the service compiler,
+`streaming/pipeline.build_elastic_records`, assembles into its one
+decode → enrich → filter → route projection.
 
-Each function takes/returns a DataFrame so they chain like the reference's
-decode → enrich → filter → route pipeline. All are pure Column expressions
-(whole-stage codegen, no Python in the hot path).
+There is one implementation of each op: the service calls these, and
+the Part A queries (plans/part_a.py) run the service's own compiler or
+its `routing` on the static `events` table, so the oracle checks the
+code that ships. All are pure Column expressions (whole-stage codegen,
+no Python in the hot path).
 
-Reference parity citations are per-function; behavior quirks preserved or
-deliberately widened are noted (e.g. the string/int32-only narrowing of
-`Record.GetValueForField`, reference src/models/record.go:30-42, is widened
-to any-atomic-type via cast, with missing columns still failing fast at
-plan time).
+Reference parity citations are per-function; behavior quirks preserved
+or deliberately widened are noted (e.g. the string/int32-only narrowing
+of `Record.GetValueForField`, reference src/models/record.go:30-42, is
+widened to any-atomic-type via cast).
 """
 
 from __future__ import annotations
@@ -18,48 +21,31 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..config import InjectorConfig
+
 DOC_TYPE = "_doc"  # reference src/elasticsearch/codec.go:11
-
-
-def _require_columns(df: DataFrame, *cols: str) -> None:
-    """Fail at plan time if a routing column is missing.
-
-    The reference fails per-batch at runtime (src/elasticsearch/codec.go:61-68,
-    80-88 via src/models/record.go:30-42); with a static schema we can fail
-    at analysis time instead, which is strictly earlier and cheaper.
-    """
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"missing required column(s) {missing}; have {df.columns}")
-
-
-def filter_null_payload(df: DataFrame, payload_col: str = "value") -> DataFrame:
-    """Drop records with nil payload (ErrNilMessage path).
-
-    Reference: src/kafka/encode_decode.go:43-45, skip at consumer.go:150-152.
-    """
-    return df.filter(F.col(payload_col).isNotNull())
+#: The PERMISSIVE decode's corrupt-record field inside ``decoded``.
+CORRUPT_COL = "_corrupt_record"
 
 
 def decode_json(df: DataFrame, schema: T.StructType | str,
-                payload_col: str = "value",
-                corrupt_col: str = "_corrupt_record") -> DataFrame:
+                payload_col: str = "value") -> DataFrame:
     """Decode a JSON payload column; malformed rows are marked, not fatal.
 
     Reference: json.Unmarshal per record (src/kafka/encode_decode.go:87-113);
     decode errors skip the record and the batch continues
-    (src/kafka/consumer.go:154-159). PERMISSIVE from_json + corrupt-record
-    column gives the same semantics declaratively.
+    (src/kafka/consumer.go:154-159). PERMISSIVE from_json + the
+    `CORRUPT_COL` field gives the same semantics declaratively.
     """
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     schema_with_corrupt = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
+        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
     )
     decoded = F.from_json(
         F.col(payload_col).cast("string"),
         schema_with_corrupt,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt_col},
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
     )
     return df.withColumn("decoded", decoded)
 
@@ -90,76 +76,6 @@ def decode_json_schemaless(df: DataFrame, payload_col: str = "value",
         F.from_json(F.col(payload_col).cast("string"), "map<string,variant>"))
 
 
-def profile_schemaless(df: DataFrame, doc_col: str = "doc") -> DataFrame:
-    """Field-shape profile of a schemaless corpus: for a
-    ``map<string,variant>`` column, the observed (field, variant_type)
-    histogram — ``(field, vtype, n_rows, fraction)``, fraction over the
-    non-null documents.
-
-    The operational bridge OUT of schemaless mode: run a topic
-    schemaless first (the reference's deployment), profile what
-    actually arrives, then author the PAYLOAD_SCHEMA_DDL for the typed
-    path from the dominant shapes — instead of guessing a schema
-    upfront or paying spark.read.json's full inference scan.
-
-    Shape: one explode + schema_of_variant (JVM-side) + one
-    partial-aggregable groupBy of (field, vtype) — tiny result
-    cardinality regardless of corpus size; the one-row total count
-    broadcast-joins back.
-    """
-    docs = df.filter(F.col(doc_col).isNotNull())
-    fields = docs.select(F.explode(doc_col).alias("field", "v")).select(
-        "field", F.schema_of_variant("v").alias("vtype"))
-    counts = fields.groupBy("field", "vtype").agg(
-        F.count(F.lit(1)).alias("n_rows"))
-    total = docs.select(F.count(F.lit(1)).alias("_total"))
-    return (counts.join(F.broadcast(total))
-            .select("field", "vtype", "n_rows",
-                    (F.col("n_rows") / F.col("_total")).alias("fraction")))
-
-
-def drop_corrupt(df: DataFrame, corrupt_col: str = "_corrupt_record") -> DataFrame:
-    """Side-drop malformed records (consumer.go:154-159)."""
-    return df.filter(F.col(f"decoded.{corrupt_col}").isNull())
-
-
-def inject_timestamp(df: DataFrame, ts_col: str = "timestamp",
-                     out_col: str = "@timestamp") -> DataFrame:
-    """Inject `@timestamp` = Kafka message time in epoch MILLIseconds.
-
-    Reference: src/kafka/encode_decode.go:26,64,83-85,96.
-    """
-    return df.withColumn(out_col, F.unix_millis(F.col(ts_col)))
-
-
-def embed_key(df: DataFrame, key_col: str = "key",
-              out_col: str = "key") -> DataFrame:
-    """Embed the (decoded) message key into the payload when configured.
-
-    Reference: src/kafka/encode_decode.go:66-72,98-104; only when
-    KAFKA_CONSUMER_INCLUDE_KEY=true and key non-nil.
-    """
-    return df.withColumn(out_col, F.col(key_col).cast("string"))
-
-
-def blacklist(df: DataFrame, fields: list[str]) -> DataFrame:
-    """Anti-projection: drop configured payload fields; non-existent names
-    are ignored (FilterBlacklistedFields drops only matches).
-
-    Reference: src/models/record.go:44-56, applied at codec.go:43.
-    """
-    return df.drop(*[f for f in fields if f in df.columns])
-
-
-def field_as_string(df: DataFrame, field: str, out_col: str) -> Column:
-    """Extract a field and cast to string — widened from the reference's
-    string/int32-only accessor (src/models/record.go:30-42); missing
-    column fails at plan time (see _require_columns).
-    """
-    _require_columns(df, field)
-    return F.col(field).cast("string").alias(out_col)
-
-
 def doc_id_default(partition_col: str = "partition",
                    offset_col: str = "offset") -> Column:
     """Default ES doc id `"{partition}:{offset}"` — stable per Kafka
@@ -169,28 +85,45 @@ def doc_id_default(partition_col: str = "partition",
     return F.concat_ws(":", F.col(partition_col), F.col(offset_col))
 
 
-def doc_id_from_column(df: DataFrame, column: str) -> Column:
-    """Doc id from a payload column (codec.go:80-88, README.md:34)."""
-    return field_as_string(df, column, "doc_id")
+def required(col: Column, what: str) -> Column:
+    """A NULL routing value fails the batch explicitly — the reference's
+    GetValueForField errors on missing/unparseable values
+    (record.go:30-42) and the codec propagates it (codec.go:62-68,
+    82-88); silently shipping ``"_index": null`` or a "None" doc id is
+    worse than failing loudly."""
+    return F.coalesce(col, F.raise_error(F.lit(
+        f"missing or null {what} routing value (reference "
+        "record.go:30-42 fails the record)")))
 
 
-def index_time_bucketed(topic_or_index: Column, ts_col: str = "timestamp",
-                        prefix: str = "", hourly: bool = False) -> Column:
-    """Index name = prefix + (ES_INDEX or topic) + '-' + day|hour bucket.
+def routing(cfg: InjectorConfig, field_str) -> tuple[Column, Column]:
+    """Index-name + doc-id expressions (ops 12-17) over the Kafka
+    envelope columns ``topic``/``timestamp``/``partition``/``offset``;
+    ``field_str(name)`` resolves a payload field as a string column
+    (struct access typed, variant lookup schemaless).
 
-    Reference: codec.go:50-75; time formats src/models/record.go:18-24
-    ("2006-01-02" / "2006-01-02-15"); suffix select config.go:51-57.
-    """
-    fmt = "yyyy-MM-dd-HH" if hourly else "yyyy-MM-dd"
-    return F.concat(
-        F.lit(prefix), topic_or_index, F.lit("-"), F.date_format(F.col(ts_col), fmt)
-    )
-
-
-def index_from_column(df: DataFrame, column: str, prefix: str = "") -> Column:
-    """Index name routed by a payload column's value (codec.go:61-68)."""
-    _require_columns(df, column)
-    return F.concat(F.lit(prefix), F.col(column).cast("string"))
+    Index name = ES_INDEX_PREFIX + (ES_INDEX or topic) + '-' + (the
+    ES_INDEX_COLUMN value, else the day|hour bucket of the message
+    time): codec.go:50-75, formats record.go:18-24 ("2006-01-02" /
+    "2006-01-02-15"), suffix select config.go:51-57. Doc id = the
+    ES_DOC_ID_COLUMN value (codec.go:80-88) or `doc_id_default`."""
+    index_base = F.coalesce(
+        F.lit(cfg.es_index) if cfg.es_index else F.lit(None).cast("string"),
+        F.col("topic"))
+    if cfg.es_index_column:
+        suffix = required(field_str(cfg.es_index_column),
+                          f"es_index_column={cfg.es_index_column}")
+    else:
+        fmt = "yyyy-MM-dd-HH" if cfg.es_time_suffix == "hour" else "yyyy-MM-dd"
+        suffix = F.date_format(F.col("timestamp"), fmt)
+    index_name = F.concat(F.lit(cfg.es_index_prefix), index_base,
+                          F.lit("-"), suffix)
+    if cfg.es_doc_id_column:
+        doc_id = required(field_str(cfg.es_doc_id_column),
+                          f"es_doc_id_column={cfg.es_doc_id_column}")
+    else:
+        doc_id = doc_id_default("partition", "offset")
+    return index_name, doc_id
 
 
 def dedup_by_doc_id(df: DataFrame, id_cols: list[str],

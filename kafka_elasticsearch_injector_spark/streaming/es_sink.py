@@ -81,7 +81,7 @@ class HttpTransport:
         return cls(cfg.es_host, timeout_s=cfg.bulk_timeout_s,
                    user=cfg.es_user, password=cfg.es_password,
                    ignore_cert=cfg.es_ignore_cert,
-                   compress=getattr(cfg, "es_bulk_compress", False))
+                   compress=cfg.es_bulk_compress)
 
     def _headers(self) -> dict[str, str]:
         h = {"Content-Type": "application/x-ndjson"}
@@ -489,14 +489,13 @@ def write_arrow_factory(cfg, transport_factory):
     accumulator updates: mapInArrow is a transformation, and Spark's
     exactly-once accumulator guarantee holds only for actions — a
     retried/speculated task would double-count. The caller folds the
-    collected rows into `sink_acc` on the driver (collect deduplicates
-    retries by construction). The function takes no sink_acc anymore
-    for exactly that reason.
+    collected rows into its totals on the driver (collect deduplicates
+    retries by construction).
     """
     batch_size = cfg.batch_size
     backoff_s = cfg.bulk_backoff_s
     max_retries = cfg.max_retries if cfg.max_retries is not None else 10
-    max_bytes = getattr(cfg, "bulk_max_bytes", None)
+    max_bytes = cfg.bulk_max_bytes
 
     def write_arrow(batches: Iterator) -> Iterator:
         import pyarrow as pa

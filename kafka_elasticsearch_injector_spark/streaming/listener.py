@@ -12,38 +12,37 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 
 class InjectorMetricsListener(StreamingQueryListener):
-    """Collects per-batch throughput and source lag.
+    """Folds per-batch progress into running totals of fixed size: the
+    state after a million batches is as large as after one.
 
     numInputRows ≙ recordsConsumed counter; sources[].metrics
     (maxOffsetsBehindLatest for Kafka) ≙ the per-partition delay gauge the
-    reference computes from HighWaterMarks() - consumed offset.
+    reference computes from HighWaterMarks() - consumed offset; only the
+    last batch's sources are kept, because a gauge reads the latest.
     """
 
     def __init__(self):
-        self.progress: list[dict] = []
+        self.total_rows = 0
+        self.batches = 0
+        self.add_batch_ms = 0
+        self.last_sources: list[dict] = []
 
     def onQueryStarted(self, event) -> None:
         pass
 
     def onQueryProgress(self, event) -> None:
         p = json.loads(event.progress.json)
-        self.progress.append({
-            "batchId": p.get("batchId"),
-            "numInputRows": p.get("numInputRows"),
-            "durationMs": p.get("durationMs"),
-            "sources": [
-                {"description": s.get("description"),
-                 "metrics": s.get("metrics", {})}
-                for s in p.get("sources", [])
-            ],
-        })
+        self.total_rows += p.get("numInputRows") or 0
+        self.add_batch_ms += (p.get("durationMs") or {}).get("addBatch", 0) or 0
+        self.last_sources = [
+            {"description": s.get("description"),
+             "metrics": s.get("metrics", {})}
+            for s in p.get("sources", [])
+        ]
+        self.batches += 1
 
     def onQueryTerminated(self, event) -> None:
         pass
 
     def onQueryIdle(self, event) -> None:
         pass
-
-    @property
-    def total_rows(self) -> int:
-        return sum(p["numInputRows"] or 0 for p in self.progress)

@@ -8,10 +8,12 @@ rendered in Prometheus text exposition format from two sources:
 - engine progress (InjectorMetricsListener): rows consumed, per-source
   lag (maxOffsetsBehindLatest ≙ partition_delay), batch durations
   (≙ endpoint latency summary);
-- executor-side sink counters via Spark ACCUMULATORS: the per-partition
-  BulkStats (created/409/400/retry) merge into driver-side totals on
-  task completion — the cross-JVM analog of the reference's shared
-  counter registry, with no extra RPC or state store.
+- sink triage totals (created/409/400/retry): the per-task BulkStats
+  rows each micro-batch's sink action collects, summed on the driver
+  in `start_pipeline`'s foreachBatch.
+
+All state is O(1) running totals, so a scrape costs the same after a
+week of batches as after the first.
 
 Serve with ProbeServer(metrics_fn=metrics.prometheus_text) — the same
 daemon-thread HTTP server as the health probes, matching the reference
@@ -20,39 +22,26 @@ where probes and /metrics share the process.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-
+from .es_sink import BulkStats
 from .listener import InjectorMetricsListener
 
 
-class SinkAccumulators:
-    """Driver-visible totals of executor-side bulk triage (picklable by
-    closure capture into foreachPartition tasks)."""
-
-    def __init__(self, spark: SparkSession):
-        sc = spark.sparkContext
-        self.created = sc.accumulator(0)
-        self.already_exists = sc.accumulator(0)
-        self.bad_request = sc.accumulator(0)
-        self.retried = sc.accumulator(0)
-
-    def add_stats(self, stats) -> None:
-        """Fold one partition's BulkStats in (runs ON the executor)."""
-        self.created += stats.created
-        self.already_exists += stats.already_exists
-        self.bad_request += stats.bad_request
-        self.retried += stats.retried
-
-
 class InjectorMetrics:
-    """Aggregates listener progress + sink accumulators and renders the
+    """Aggregates listener progress + sink triage totals and renders the
     reference's metric names (metrics.go:101-125) in Prometheus text
     format."""
 
-    def __init__(self, spark: SparkSession,
-                 listener: InjectorMetricsListener | None = None):
-        self.listener = listener or InjectorMetricsListener()
-        self.sink = SinkAccumulators(spark)
+    def __init__(self):
+        self.listener = InjectorMetricsListener()
+        self.sink = BulkStats()
+
+    def add_sink_rows(self, rows) -> None:
+        """Fold one batch's collected STATS_SCHEMA rows into the totals."""
+        for r in rows:
+            self.sink.created += r.created
+            self.sink.already_exists += r.already_exists
+            self.sink.bad_request += r.bad_request
+            self.sink.retried += r.retried
 
     def prometheus_text(self) -> str:
         lines: list[str] = []
@@ -61,44 +50,41 @@ class InjectorMetrics:
             lines.append(f"# TYPE {name} {mtype}")
             lines.append(f"{name}{labels} {value}")
 
-        progress = self.listener.progress
+        listener = self.listener
         metric("kafka_consumer_records_consumed_successfully", "counter",
-               self.listener.total_rows)
+               listener.total_rows)
 
         # Per-source lag: Structured Streaming's Kafka source reports
         # maxOffsetsBehindLatest per micro-batch — the engine-level
         # equivalent of the reference's HighWaterMarks - offset gauge.
-        if progress:
-            for i, src in enumerate(progress[-1].get("sources", [])):
-                behind = (src.get("metrics") or {}).get(
-                    "maxOffsetsBehindLatest")
-                if behind is not None:
-                    metric("kafka_consumer_partition_delay", "gauge",
-                           behind, f'{{source="{i}"}}')
+        for i, src in enumerate(listener.last_sources):
+            behind = (src.get("metrics") or {}).get("maxOffsetsBehindLatest")
+            if behind is not None:
+                metric("kafka_consumer_partition_delay", "gauge",
+                       behind, f'{{source="{i}"}}')
 
         # Batch-duration summary ≙ endpoint latency histogram: the sink
         # call is inside addBatch, so addBatch duration is the bulk
         # round-trip plus engine overhead.
-        total_ms = sum(
-            (p.get("durationMs") or {}).get("addBatch", 0) or 0
-            for p in progress)
         lines.append("# TYPE kafka_consumer_endpoint_latency_histogram_seconds summary")
         lines.append(
-            f"kafka_consumer_endpoint_latency_histogram_seconds_sum {total_ms / 1000.0}")
+            "kafka_consumer_endpoint_latency_histogram_seconds_sum "
+            f"{listener.add_batch_ms / 1000.0}")
         lines.append(
-            f"kafka_consumer_endpoint_latency_histogram_seconds_count {len(progress)}")
+            "kafka_consumer_endpoint_latency_histogram_seconds_count "
+            f"{listener.batches}")
 
         # Backpressure is engine-level (maxOffsetsPerTrigger), so the
         # buffer can't fill; the gauge exists for dashboard parity.
         metric("kafka_consumer_buffer_full", "gauge", 0.0)
 
         metric("elasticsearch_events_retryed", "counter",
-               self.sink.retried.value)
+               self.sink.retried)
         metric("elasticsearch_document_already_exists", "counter",
-               self.sink.already_exists.value)
+               self.sink.already_exists)
         metric("elasticsearch_bad_request", "counter",
-               self.sink.bad_request.value)
+               self.sink.bad_request)
         # Extension (no reference analog): successful creates.
         metric("elasticsearch_documents_created", "counter",
-               self.sink.created.value)
+               self.sink.created)
         return "\n".join(lines) + "\n"

@@ -57,41 +57,6 @@ def read_kafka_stream(spark: SparkSession, cfg: InjectorConfig) -> DataFrame:
 SOURCE_COLS = ("key", "value", "topic", "partition", "offset", "timestamp")
 
 
-def _required(col: Column, what: str) -> Column:
-    """A NULL routing value fails the batch explicitly — the reference's
-    GetValueForField errors on missing/unparseable values
-    (record.go:30-42) and the codec propagates it (codec.go:62-68,
-    82-88); silently shipping ``"_index": null`` or a "None" doc id is
-    worse than failing loudly."""
-    return F.coalesce(col, F.raise_error(F.lit(
-        f"missing or null {what} routing value (reference "
-        "record.go:30-42 fails the record)")))
-
-
-def _routing(cfg: InjectorConfig, field_str) -> tuple[Column, Column]:
-    """Index-name + doc-id expressions (ops 12-17), shared by the typed
-    and schemaless paths; ``field_str(name)`` resolves a payload field
-    as a string column (struct access typed, variant lookup
-    schemaless)."""
-    index_base = F.coalesce(
-        F.lit(cfg.es_index) if cfg.es_index else F.lit(None).cast("string"),
-        F.col("topic"))
-    if cfg.es_index_column:
-        suffix = _required(field_str(cfg.es_index_column),
-                           f"es_index_column={cfg.es_index_column}")
-    else:
-        fmt = "yyyy-MM-dd-HH" if cfg.es_time_suffix == "hour" else "yyyy-MM-dd"
-        suffix = F.date_format(F.col("timestamp"), fmt)
-    index_name = F.concat(F.lit(cfg.es_index_prefix), index_base,
-                          F.lit("-"), suffix)
-    if cfg.es_doc_id_column:
-        doc_id = _required(field_str(cfg.es_doc_id_column),
-                           f"es_doc_id_column={cfg.es_doc_id_column}")
-    else:
-        doc_id = ops.doc_id_default("partition", "offset")
-    return index_name, doc_id
-
-
 def _parse_json_key(df: DataFrame, reason: Column
                     ) -> tuple[DataFrame, Column]:
     """Shared json-key validation: parse ONCE into ``_key_var``
@@ -222,7 +187,7 @@ def build_elastic_records(df: DataFrame, cfg: InjectorConfig,
         df = ops.decode_json(df, payload_schema, payload_col="value")
         reason = (
             F.when(F.col("value").isNull(), F.lit("null_payload"))
-            .when(F.col("decoded._corrupt_record").isNotNull(),
+            .when(F.col(f"decoded.{ops.CORRUPT_COL}").isNotNull(),
                   F.lit("corrupt_payload"))
         )
     else:
@@ -315,7 +280,7 @@ def build_elastic_records(df: DataFrame, cfg: InjectorConfig,
                 f"routing column {routing_col!r} not in payload schema "
                 f"{payload_fields}")
 
-    index_name, doc_id = _routing(
+    index_name, doc_id = ops.routing(
         cfg, lambda name: F.col(f"decoded.{name}").cast("string"))
     return _assemble(df, reason, index_name, doc_id,
                      F.to_json(F.struct(*payload_cols)), return_drops)
@@ -388,7 +353,7 @@ def _build_elastic_records_schemaless(df: DataFrame, cfg: InjectorConfig,
             F.try_element_at(F.col("_decoded_map"), F.lit(name)),
             "$", "string")
 
-    index_name, doc_id = _routing(cfg, _field_str)
+    index_name, doc_id = ops.routing(cfg, _field_str)
     return _assemble(df, reason, index_name, doc_id,
                      F.to_json(payload_map), return_drops)
 
@@ -492,33 +457,23 @@ def start_pipeline(spark: SparkSession, cfg: InjectorConfig,
         registry=registry, reader_schema_id=reader_schema_id,
         key_reader_schema_id=key_reader_schema_id,
         return_drops=dead_letter_dir is not None)
-    sink_acc = None
     if metrics is not None:
-        # metrics is an InjectorMetrics: sink triage counts flow back via
-        # accumulators; the progress listener feeds rows/lag/latency.
-        sink_acc = metrics.sink
-        if not getattr(metrics, "_listener_registered", False):
-            spark.streams.addListener(metrics.listener)
-            metrics._listener_registered = True
+        # metrics is an InjectorMetrics: the progress listener feeds
+        # rows/lag/latency, run_sink folds the sink triage counts.
+        spark.streams.addListener(metrics.listener)
     writer = write_arrow_factory(cfg, transport_factory)
 
     def run_sink(df: DataFrame) -> None:
         # Executor-side bulk writes over Arrow batches (no per-row
         # pickle, no Row objects); the driver action collects ONE
         # counters row per task — never record data. Metrics fold in
-        # HERE, from the collected rows: collect() deduplicates task
-        # retries, where an executor-side accumulator update inside a
-        # transformation would double-count (exactly-once accumulators
-        # are an action-only guarantee).
+        # HERE, on the driver, from the collected rows: collect()
+        # deduplicates task retries, where an executor-side update
+        # inside a transformation would double-count.
         rows = (df.select("index_name", "doc_id", "payload")
                 .mapInArrow(writer, STATS_SCHEMA).collect())
-        if sink_acc is not None:
-            from .es_sink import BulkStats
-
-            for r in rows:
-                sink_acc.add_stats(BulkStats(
-                    created=r.created, already_exists=r.already_exists,
-                    bad_request=r.bad_request, retried=r.retried))
+        if metrics is not None:
+            metrics.add_sink_rows(rows)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if dead_letter_dir is None:

@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_elasticsearch_injector_spark.config import InjectorConfig
-from kafka_elasticsearch_injector_spark.operators import injector as ops
 from kafka_elasticsearch_injector_spark.streaming.pipeline import (
     build_elastic_records,
 )
@@ -229,13 +228,32 @@ def test_avro_requires_registry():
         InjectorConfig(record_type="avro")
 
 
-# --- blacklist operator non-destructiveness (record_test.go:15-45) --------
+# --- blacklist non-destructiveness (record_test.go:15-45) -----------------
 
 
 def test_blacklist_ignores_unknown_and_keeps_rest(spark):
-    df = spark.createDataFrame([(1, "x", "y")], "a INT, b STRING, c STRING")
-    out = ops.blacklist(df, ["b", "zzz"])
-    assert out.columns == ["a", "c"]
+    out = rows_of(build_elastic_records(
+        kafka_df(spark), cfg(blacklisted_columns=("value", "zzz")), SCHEMA))
+    assert set(json.loads(out[0]["payload"])) == {"id", "@timestamp"}
+
+
+def test_main_requires_avro_reader_schema_ids_before_spark(monkeypatch):
+    # The avro decode compiles against pinned reader schemas, so a
+    # missing id must stop the service before a session starts.
+    from kafka_elasticsearch_injector_spark import __main__ as service
+
+    def no_spark(*a, **kw):
+        raise AssertionError("main started Spark")
+
+    monkeypatch.setattr(service, "get_spark", no_spark)
+    env = {"KAFKA_CONSUMER_RECORD_TYPE": "avro",
+           "SCHEMA_REGISTRY_URL": "http://registry:8081",
+           "KAFKA_TOPICS": "t", "CHECKPOINT_DIR": "/nonexistent/ckpt"}
+    with pytest.raises(SystemExit, match="AVRO_READER_SCHEMA_ID"):
+        service.main(env=env)
+    with pytest.raises(SystemExit, match="AVRO_KEY_READER_SCHEMA_ID"):
+        service.main(env={**env, "AVRO_READER_SCHEMA_ID": "1",
+                          "KAFKA_CONSUMER_INCLUDE_KEY": "true"})
 
 
 def test_config_es_connection_surface():

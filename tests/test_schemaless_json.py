@@ -297,34 +297,6 @@ def test_schemaless_arbitrary_precision_numbers(spark):
     assert '"frac":0.1234567890123456789012345' in p
 
 
-def test_profile_schemaless(spark):
-    """Field-shape histogram over a drifting schemaless corpus — the
-    bridge from schemaless exploration to an authored typed schema."""
-    from kafka_elasticsearch_injector_spark.operators.injector import (
-        decode_json_schemaless,
-        profile_schemaless,
-    )
-
-    lines = [
-        json.dumps({"id": 1, "amount": 2.5}),
-        json.dumps({"id": 2, "amount": 3.5, "tags": ["a"]}),
-        json.dumps({"id": "three"}),        # drifted id type
-        '{"broken',                          # excluded from fractions
-    ]
-    docs = decode_json_schemaless(
-        spark.createDataFrame([(v,) for v in lines], "value string"),
-        decoded_col="doc")
-    prof = {(r.field, r.vtype): (r.n_rows, r.fraction)
-            for r in profile_schemaless(docs).collect()}
-    assert prof[("id", "BIGINT")] == (2, 2 / 3)
-    assert prof[("id", "STRING")] == (1, 1 / 3)
-    # JSON decimals surface as exact DECIMAL(p,s) in variant (the same
-    # fidelity the arbitrary-precision test pins), not lossy DOUBLE
-    assert prof[("amount", "DECIMAL(2,1)")][0] == 2
-    [tags_key] = [k for k in prof if k[0] == "tags"]
-    assert tags_key[1].startswith("ARRAY")
-
-
 def test_schemaless_plan_is_jvm_side(spark):
     """The docstring claims the whole schemaless path is JVM-side
     Catalyst expressions (from_json + variant/map ops, zero Python) —
