@@ -130,8 +130,9 @@ def small_vocab_probe(sf_dir: str, name: str, col: str = "text",
     blows past `limit` within the first batch and exits immediately;
     enum-like columns confirm cheaply. The probe is a SAMPLE: a corpus
     whose tail introduces new tokens past `probe_rows` would pass here
-    and then fail LOUDLY at runtime via bitmask64's overflow guard —
-    callers with corpus knowledge should pass vocab_hint directly.
+    and then fail LOUDLY at runtime via the masked verify's overflow
+    guard — callers with corpus knowledge should pass vocab_hint
+    directly.
     """
     import pyarrow.parquet as pq
 

@@ -104,9 +104,10 @@ def lsh_band_hashes(k: int, rows_per_band: int) -> list[Column]:
 
 def _vocab_row(shingled: DataFrame, set_col: str = "shingles") -> DataFrame:
     """ONE-row relation holding the sorted global vocabulary of
-    `set_col` as an array — the broadcast-able dictionary the bitmask
-    encoding reads. gid(gram) = rank in this sorted array, identical to
-    the old row_number-over-sorted-vocab assignment."""
+    `set_col` as an array — the broadcast-able dictionary the masked
+    verify of minhash_lsh_pairs reads. gid(gram) = rank in this sorted
+    array, identical to the old row_number-over-sorted-vocab
+    assignment."""
     return (shingled.select(F.explode(set_col).alias("gram"))
             .distinct()
             .agg(F.sort_array(F.collect_list("gram")).alias("_vocab")))
@@ -114,51 +115,16 @@ def _vocab_row(shingled: DataFrame, set_col: str = "shingles") -> DataFrame:
 
 def _mask_cols(set_col: str = "shingles") -> tuple[Column, Column]:
     """(sz, mask) Column pair computed ROW-LOCALLY against a `_m`
-    gram→gid map column (see bitmask64): sz = |set|, mask = OR of
-    1<<gid over the set's grams. The overflow guard lives INSIDE the
-    mask fold so the optimizer can never prune it away."""
+    gram→gid map column (see minhash_lsh_pairs' `vocab_hint` path):
+    sz = |set|, mask = OR of 1<<gid over the set's grams. The overflow
+    guard lives INSIDE the mask fold so the optimizer can never prune
+    it away."""
     mask = F.expr(
         f"aggregate({set_col}, cast(0 as bigint), (acc, g) -> acc | "
         "shiftleft(1L, if(element_at(_m, g) < 64, element_at(_m, g), "
-        "cast(raise_error('bitmask64: global vocabulary exceeds 64 "
-        "distinct elements') as int))))")
+        "cast(raise_error('minhash_lsh_pairs vocab_hint: global "
+        "vocabulary exceeds 64 distinct elements') as int))))")
     return F.size(set_col).alias("sz"), mask.alias("mask")
-
-
-def bitmask64(shingled: DataFrame, id_col: str,
-              set_col: str = "shingles") -> DataFrame:
-    """Dictionary-encode each row's distinct string set into ONE bigint
-    bitmask. Set intersection then costs a single codegen'd
-    `bit_count(a & b)` per pair instead of an interpreted
-    array_intersect — the verify stage stops being the bottleneck.
-
-    Caller contract: the GLOBAL vocabulary must have ≤ 64 distinct
-    elements (pass `vocab_hint` from corpus knowledge — e.g. enum-like
-    tag sets) and the sets hold non-null distinct strings. The plan is
-    fully lazy (no driver-side probing jobs); a vocabulary overflow
-    fails loudly at runtime via raise_error instead of silently
-    wrapping shiftleft past bit 63. Returns (id, sz, mask); empty sets
-    emit nothing (as before, when the explode emitted no row).
-
-    r15 shape: the dictionary is ONE broadcast row holding the sorted
-    vocabulary array; each input row builds a gram→gid map from it and
-    folds its own set into the mask — no (id, gram) explode, no
-    per-gram dictionary join, no groupBy(id) re-aggregation shuffle.
-    gid = rank in the sorted vocabulary, the identical assignment the
-    old row_number dictionary produced (and mask VALUES only feed
-    bit_count intersections, which are invariant to any consistent
-    assignment anyway). Measured in the q_dedup_minhash verify path:
-    the mask stage fell from ~1.0 s to the cost of one vocab aggregate.
-    """
-    sz, mask = _mask_cols(set_col)
-    gid_map = F.map_from_arrays(
-        F.col("_vocab"), F.sequence(F.lit(0), F.size("_vocab") - 1))
-    return (
-        shingled.crossJoin(F.broadcast(_vocab_row(shingled, set_col)))
-        .withColumn("_m", gid_map)
-        .filter(F.size(set_col) > 0)
-        .select(F.col(id_col), sz, mask)
-    )
 
 
 def minhash_lsh_pairs(
@@ -247,12 +213,12 @@ def minhash_lsh_pairs(
 
     if vocab_hint is not None and vocab_hint <= 64:
         # Inline (sz, mask) in the SAME projection as the band hashes
-        # (r15): the old shape ran bitmask64's (id, gram) explode +
-        # dictionary join + groupBy(id) and then a doc_id join back
-        # onto `banded` — three extra stages per side, ~1.0 s at sf0.1.
-        # Here the sorted vocabulary is ONE broadcast row and the mask
-        # is a row-local fold, so the masked projection costs one
-        # vocab aggregate plus narrow compute.
+        # (r15): the old shape ran a separate mask relation's
+        # (id, gram) explode + dictionary join + groupBy(id) and then a
+        # doc_id join back onto `banded` — three extra stages per side,
+        # ~1.0 s at sf0.1. Here the sorted vocabulary is ONE broadcast
+        # row and the mask is a row-local fold, so the masked projection
+        # costs one vocab aggregate plus narrow compute.
         masked = True
         sz, mask = _mask_cols("shingles")
         gid_map = F.map_from_arrays(
@@ -369,12 +335,12 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     don't grow unboundedly. A label moves one hop per round, so a
     component of diameter d needs about d rounds to converge (one round
     after the init for the clique-like components near-dup graphs
-    usually form). The loop stops after `max_iter` rounds and then
-    returns the labels as they are, unconverged, without raising: a
-    path of more than about `max_iter` hops comes back split into
-    several labels. This is label propagation (Hash-Min a la Pregel);
-    at 100 TB pre-partition edges by src so each iteration's join is
-    co-located.
+    usually form). If the labels still move after `max_iter` rounds
+    the call raises RuntimeError instead of returning unconverged
+    labels (a path of more than about `max_iter` hops would otherwise
+    come back split into several components). This is label
+    propagation (Hash-Min a la Pregel); at 100 TB pre-partition edges
+    by src so each iteration's join is co-located.
 
     Scale-critical: only nodes that appear in an edge enter the loop.
     In a dedup corpus the duplicate subgraph is a sliver of the corpus
@@ -422,6 +388,10 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
             "node", F.col("new_label").alias("label"))
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds")
     # Isolated nodes (no edges) label themselves; the converged labels
     # cover only the duplicate subgraph, so AQE broadcasts this join from
     # the checkpointed runtime stats whenever that subgraph is small.
@@ -533,10 +503,9 @@ def simhash_pairs(
 
     Scale note: 16 bits (md5-nibble lanes, oracle-checkable in DuckDB)
     is the verification width — segment buckets are 2^4-way and grow
-    quadratic with N, fine for verify-scale corpora only. The
-    production path is simhash64_pairs: same topology over a 64-bit
-    xxhash64-lane fingerprint, where (r+1) segments of ~16 bits keep
-    bucket sizes ~N/2^16.
+    quadratic with N, fine for verify-scale corpora only. Corpus scale
+    needs a wider fingerprint: hamming_segment_pairs takes `bits`, and
+    at 64 bits (r+1) segments of ~16 bits keep bucket sizes ~N/2^16.
     """
     fp = simhash16(df, id_col=id_col, text_col=text_col)
     return hamming_segment_pairs(
@@ -618,65 +587,6 @@ def hamming_segment_pairs(fp: DataFrame, id_col: str = "doc_id",
         joined.select("doc_a", "doc_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
-
-
-def simhash64(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    """64-bit SimHash — the production fingerprint width. Lane j votes
-    by bit j of xxhash64(token) over the row's distinct tokens;
-    fingerprint bit j = sign of the lane sum. Returns (id, simhash).
-
-    Same physical shape as simhash16 (explode distinct tokens → hash
-    ONCE per token → vote columns → one partial-aggregable groupBy),
-    but with xxhash64 — a single native 64-bit hash instead of md5
-    nibble surgery — and 64 lanes, so segment buckets in
-    simhash64_pairs stay ~N/2^16 at corpus scale. Not oracle-checkable
-    (DuckDB has no xxhash64); verified by property tests against
-    brute-force hamming and by planted-near-dup agreement with the
-    16-bit and minhash paths.
-    """
-    hashed = (
-        fill_cluster(df)
-        .select(F.col(id_col),
-                F.explode(F.array_distinct(tokens(text_col))).alias("tok"))
-        .withColumn("h", F.xxhash64(F.col("tok")))
-    )
-    votes = hashed.select(
-        id_col,
-        *[
-            F.when(F.shiftright("h", j).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1).alias(f"v{j}")
-            for j in range(64)
-        ],
-    )
-    summed = votes.groupBy(id_col).agg(
-        *[F.sum(f"v{j}").alias(f"s{j}") for j in range(64)])
-    fp: Column = F.lit(0).cast("bigint")
-    for j in range(64):
-        # OR the bit in (sum-of-powers would overflow at bit 63).
-        fp = fp.bitwiseOR(
-            F.when(F.col(f"s{j}") > 0,
-                   F.shiftleft(F.lit(1).cast("bigint"), j))
-            .otherwise(F.lit(0).cast("bigint")))
-    return summed.select(id_col, fp.alias("simhash"))
-
-
-def simhash64_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs over the 64-bit production fingerprint:
-    simhash64 + the same pigeonhole segment equi-join as the 16-bit
-    path. With max_hamming=3, candidates bucket on four ~16-bit
-    segments — bucket size ~N/2^16, so candidate volume stays linear
-    in N for corpus-scale inputs where 16-bit buckets would go
-    quadratic."""
-    fp = simhash64(df, id_col=id_col, text_col=text_col)
-    return hamming_segment_pairs(
-        fp, id_col=id_col, fp_col="simhash", bits=64,
-        max_hamming=max_hamming)
 
 
 def ngram_jaccard_pairs(

@@ -1,115 +1,14 @@
-"""Table maintenance: small-files compaction.
+"""Corpus maintenance: snapshot diff between corpus versions.
 
-The small-files problem is the dominant failure mode of long-running
-ingest (a streaming sink writing a file per micro-batch per partition
-produces millions of KB-sized files; every downstream scan then pays
-per-file open/footer cost and schedules a task per file). The reference
-sidesteps it only because its sink is Elasticsearch; a parquet-landing
-pipeline needs periodic compaction.
-
-Spark-first shape: target partition count is computed from the PARQUET
-FOOTERS (driver-side metadata, no job, no scan — same discipline as
-io.parquet_row_count), the rewrite is one coalesce/repartition pass,
-and publication is write-to-tmp + atomic directory swap so readers
-never observe a half-compacted table. At 100 TB, compaction runs per
-table-partition (e.g. per day), not globally — pass the partition
-directory as `path`.
-
-FILESYSTEM CONTRACT: the planning walk (os.walk) and the publication
-renames (os.rename/rmtree) are driver-local POSIX operations, so
-`path` must be on a filesystem the driver can see directly (local
-disk, NFS, FUSE mount). For object-store tables, swap these for the
-Hadoop FileSystem API (or run compaction behind a catalog/manifest
-pointer, where publication is a metadata swap anyway).
+corpus_diff is the audit a versioned-corpus release runs between
+drops: one full-outer join on the document id, digests compared as
+strings, so the whole diff is codegen.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def dataset_bytes(path: str) -> tuple[int, int, int]:
-    """(total_bytes, n_files, max_file_bytes) of a parquet file or
-    directory — a driver-side os.walk, no Spark job."""
-    if os.path.isfile(path):
-        size = os.path.getsize(path)
-        return size, 1, size
-    total = n = biggest = 0
-    for root, _, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                size = os.path.getsize(os.path.join(root, f))
-                total += size
-                biggest = max(biggest, size)
-                n += 1
-    return total, n, biggest
-
-
-def plan_compaction(path: str, target_file_bytes: int = 256 * 2**20
-                    ) -> tuple[int, int, int, int]:
-    """(target_n_files, total_bytes, current_n_files, max_file_bytes):
-    how many output files a compaction should produce for
-    ~target_file_bytes each. Always ≥ 1; returns the current file
-    count and largest file so callers can decide between a merge
-    (too many small files) and a split (one oversized file)."""
-    total, n_files, biggest = dataset_bytes(path)
-    target = max(1, (total + target_file_bytes - 1) // target_file_bytes)
-    return int(target), total, n_files, biggest
-
-
-def compact(spark: SparkSession, path: str,
-            target_file_bytes: int = 256 * 2**20,
-            sort_cols: list[str] | None = None) -> dict:
-    """Compact the parquet dataset at `path` in place; returns a report
-    {files_before, files_after, bytes, target_files, skipped}.
-
-    - No-op (skipped=True) only when the layout is HEALTHY in both
-      directions: file count already ≤ target (nothing to merge) AND
-      the largest file ≤ 2×target_file_bytes (nothing to split). A
-      single 10 GB file against a 256 MB target is rewritten into ~40
-      files — oversized files serialize scan tasks and break row-group
-      parallelism just as badly as small-file litter breaks task
-      scheduling. Re-writing a healthy table is pure cost.
-    - `sort_cols` optionally re-sorts within output files (restores
-      min/max-statistics pruning that interleaved micro-batch writes
-      destroy).
-    - Publication: write to a HIDDEN sibling tmp dir (leading "." —
-      Hadoop's PathFilter ignores it, so a concurrent reader of the
-      parent table never trips partition discovery on it), then two
-      renames (path -> hidden old, tmp -> path) and an rmtree. The
-      swap is NOT atomic: a reader in the instant between the renames
-      sees a missing path, and a crash there leaves the data under
-      the hidden "._old-*" name (recover by renaming it back). POSIX
-      offers no portable two-directory atomic exchange; run
-      compaction in the table's maintenance window or behind a
-      catalog pointer swap when readers cannot tolerate the gap.
-    """
-    target, total, n_files, biggest = plan_compaction(path, target_file_bytes)
-    if n_files <= target and biggest <= 2 * target_file_bytes:
-        return {"files_before": n_files, "files_after": n_files,
-                "bytes": total, "target_files": target, "skipped": True}
-    df: DataFrame = spark.read.parquet(path)
-    out = df.repartition(target)
-    if sort_cols:
-        out = out.sortWithinPartitions(*[F.col(c) for c in sort_cols])
-    # Hidden basenames (leading "."): Hadoop path filters skip them, so
-    # a reader listing the PARENT table during the rewrite sees neither
-    # the tmp nor the old directory.
-    parent, base = os.path.split(path.rstrip("/"))
-    tmp = os.path.join(parent, f"._compact-{uuid.uuid4().hex[:8]}-{base}")
-    out.write.mode("overwrite").option("compression", "zstd").parquet(tmp)
-    old = os.path.join(parent, f"._old-{uuid.uuid4().hex[:8]}-{base}")
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    _, after, _ = dataset_bytes(path)
-    return {"files_before": n_files, "files_after": after,
-            "bytes": total, "target_files": target, "skipped": False}
 
 
 def corpus_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id",

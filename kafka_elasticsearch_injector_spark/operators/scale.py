@@ -1,29 +1,21 @@
-"""Scale techniques as first-class operators: skew-salted joins and
-aggregations, and bucketed (co-located, shuffle-free) fact-fact joins.
+"""Scale techniques as first-class operators: the scan rebalance
+(fill_cluster), the filter-pushdown pin (no_pushdown) and the
+skew-salted exact-distinct aggregation.
 
 None of this exists in the reference — its only parallelism is a worker
-pool over one Kafka consumer (src/kafka/consumer.go:83-85) and its only
-"join" surface is none at all. These are the techniques a 100 TB Spark
-deployment reaches for when the defaults stop being enough:
-
-- First line of defense is AQE (`spark.sql.adaptive.enabled` +
-  `skewJoin.enabled`, on in session.py): it splits oversized shuffle
-  partitions at runtime with zero user code. Use THESE operators when
-  AQE can't see the skew: a skewed exact-distinct aggregation (one
-  reducer owns the hot key), a stream-static join (no AQE in
-  micro-batches), or a hot key so large even a split partition spills.
-- Bucketing removes the shuffle entirely rather than balancing it:
-  both fact tables pre-hashed into the same bucket layout on the join
-  key at WRITE time, so every later join/aggregation on that key is
-  map-side. One shuffle paid once, amortized over every downstream
-  query — the right trade for an orderkey-grained star schema.
+pool over one Kafka consumer (src/kafka/consumer.go:83-85). First line
+of defense against skew is AQE (`spark.sql.adaptive.enabled` +
+`skewJoin.enabled`, on in session.py): it splits oversized shuffle
+partitions at runtime with zero user code. salted_distinct_count covers
+the case AQE can't see: a skewed exact-distinct aggregation, where one
+reducer owns the hot key.
 """
 
 from __future__ import annotations
 
 import weakref
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # fill_cluster memo: DataFrame objects already probed (or produced by a
@@ -123,34 +115,6 @@ def no_pushdown(col: Column) -> Column:
     return col + F.monotonically_increasing_id() * F.lit(0)
 
 
-def salted_join(big: DataFrame, small: DataFrame, key: str,
-                n_salts: int = 16, how: str = "inner") -> DataFrame:
-    """Equi-join where `big.key` is skewed and `small` is too large to
-    broadcast: salt the big side (deterministic pmod of the row hash),
-    replicate the small side n_salts ways, join on (key, salt). The hot
-    key's rows now land on n_salts reducers instead of one.
-
-    Cost model: small side is shuffled n_salts× — pick n_salts ≈ the
-    skew factor of the hottest key, not "as big as possible". Result
-    column set matches a plain `big.join(small, key, how)`.
-
-    Only join types where the SMALL side never emits unmatched rows are
-    valid: inner/left/semi/anti. A right or full join would emit each
-    unmatched small row once per salt replica.
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter",
-                   "left_semi", "leftsemi", "semi",
-                   "left_anti", "leftanti", "anti"):
-        raise ValueError(
-            f"salted_join cannot express {how!r}: the replicated small "
-            "side would emit unmatched rows once per salt")
-    salt = F.pmod(F.hash(*[F.col(c) for c in big.columns]), F.lit(n_salts))
-    b = big.withColumn("_salt", salt)
-    s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    return b.join(s, [key, "_salt"], how).drop("_salt")
-
-
 def salted_distinct_count(df: DataFrame, group_col: str, distinct_col: str,
                           n_salts: int = 16,
                           out_col: str = "n_distinct") -> DataFrame:
@@ -172,29 +136,3 @@ def salted_distinct_count(df: DataFrame, group_col: str, distinct_col: str,
         .groupBy(group_col, "_salt").agg(F.count("_v").alias("_c"))
         .groupBy(group_col).agg(F.sum("_c").cast("bigint").alias(out_col))
     )
-
-
-def write_bucketed(df: DataFrame, table_name: str, path: str,
-                   bucket_cols: list[str], n_buckets: int = 32,
-                   sort_cols: list[str] | None = None) -> None:
-    """Persist `df` hash-bucketed on `bucket_cols` (external parquet
-    table at `path`). Two tables bucketed with the SAME columns and
-    bucket count join/aggregate on those columns with NO exchange —
-    the bucketing metadata proves co-location to the planner.
-
-    sort_cols additionally orders within buckets (sort-merge join
-    without the sort). The bucket count is a write-time commitment:
-    pick it for the TARGET scale (total size / ~128 MB), not the
-    current one.
-    """
-    w = df.write.mode("overwrite").format("parquet").option("path", path) \
-        .bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
-
-
-def bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    """Read a bucketed table back (bucket metadata comes from the
-    catalog — reading the parquet path directly would lose it)."""
-    return spark.table(table_name)

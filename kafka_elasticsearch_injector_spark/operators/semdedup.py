@@ -10,15 +10,13 @@ operators at all; its pipeline ends at the ES bulk sink,
 src/elasticsearch/elasticsearch.go:60-124); this belongs to the
 training-data extension.
 
-Two k-means paths exist in this package, on purpose:
-- `operators/similarity.ivf_train` — pyspark.ml KMeans, the production
-  quantizer (float arithmetic, seeded, NOT cross-engine replayable);
-- THIS module — integer-exact Lloyd's: embeddings are quantized to
-  integers once, every distance is an exact BIGINT, centroid updates
-  are floor-divisions, and ties break on cluster id. Every step is a
-  pure function of the input, so a SQL oracle (DuckDB) replays the
-  whole iteration history bit-identically — the declared-query
-  correctness gate the .ml path cannot offer.
+The k-means here is integer-exact Lloyd's, not pyspark.ml KMeans
+(float arithmetic, seeded, NOT cross-engine replayable): embeddings are
+quantized to integers once, every distance is an exact BIGINT, centroid
+updates are floor-divisions, and ties break on cluster id. Every step
+is a pure function of the input, so a SQL oracle (DuckDB) replays the
+whole iteration history bit-identically — the declared-query
+correctness gate the .ml path cannot offer.
 
 Spark-first shape (classic distributed Lloyd's):
 - assignment pass: ONE narrow scan; the k×dim centroids are plan-time

@@ -26,7 +26,7 @@ See ROUNDING.md.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
@@ -125,76 +125,6 @@ def ivf_topk(emb: DataFrame, probe_ids: list[int], k: int = 3,
         .select("probe_id", label_col, id_col,
                 F.col("_cos").alias("cos_sim"), "rn")
     )
-
-
-def ivf_train(emb: DataFrame, nlist: int, id_col: str = "vec_id",
-              vec_col: str = "embedding", seed: int = 42,
-              label_col: str = "label", max_iter: int = 20) -> DataFrame:
-    """Train the IVF coarse quantizer: k-means over the embedding column
-    (pyspark.ml, distributed Lloyd's), returning (id, label) cell
-    assignments to feed ivf_topk's `label_col`.
-
-    The declared queries use the pre-assigned `label` column so the
-    oracle stays deterministic; this is the production path that
-    produces such a column (SURVEY.md §2.3: "at production scale run
-    .ml KMeans and persist assignments — the plan shape is identical").
-    At 100 TB: train on a sample (KMeans fits the sample in driver-side
-    iterations over aggregated stats, not raw rows), then one narrow
-    transform assigns every row; persist the assignments partitioned by
-    cell so probes are co-located single-cell reads.
-    """
-    try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-    except ImportError as ex:  # pragma: no cover — ml ships with pyspark
-        raise NotImplementedError(
-            "ivf_train needs pyspark.ml (not available in this "
-            "deployment); assign cells externally and pass label_col "
-            "to ivf_topk") from ex
-
-    feats = fill_cluster(emb).select(
-        F.col(id_col),
-        array_to_vector(V.to_double(F.col(vec_col))).alias("_features"))
-    model = KMeans(k=nlist, seed=seed, maxIter=max_iter,
-                   featuresCol="_features", predictionCol=label_col,
-                   ).fit(feats)
-    return model.transform(feats).select(id_col, label_col)
-
-
-def ivf_persist(emb: DataFrame, assignments: DataFrame, path: str,
-                id_col: str = "vec_id", label_col: str = "label") -> None:
-    """Materialize the IVF index: corpus vectors joined to their cell
-    assignments, written as parquet PARTITIONED BY cell.
-
-    This is the storage layout every IVF deployment converges on: a
-    probe that quantizes to cells {c1..ck} reads exactly those
-    directories — Catalyst turns the cell predicate into
-    PartitionFilters, so a 4096-cell index serves an nprobe=8 query by
-    scanning ~0.2% of the corpus, no index structure beyond the
-    filesystem layout. Repartitioning by cell before the write gives
-    one file per (cell, shuffle-partition) instead of every task
-    appending to every cell directory (the small-files failure mode at
-    scale).
-
-    `assignments` is authoritative for `label_col`: a column of the
-    same name already on `emb` (the project's own embeddings table
-    ships a `label`) is dropped first, so the join can't produce an
-    AMBIGUOUS_REFERENCE at the repartition/partitionBy below."""
-    (emb.drop(label_col).join(assignments.select(id_col, label_col), id_col)
-        .repartition(F.col(label_col))
-        .write.mode("overwrite").partitionBy(label_col).parquet(path))
-
-
-def ivf_read_cells(spark: SparkSession, path: str,
-                   cells: list[int] | None = None,
-                   label_col: str = "label") -> DataFrame:
-    """Read the persisted IVF index, pruned to `cells` (None → full
-    scan). The cell predicate resolves against the partition column, so
-    the scan lists only the matching directories."""
-    df = spark.read.parquet(path)
-    if cells is not None:
-        df = df.filter(F.col(label_col).isin(cells))
-    return df
 
 
 def quantize_int8(emb: DataFrame, id_col: str = "vec_id",

@@ -98,8 +98,8 @@ def _km_ctes() -> str:
     """,
     doc="Deterministic integer Lloyd's k-means over the embedding "
         "corpus (quantize → exact BIGINT argmin → floor-div centroid "
-        "update, ties on cluster id) — the oracle-replayable twin of "
-        "similarity.ivf_train's pyspark.ml path. Assignment is one "
+        "update, ties on cluster id) — an oracle-replayable stand-in "
+        "for pyspark.ml's float KMeans. Assignment is one "
         "narrow codegen scan (centroids are plan literals); update is "
         "one partial-aggregated groupBy collecting k×(dim+1) longs.",
 )

@@ -411,7 +411,7 @@ def q_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import lsh_band_tuning, minhash_lsh_pairs
 
     docs = table(spark, sf_dir, "documents")
-    # vocab_hint enables the bitmask64 verify — without it the exact-
+    # vocab_hint enables the bitmask verify — without it the exact-
     # Jaccard verify on every threshold-0 candidate is array_intersect
     # over ~10M pairs (measured 14.8 s vs 2 s at sf0.1, the same trap
     # q_minhash_calibration documents).

@@ -89,12 +89,12 @@ def _is_green(row: dict) -> bool:
 
 
 def _scan_history(root: str | None) -> tuple[
-        dict[str, int], set[str], dict[str, tuple[int, bool]]]:
+        dict[str, int], dict[str, tuple[int, bool]]]:
     """Parse every committed CORRECTNESS_r*.json → (last_green_round per
-    query, set of queries ever checked, latest (round, was_green) per
-    query). Missing/corrupt files are skipped: with no history at all
-    the order degrades to registration order, which is still a valid
-    inventory."""
+    query, latest (round, was_green) per query; its keys are the
+    queries ever checked). Missing/corrupt files are skipped: with no
+    history at all the order degrades to registration order, which is
+    still a valid inventory."""
     last_green: dict[str, int] = {}
     latest: dict[str, tuple[int, bool]] = {}
     pattern = os.path.join(root or _repo_root(), "CORRECTNESS_r*.json")
@@ -116,13 +116,7 @@ def _scan_history(root: str | None) -> tuple[
                 last_green[name] = max(last_green.get(name, rnd), rnd)
             if name not in latest or rnd >= latest[name][0]:
                 latest[name] = (rnd, green)
-    return last_green, set(latest), latest
-
-
-def driver_history(root: str | None = None) -> tuple[dict[str, int], set[str]]:
-    """(last_green_round per query, set of queries ever checked)."""
-    last_green, checked, _ = _scan_history(root)
-    return last_green, checked
+    return last_green, latest
 
 
 def priority_order(names: list[str], root: str | None = None) -> list[str]:
@@ -133,7 +127,7 @@ def priority_order(names: list[str], root: str | None = None) -> list[str]:
     and out of the verified prefix), then never-checked queries, then
     greens ascending by the round of their last green row (stalest
     first)."""
-    last_green, checked, latest = _scan_history(root)
+    last_green, latest = _scan_history(root)
     reg_idx = {n: i for i, n in enumerate(names)}
 
     def key(n: str):

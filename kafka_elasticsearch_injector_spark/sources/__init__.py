@@ -5,13 +5,9 @@ from .avro_codec import AvroError, Codec, parse_schema  # noqa: F401
 from .confluent import (  # noqa: F401
     avro_to_spark_type,
     decode_confluent,
-    drop_decode_errors,
-    encode_confluent,
     wire_decode,
-    wire_encode,
 )
 from .schema_registry import (  # noqa: F401
     SchemaRegistryClient,
     SchemaRegistryError,
-    dict_registry,
 )

@@ -19,7 +19,8 @@ Decode strategy (SURVEY.md §4.2 custom work #1):
   call and the input columns pass through untouched;
 - decode failures do NOT fail the batch: the record's `decoded` is
   null and the error lands in `_decode_error` (malformed side-drop,
-  consumer.go:154-159 — filter on `_decode_error IS NULL`).
+  consumer.go:154-159 — the pipeline filters on `_decode_error IS
+  NULL`).
 """
 
 from __future__ import annotations
@@ -41,13 +42,6 @@ from .avro_codec import AvroError, Codec, logical_type, parse_schema
 from .schema_registry import SchemaRegistryClient
 
 WIRE_HEADER_LEN = 5
-MAGIC_BYTE = 0
-
-
-def wire_encode(schema_id: int, body: bytes) -> bytes:
-    """Frame an Avro body: magic 0 + big-endian schema id (parity with
-    the reference's test producer, fixtures/producer.go:96-118)."""
-    return bytes([MAGIC_BYTE]) + struct.pack(">i", schema_id) + body
 
 
 def wire_decode(message: bytes) -> tuple[int, bytes]:
@@ -317,60 +311,3 @@ def decode_confluent(
                 names=batch.schema.names + [decoded_col, error_col])
 
     return df.mapInArrow(decode_batches, out_schema)
-
-
-def drop_decode_errors(df: DataFrame,
-                       error_col: str = "_decode_error") -> DataFrame:
-    """Malformed-record side-drop (consumer.go:154-159): keep only rows
-    that decoded cleanly."""
-    from pyspark.sql import functions as F
-
-    return df.filter(F.col(error_col).isNull()).drop(error_col)
-
-
-def encode_confluent(
-    df: DataFrame,
-    registry: SchemaRegistryClient,
-    schema_id: int,
-    struct_col: str,
-    out_col: str = "value",
-) -> DataFrame:
-    """Encode a struct column into Confluent-framed Avro binary — the
-    producer side (reference op 26: fixtures/producer.go:75-146,
-    util/producer/producer.go:15-53, which frame goavro-encoded bodies
-    with the same magic+id header).
-
-    The schema is resolved and the header PRECOMPUTED at plan time (the
-    producer caches its header bytes per schema, producer.go:97-117);
-    executors encode batch-at-a-time in mapInPandas. Round-trips through
-    decode_confluent by construction. Use with `write.format("kafka")`
-    (key/value binary columns) to produce back to a topic.
-    """
-    schema_json = registry.get_schema(schema_id)
-    writer_type = avro_to_spark_type(schema_json)
-    if not isinstance(writer_type, T.StructType):
-        raise AvroError("writer schema must be a record")
-    header = bytes([MAGIC_BYTE]) + struct.pack(">i", schema_id)
-    field_names = [f.name for f in writer_type.fields]
-
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != struct_col]
-        + [T.StructField(out_col, T.BinaryType(), True)])
-    keep = [f.name for f in df.schema.fields if f.name != struct_col]
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codec = Codec(schema_json)  # compiled once per worker
-
-        def encode_one(row) -> bytes | None:
-            if row is None:
-                return None
-            value = {k: row.get(k) for k in field_names} \
-                if isinstance(row, dict) else dict(zip(field_names, row))
-            return header + codec.encode(value)
-
-        for pdf in batches:
-            out = pdf[keep].copy()
-            out[out_col] = [encode_one(r) for r in pdf[struct_col]]
-            yield out
-
-    return df.mapInPandas(encode_batches, out_schema)

@@ -63,15 +63,3 @@ class SchemaRegistryClient:
 
     def __setstate__(self, state):
         self.__dict__.update(state)
-
-
-def dict_registry(schemas: dict[int, str]) -> SchemaRegistryClient:
-    """Registry backed by an in-memory {id: schema-json} map (tests /
-    offline dev)."""
-    def fetch(schema_id: int) -> str:
-        try:
-            return schemas[schema_id]
-        except KeyError:
-            raise SchemaRegistryError(f"unknown schema id {schema_id}")
-
-    return SchemaRegistryClient(fetcher=fetch)

@@ -1,24 +1,18 @@
 from .es_sink import (
     STATS_SCHEMA,
     ElasticBulkWriter,
-    FileTransport,
     HttpTransport,
     NullTransport,
-    composable_template,
-    ensure_index_template,
     write_arrow_factory,
 )
 from .pipeline import (
     build_elastic_records,
-    enrich_static,
     read_kafka_stream,
-    replay_dead_letters,
     start_pipeline,
 )
 
 __all__ = [
-    "STATS_SCHEMA", "ElasticBulkWriter", "FileTransport", "HttpTransport",
-    "NullTransport", "composable_template", "ensure_index_template",
-    "write_arrow_factory", "build_elastic_records", "enrich_static",
-    "read_kafka_stream", "replay_dead_letters", "start_pipeline",
+    "STATS_SCHEMA", "ElasticBulkWriter", "HttpTransport", "NullTransport",
+    "write_arrow_factory", "build_elastic_records", "read_kafka_stream",
+    "start_pipeline",
 ]

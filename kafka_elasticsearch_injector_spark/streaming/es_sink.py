@@ -14,16 +14,14 @@ executor-side partition writer for foreachBatch:
   unbounded loop can live-lock a partition (a reference bug noted in
   SURVEY.md §4.1).
 
-Transports are pluggable + picklable (constructed on executors):
-HttpTransport posts to a real ES _bulk endpoint; FileTransport gives
-byte-for-byte create semantics on a shared filesystem (O_EXCL ⇒ 409)
-for offline tests.
+The writer calls one transport method, `bulk_create`, on a transport
+built on the executor: HttpTransport posts to the ES _bulk endpoint,
+and NullTransport acknowledges every record without a network.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -74,7 +72,6 @@ class HttpTransport:
         self.password = password
         self.ignore_cert = ignore_cert
         self.compress = compress            # gzip _bulk bodies
-        self._server_major: int | None = None  # sniffed lazily, cached
 
     @classmethod
     def from_config(cls, cfg) -> "HttpTransport":
@@ -172,205 +169,6 @@ class HttpTransport:
         return [BulkItemResult(status=item["create"]["status"])
                 for item in out["items"]]
 
-    def ping(self) -> bool:
-        import urllib.request
-
-        try:
-            req = urllib.request.Request(
-                self.es_host, headers=self._headers())
-            with self._open(req):
-                return True
-        except Exception:
-            return False
-
-    def server_major(self) -> int | None:
-        """Sniffed ES major version (GET /, cached), None when the node
-        is unreachable or the answer has no version — callers then
-        assume the reference's ES 7 behavior. The bulk path needs no
-        version branching (the action line is already typeless: _index
-        + _id, no _type — valid on 6.x through current); only the
-        template API split (legacy /_template vs 8.x composable
-        /_index_template) keys off this."""
-        if self._server_major is None:
-            import urllib.request
-
-            try:
-                req = urllib.request.Request(
-                    self.es_host, headers=self._headers())
-                with self._open(req) as resp:
-                    info = json.loads(resp.read())
-                self._server_major = int(
-                    info["version"]["number"].split(".")[0])
-            except Exception:
-                return None
-        return self._server_major
-
-    def _template_url(self, name: str, major: int | None = None) -> str:
-        """Template endpoint for the given ES major. `major=None` means
-        sniff-now (cached); callers that already sniffed (and chose a
-        body shape accordingly) pass their answer so URL and body can
-        never disagree — even when their sniff failed and a later one
-        inside this call would succeed."""
-        if major is None:
-            major = self.server_major() or 7
-        api = "_index_template" if major >= 8 else "_template"
-        return f"{self.es_host}/{api}/{name}"
-
-    def template_exists(self, name: str, major: int | None = None) -> bool:
-        import urllib.error
-        import urllib.request
-
-        req = urllib.request.Request(
-            self._template_url(name, major), headers=self._headers(),
-            method="HEAD")
-        try:
-            with self._open(req):
-                return True
-        except urllib.error.HTTPError as ex:
-            if ex.code == 404:
-                return False
-            raise
-
-    def put_template(self, name: str, body: dict,
-                     major: int | None = None) -> None:
-        import urllib.request
-
-        req = urllib.request.Request(
-            self._template_url(name, major),
-            data=json.dumps(body).encode(),
-            headers={**self._headers(),
-                     "Content-Type": "application/json"},
-            method="PUT")
-        with self._open(req):
-            pass
-
-
-# The reference's index template (Makefile:17, applied idempotently in
-# elasticsearch_test.go:136-143): @timestamp as epoch_millis date,
-# string fields indexed as keyword.
-DEFAULT_INDEX_TEMPLATE = {
-    "template": "*",
-    "settings": {"refresh_interval": "30s", "number_of_replicas": 0},
-    "mappings": {
-        "_source": {"enabled": "true"},
-        "properties": {
-            "@timestamp": {
-                "format": "epoch_millis",
-                "ignore_malformed": True,
-                "type": "date",
-            },
-        },
-        "dynamic_templates": [
-            {"strings": {
-                "match_mapping_type": "string",
-                "mapping": {"type": "keyword", "index": True},
-            }},
-        ],
-    },
-}
-
-
-def composable_template(legacy: dict, pattern: str) -> dict:
-    """Re-shape a legacy (ES ≤7) index template body into the ES 8
-    composable form: {"index_patterns": [...], "template": {settings,
-    mappings}} (public index-template API migration)."""
-    out = {"index_patterns": [pattern], "template": {}}
-    for k in ("settings", "mappings"):
-        if k in legacy:
-            out["template"][k] = legacy[k]
-    return out
-
-
-def ensure_index_template(transport, name: str,
-                          template: dict | None = None) -> bool:
-    """Create the index template if absent (reference
-    elasticsearch_test.go:136-143: IndexTemplateExists → IndexPutTemplate;
-    operationally Makefile:17's curl). Returns True when created, False
-    when it already existed. Driver-side, once per deploy — never in the
-    per-batch path.
-
-    The default body is version-aware: the reference targets ES 7
-    legacy templates; against an ES 8+ node (version sniffed via
-    transport.server_major) the same settings/mappings are sent in the
-    composable /_index_template shape instead. An explicit `template`
-    is sent verbatim — the caller owns its shape.
-
-    `major` is part of the transport protocol: every transport's
-    template_exists/put_template take `major: int | None = None`
-    (version-agnostic backends like FileTransport may ignore it).
-    Sniff ONCE here and thread the answer through this call's
-    exists/put so body shape and URL always agree — without that, a
-    transient sniff failure here (assume-7 legacy body) followed by a
-    successful sniff inside _template_url (→ /_index_template) would
-    PUT a legacy body at the composable endpoint, a guaranteed 400.
-    The major is scoped to THIS call (no transport-state mutation), so
-    a transient sniff failure never pins an ES 8 cluster onto the
-    deprecated legacy API for the transport's lifetime: the next call
-    re-sniffs."""
-    major = getattr(transport, "server_major", lambda: None)() or 7
-
-    if template is not None:
-        body = template
-    else:
-        pattern = f"{name}-*"
-        if major >= 8:
-            body = composable_template(DEFAULT_INDEX_TEMPLATE, pattern)
-        else:
-            body = {**DEFAULT_INDEX_TEMPLATE, "template": pattern}
-    if transport.template_exists(name, major=major):
-        return False
-    transport.put_template(name, body, major=major)
-    return True
-
-
-class FileTransport:
-    """Filesystem fake with real create-only semantics: one file per doc
-    at <root>/<index>/<doc_id>.json, O_CREAT|O_EXCL ⇒ EEXIST ⇒ 409.
-    Executor-safe (works across Python worker processes) and inspectable
-    by tests. Optional fail-first injection simulates 429 overload."""
-
-    def __init__(self, root: str, fail_first: int = 0):
-        self.root = root
-        self._remaining_failures = fail_first
-
-    def bulk_create(self, actions: list[tuple[str, str, str]]) -> list[BulkItemResult]:
-        results = []
-        for index_name, doc_id, payload in actions:
-            if self._remaining_failures > 0:
-                self._remaining_failures -= 1
-                results.append(BulkItemResult(status=429))
-                continue
-            d = os.path.join(self.root, index_name)
-            os.makedirs(d, exist_ok=True)
-            try:
-                fd = os.open(os.path.join(d, f"{doc_id}.json"),
-                             os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                results.append(BulkItemResult(status=409))
-                continue
-            with os.fdopen(fd, "w") as f:
-                f.write(payload)
-            results.append(BulkItemResult(status=201))
-        return results
-
-    def ping(self) -> bool:
-        return os.path.isdir(self.root)
-
-    def _template_path(self, name: str) -> str:
-        return os.path.join(self.root, "_templates", f"{name}.json")
-
-    def template_exists(self, name: str, major: int | None = None) -> bool:
-        # `major` is protocol (see ensure_index_template); a filesystem
-        # store has no legacy-vs-composable split, so it is ignored.
-        return os.path.exists(self._template_path(name))
-
-    def put_template(self, name: str, body: dict,
-                     major: int | None = None) -> None:
-        path = self._template_path(name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(body, f)
-
 
 class NullTransport:
     """Always-succeeds transport (every doc 201). For throughput
@@ -380,9 +178,6 @@ class NullTransport:
 
     def bulk_create(self, actions: list[tuple[str, str, str]]) -> list[BulkItemResult]:
         return [BulkItemResult(status=201) for _ in actions]
-
-    def ping(self) -> bool:
-        return True
 
 
 class ElasticBulkWriter:

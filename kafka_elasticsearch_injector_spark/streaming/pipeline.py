@@ -358,77 +358,6 @@ def _build_elastic_records_schemaless(df: DataFrame, cfg: InjectorConfig,
                      F.to_json(payload_map), return_drops)
 
 
-def replay_dead_letters(spark: SparkSession, cfg: InjectorConfig,
-                        dead_letter_dir: str, transport_factory,
-                        payload_schema: T.StructType | str | None = None,
-                        registry=None, reader_schema_id: int | None = None,
-                        key_reader_schema_id: int | None = None,
-                        still_bad_dir: str | None = None) -> dict:
-    """Re-ingest quarantined records through the (presumably fixed)
-    decode→route pipeline — the REPLAY half of the dead-letter story
-    (the quarantine keeps the raw Kafka envelope exactly so this is
-    possible; the reference can only log-and-skip, consumer.go:154-159).
-
-    Typical flow: records drop because the declared PAYLOAD_SCHEMA_DDL
-    was wrong / a topic changed shape → fix the schema (or switch to
-    schemaless with ``payload_schema=None``) → replay. Create-only
-    writes make replay IDEMPOTENT: anything that already landed
-    triages as 409/already_exists, never a duplicate document.
-
-    Rows that STILL fail decode stay quarantined: written (envelope +
-    fresh reason) to `still_bad_dir` when given. Returns a summary
-    dict: rows, clean, still_dropped, plus the sink triage counters.
-    Batch job (no checkpoint involved) — executor-side bulk writes
-    through the same Arrow sink as the live pipeline.
-    """
-    from .es_sink import STATS_SCHEMA, write_arrow_factory
-
-    src = spark.read.parquet(dead_letter_dir).select(*SOURCE_COLS)
-    records = build_elastic_records(
-        src, cfg, payload_schema,
-        registry=registry, reader_schema_id=reader_schema_id,
-        key_reader_schema_id=key_reader_schema_id,
-        return_drops=True).persist()
-    try:
-        still_bad = records.filter(F.col("_drop_reason").isNotNull())
-        n_bad = still_bad.count()
-        if still_bad_dir is not None and n_bad:
-            (still_bad.select(*SOURCE_COLS, "_drop_reason")
-             .write.mode("append").parquet(still_bad_dir))
-        writer = write_arrow_factory(cfg, transport_factory)
-        stats_rows = (records.filter(F.col("_drop_reason").isNull())
-                      .select("index_name", "doc_id", "payload")
-                      .mapInArrow(writer, STATS_SCHEMA).collect())
-        totals = {k: sum(getattr(r, k) for r in stats_rows)
-                  for k in ("created", "already_exists",
-                            "bad_request", "retried")}
-        clean = sum(r.created + r.already_exists + r.bad_request
-                    for r in stats_rows)
-        return {"rows": n_bad + clean, "clean": clean,
-                "still_dropped": n_bad, **totals}
-    finally:
-        records.unpersist()
-
-
-def enrich_static(stream: DataFrame, dim: DataFrame, on: str | list,
-                  how: str = "left") -> DataFrame:
-    """Stream-static dimension enrichment: broadcast-join each
-    micro-batch against a static table.
-
-    The injector-pipeline analog of a lookup enrich stage the reference
-    lacks entirely (its only enrichment is the injected @timestamp/key
-    fields, SURVEY.md §2.1 ops 9-10). Stateless — no watermark, no
-    state store: every micro-batch joins against the dimension as
-    re-resolved for that batch, and the broadcast hint keeps it
-    map-side (no shuffle of the stream). Default LEFT join so an
-    unmatched stream row passes through with nulls instead of being
-    dropped by an enrichment gap. At scale: cache() the dimension if
-    it's expensive to produce; stream-static joins never trigger AQE,
-    so the broadcast hint (not the threshold) is what guarantees the
-    plan."""
-    return stream.join(F.broadcast(dim), on, how)
-
-
 def start_pipeline(spark: SparkSession, cfg: InjectorConfig,
                    payload_schema: T.StructType | str | None,
                    transport_factory, checkpoint_dir: str,
@@ -441,9 +370,13 @@ def start_pipeline(spark: SparkSession, cfg: InjectorConfig,
     """Wire source → transform → foreachBatch ES sink and start.
 
     `transport_factory` is a picklable zero-arg callable building the
-    bulk transport on each EXECUTOR (HttpTransport for real ES,
-    FileTransport in tests). `source_df` overrides the Kafka source for
-    offline runs (memory/rate/file sources in tests).
+    bulk transport on each EXECUTOR (HttpTransport for ES, including
+    the tests' in-process fake ES; NullTransport for engine-only
+    throughput runs). `source_df` overrides the Kafka source for
+    offline runs (memory/rate/file sources in tests). With
+    `dead_letter_dir` set, records that fail decode are appended there
+    as parquet (raw Kafka envelope + `_drop_reason`) instead of being
+    dropped.
 
     Checkpointing commits offsets only after the batch's sink call
     returns — the reference's mark-after-write loop (consumer.go:163-173)
@@ -481,7 +414,7 @@ def start_pipeline(spark: SparkSession, cfg: InjectorConfig,
             return
         # Dead-letter mode: one shared batch feeds both outputs. The
         # quarantine keeps the raw Kafka envelope + reason as parquet
-        # (auditable, replayable); clean rows go to the bulk writer.
+        # (auditable); clean rows go to the bulk writer.
         batch_df.persist()
         try:
             (batch_df.filter(F.col("_drop_reason").isNotNull())

@@ -2,9 +2,9 @@
 
 Mirrors the reference's probes server (src/probes/probes.go:65-81,
 started in cmd/injector.go:24-32, port from PROBES_PORT): liveness is
-constant-true (cmd/injector.go:26-28) and readiness is a live
-Elasticsearch ping (src/injector/service.go:23-25,
-src/elasticsearch/elasticsearch.go:142-150).
+constant-true (cmd/injector.go:26-28). Readiness is whatever `ready_fn`
+reports; the service passes `lambda: query.isActive`, where the
+reference pings Elasticsearch (src/injector/service.go:23-25).
 
 Runs a daemon-thread stdlib HTTP server next to the Spark driver — no
 executor involvement. Endpoints: /healthz (always 200) and /readiness
@@ -12,9 +12,7 @@ executor involvement. Endpoints: /healthz (always 200) and /readiness
 configurable (K8S_LIVENESS_ROUTE / K8S_READINESS_ROUTE, reference
 README.md:23-24 — probes.go:9-10 registers its mux handlers at exactly
 the env-var paths, so existing k8s manifests with custom probe routes
-port unchanged). `ready_fn` is typically `transport.ping`
-(es_sink.HttpTransport) or, once a query is running,
-`lambda: query.isActive`.
+port unchanged).
 """
 
 from __future__ import annotations

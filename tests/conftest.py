@@ -53,7 +53,6 @@ SLOW_TEST_PREFIXES = (
     "test_mixture_sample_rate_edges_and_determinism",
     # file-IO round-trips and sketch certifications: integration work
     "test_include_key_avro",
-    "test_compact_",
     "test_metrics_listener",
     # r9 additions: Spark-roundtrip property sweeps and sf-dir plan
     # gates in otherwise-fast unit modules
@@ -71,7 +70,6 @@ SLOW_TEST_PREFIXES = (
     "test_lsh_single_table",
     "test_containment_kernel",
     "test_pack_sequences_positions",
-    "test_sample_frames_fan_out",
     "test_bitmask64_overflow_raises",
     "test_minhash_plan_build_launches_no_jobs",
     "test_audio_features_signed_samples_property",
@@ -103,3 +101,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def fake_es():
+    """A live in-process fake ES node (tests/fake_es.py): (es, url)."""
+    from .fake_es import FakeES
+
+    es = FakeES()
+    url = es.start()
+    try:
+        yield es, url
+    finally:
+        es.stop()

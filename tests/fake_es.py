@@ -4,11 +4,10 @@ The closest a no-services sandbox gets to the reference's
 docker-compose e2e (docker-compose.yml:3-53, consumer_test.go:106-147):
 a LIVE HTTP endpoint with real _bulk create-only semantics — 201 on
 first insert, 409 on duplicate _id, 400 on malformed JSON payloads,
-injectable 429 throttling for retry-path coverage — plus the ping and
-_template endpoints HttpTransport uses. Tests drive the production
-HttpTransport/ElasticBulkWriter/foreachPartition path against it over
-a real socket, so the NDJSON framing, headers, and triage logic are
-exercised end-to-end rather than through the FileTransport stand-in.
+injectable 429 throttling for retry-path coverage. Tests drive the
+production HttpTransport/ElasticBulkWriter/mapInArrow sink path
+against it over a real socket, so the NDJSON framing, headers, and
+triage logic are exercised end-to-end.
 """
 
 from __future__ import annotations
@@ -43,11 +42,8 @@ class FakeES:
     write.
     """
 
-    def __init__(self, version: str = "7.17.0"):
-        self.version = version              # advertised by GET /
+    def __init__(self):
         self.docs: dict[tuple[str, str], dict] = {}
-        self.templates: dict[str, dict] = {}
-        self.template_endpoints: list[str] = []   # which API each op hit
         self.gzip_bulks = 0               # _bulk requests that arrived gzipped
         self.bulk_requests = 0
         self.throttle_bulks = 0
@@ -71,36 +67,6 @@ class FakeES:
                 self.end_headers()
                 if body:
                     self.wfile.write(body)
-
-            def _template_name(self):
-                # both template APIs, like real ES (legacy /_template is
-                # deprecated-but-alive in 8.x; /_index_template is the
-                # composable API the client must pick on 8+)
-                for prefix in ("/_index_template/", "/_template/"):
-                    if self.path.startswith(prefix):
-                        with fake._lock:
-                            fake.template_endpoints.append(prefix)
-                        return self.path.removeprefix(prefix)
-                return None
-
-            def do_GET(self):  # noqa: N802 — ping / version sniff
-                self._reply(200, json.dumps(
-                    {"version": {"number": fake.version},
-                     "tagline": "fake"}).encode())
-
-            def do_HEAD(self):  # noqa: N802 — template_exists
-                name = self._template_name()
-                self._reply(200 if name in fake.templates else 404)
-
-            def do_PUT(self):  # noqa: N802 — put_template
-                body = self.rfile.read(int(self.headers["Content-Length"]))
-                name = self._template_name()
-                if name is None:
-                    self._reply(404)
-                    return
-                with fake._lock:
-                    fake.templates[name] = json.loads(body)
-                self._reply(200)
 
             def do_POST(self):  # noqa: N802 — _bulk
                 body = self.rfile.read(int(self.headers["Content-Length"]))

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-import os
 
 import pytest
 
@@ -24,11 +23,10 @@ from kafka_elasticsearch_injector_spark.sources import (
     Codec,
     avro_to_spark_type,
     decode_confluent,
-    dict_registry,
-    drop_decode_errors,
     wire_decode,
-    wire_encode,
 )
+
+from .confluent_fixtures import dict_registry, encode_confluent, wire_encode
 
 # The reference's Avro fixture schema (src/kafka/fixtures/fixtures.go:15-24).
 FIXTURE_SCHEMA = json.dumps({
@@ -136,7 +134,7 @@ def test_decode_confluent_spark(spark):
     assert (10, True) in out
     assert (None, True) not in out                   # id=99 projected by name
     assert (99, True) in out
-    kept = drop_decode_errors(decoded)
+    kept = decoded.filter("_decode_error is null")
     assert kept.count() == 2
     # one Arrow kernel, no pandas round trip
     plan = decoded._jdf.queryExecution().executedPlan().toString()
@@ -152,12 +150,18 @@ def test_decode_confluent_spark(spark):
         (None, None, "nil message")] * 2
 
 
-def test_avro_streaming_end_to_end(spark, tmp_path):
+def test_avro_streaming_end_to_end(spark, tmp_path, fake_es):
     """Framed Avro through the full pipeline into the ES-fake sink —
     the consumer_test.go:106-147 shape with an Avro payload."""
     from kafka_elasticsearch_injector_spark.config import InjectorConfig
-    from kafka_elasticsearch_injector_spark.streaming.es_sink import FileTransport
-    from kafka_elasticsearch_injector_spark.streaming.pipeline import start_pipeline
+    from kafka_elasticsearch_injector_spark.streaming.es_sink import (
+        HttpTransport,
+    )
+    from kafka_elasticsearch_injector_spark.streaming.pipeline import (
+        start_pipeline,
+    )
+
+    es, url = fake_es
 
     ts = dt.datetime(2018, 3, 10, 14, 30, 0)
     codec = Codec(FIXTURE_SCHEMA)
@@ -165,8 +169,7 @@ def test_avro_streaming_end_to_end(spark, tmp_path):
         (b"k1", wire_encode(1, codec.encode({"id": 1})), "t", 0, 7, ts),
         (b"k2", b"\x00\x00\x00\x00\x01\xff", "t", 0, 8, ts),  # malformed
     ]
-    src_dir, es_root, ckpt = (str(tmp_path / d) for d in ("src", "es", "ckpt"))
-    os.makedirs(es_root)
+    src_dir, ckpt = (str(tmp_path / d) for d in ("src", "ckpt"))
     spark.createDataFrame(
         rows, "key BINARY, value BINARY, topic STRING, partition INT, "
               "offset LONG, timestamp TIMESTAMP"
@@ -182,33 +185,29 @@ def test_avro_streaming_end_to_end(spark, tmp_path):
     )
     q = start_pipeline(
         spark, cfg, None,
-        transport_factory=lambda root=es_root: FileTransport(root),
+        transport_factory=lambda u=url: HttpTransport(u),
         checkpoint_dir=ckpt, source_df=source,
         registry=dict_registry({1: FIXTURE_SCHEMA}), reader_schema_id=1)
     try:
         import time
         deadline = time.time() + 60
         while time.time() < deadline:
-            if os.path.isdir(os.path.join(es_root, "t-2018-03-10")):
-                if os.listdir(os.path.join(es_root, "t-2018-03-10")):
-                    break
+            if any(index == "t-2018-03-10" for index, _ in es.docs):
+                break
             time.sleep(0.5)
     finally:
         q.stop()
 
-    with open(os.path.join(es_root, "t-2018-03-10", "0:7.json")) as f:
-        doc = json.load(f)
+    doc = es.docs[("t-2018-03-10", "0:7")]
     assert doc["id"] == 1
     assert doc["@timestamp"] == int(ts.timestamp() * 1000)
     # the malformed record was side-dropped, not fatal
-    assert os.listdir(os.path.join(es_root, "t-2018-03-10")) == ["0:7.json"]
+    assert [i for index, i in es.docs if index == "t-2018-03-10"] == ["0:7"]
 
 
 def test_encode_confluent_roundtrip(spark):
     """Producer-side framing (reference op 26): struct → framed Avro →
     decode_confluent recovers the struct, id and header byte-exact."""
-    from kafka_elasticsearch_injector_spark.sources import encode_confluent
-
     registry = dict_registry({1: FIXTURE_SCHEMA})
     df = spark.createDataFrame(
         [(7, (10,)), (8, (20,)), (9, None)],
@@ -458,8 +457,6 @@ def test_logical_roundtrip_property(unscaled, scale, days, micros, tod_us):
 def test_encode_confluent_logical_roundtrip(spark):
     """Producer side: real Spark DECIMAL/DATE/TIMESTAMP columns encode
     through the logical writer and decode back identical."""
-    from kafka_elasticsearch_injector_spark.sources import encode_confluent
-
     schema = json.dumps({
         "type": "record", "name": "lt", "fields": [
             {"name": "price", "type": {"type": "bytes",

@@ -1,8 +1,9 @@
 """Dedup operator family unit tests (operators/dedup.py).
 
 Covers the pieces the oracle queries can't isolate: hint-driven physical
-strategy (no plan-time Spark jobs), the bitmask64 overflow guard, and
-simhash/minhash agreement on planted near-duplicates.
+strategy (no plan-time Spark jobs), the masked verify's vocabulary
+overflow guard, connected-component convergence, and simhash/minhash
+agreement on planted near-duplicates.
 """
 
 from __future__ import annotations
@@ -201,48 +202,13 @@ def test_small_vocab_probe_bounds(tmp_path):
 
 
 def test_bitmask64_overflow_raises(spark):
+    # A vocab_hint ≤ 64 selects minhash_lsh_pairs' masked verify; a
+    # real vocabulary of 80 distinct shingles must fail loudly in the
+    # mask fold instead of wrapping shiftleft past bit 63.
     rows = [(i, " ".join(f"w{j}" for j in range(80))) for i in range(3)]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    shingled = df.select(
-        "doc_id", F.array_distinct(F.split("text", " ")).alias("shingles"))
     with pytest.raises(Exception, match="vocabulary exceeds 64"):
-        D.bitmask64(shingled, "doc_id").collect()
-
-
-def test_simhash64_pairs_finds_planted_dups(spark):
-    df = _planted_corpus(spark)
-    planted = {(3, 100), (17, 101), (42, 102)}
-    got = {(r.doc_a, r.doc_b)
-           for r in D.simhash64_pairs(df, max_hamming=8).collect()}
-    assert planted <= got, got
-
-
-@pytest.mark.parametrize("max_hamming", [0, 1, 3, 7])
-def test_simhash64_pairs_complete_vs_bruteforce(spark, max_hamming):
-    """64-bit multi-index must equal brute force — the signed-bigint
-    segment masking (arithmetic shiftright + mask) and the bit-63 OR
-    construction are the easy-to-botch parts."""
-    rows = [(i, " ".join(f"w{(i * 7 + j * 13) % 40}" for j in range(10)))
-            for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    fps = {r.doc_id: r.simhash for r in D.simhash64(df).collect()}
-    u64 = (1 << 64) - 1
-    brute = {
-        (a, b, bin((fps[a] ^ fps[b]) & u64).count("1"))
-        for a in fps for b in fps
-        if a < b and bin((fps[a] ^ fps[b]) & u64).count("1") <= max_hamming
-    }
-    got = {(r.doc_a, r.doc_b, r.hamming)
-           for r in D.simhash64_pairs(df, max_hamming=max_hamming).collect()}
-    assert got == brute
-
-
-def test_simhash64_uses_full_width(spark):
-    # Fingerprints should populate high bits too (a 16-bit-wide result
-    # would mean the lane construction silently truncated).
-    df = _planted_corpus(spark)
-    fps = [r.simhash for r in D.simhash64(df).collect()]
-    assert any(fp < 0 or fp >= (1 << 32) for fp in fps)
+        D.minhash_lsh_pairs(df, threshold=0.0, vocab_hint=8).collect()
 
 
 def test_connected_components_converges_on_path_graph(spark):
@@ -257,17 +223,44 @@ def test_connected_components_converges_on_path_graph(spark):
 
 
 def test_connected_components_max_iter_bounds_the_loop(spark):
-    # With the iteration cap forced to 1 the loop must TERMINATE and
-    # return labels (possibly unconverged — the documented escape for
-    # pathological chain graphs); isolated nodes still self-label.
+    # With the iteration cap forced to 1 a 7-node chain cannot
+    # converge: the loop must TERMINATE and raise, naming the round
+    # count, instead of returning split components.
     nodes = spark.range(8).select(F.col("id").cast("int").alias("doc_id"))
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "doc_a int, doc_b int")
-    out = D.connected_components(nodes, edges, max_iter=1).collect()
-    assert len(out) == 8
-    got = {r.node: r.label for r in out}
-    assert got[7] == 7  # isolated node labels itself
-    assert all(lbl <= n for n, lbl in got.items())
+    with pytest.raises(RuntimeError, match="max_iter=1 rounds"):
+        D.connected_components(nodes, edges, max_iter=1)
+
+
+def _union_find_labels(n: int, edges) -> dict[int, int]:
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in range(n)}
+
+
+def test_connected_components_matches_union_find_below_max_iter(spark):
+    # Paths of diameter 18 and 3, a triangle, and isolated nodes: every
+    # component fits inside the default 20 rounds, so the labels must
+    # equal a Python union-find's (min node id per component).
+    edges = ([(i, i + 1) for i in range(18)]            # 0..18 path
+             + [(30, 25), (25, 27), (27, 22)]           # shuffled path
+             + [(40, 41), (41, 42), (42, 40)])          # triangle
+    n = 45
+    nodes = spark.range(n).select(F.col("id").cast("int").alias("doc_id"))
+    edf = spark.createDataFrame(edges, "doc_a int, doc_b int")
+    got = {r.node: r.label
+           for r in D.connected_components(nodes, edf).collect()}
+    assert got == _union_find_labels(n, edges)
 
 
 def test_word_ngrams_guard_on_short_docs(spark):

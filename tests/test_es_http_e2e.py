@@ -21,20 +21,8 @@ from kafka_elasticsearch_injector_spark.streaming.es_sink import (
 )
 from kafka_elasticsearch_injector_spark.streaming.pipeline import start_pipeline
 
-from .fake_es import FakeES
-
 TS = dt.datetime(2018, 3, 10, 14, 30, 0)
 SCHEMA = "id STRING, value INT"
-
-
-@pytest.fixture()
-def fake_es():
-    es = FakeES()
-    url = es.start()
-    try:
-        yield es, url
-    finally:
-        es.stop()
 
 
 def test_http_bulk_triage_live(fake_es):
@@ -217,13 +205,12 @@ def test_streaming_pipeline_http_throttled(spark, tmp_path, fake_es):
 
 def test_streaming_pipeline_crash_recovery_over_shared_checkpoint(
         spark, tmp_path, fake_es):
-    """Crash-recovery e2e, composing the shared-checkpoint replay of
-    test_streaming._run_batches with the live fake's failure
-    injection: the query dies MID-BATCH after a partial bulk (first
-    record lands, then the node starts failing hard), and a restart
-    over the SAME checkpoint replays the uncommitted batch — the
-    already-written doc triages as 409 and is NOT overwritten, the
-    unwritten doc lands. This is the reference's recovery story
+    """Crash-recovery e2e, composing a restart over a shared
+    checkpoint with the live fake's failure injection: the query dies
+    MID-BATCH after a partial bulk (first record lands, then the node
+    starts failing hard), and a restart over the SAME checkpoint
+    replays the uncommitted batch — the already-written doc triages as
+    409 and is NOT overwritten, the unwritten doc lands. This is the reference's recovery story
     end-to-end: offsets commit only after the sink returns
     (consumer.go:163-173), so at-least-once redelivery + create-only
     writes (elasticsearch.go:120-124) converge to effectively-once."""
@@ -453,7 +440,9 @@ def test_service_entrypoint_avro_full_stack(spark, tmp_path, fake_es):
     import datetime as dt
 
     from kafka_elasticsearch_injector_spark.__main__ import main
-    from kafka_elasticsearch_injector_spark.sources import Codec, wire_encode
+    from kafka_elasticsearch_injector_spark.sources import Codec
+
+    from .confluent_fixtures import wire_encode
 
     from .test_registry_http import FIXTURE_SCHEMA, FakeRegistry
 
@@ -552,48 +541,6 @@ def test_service_entrypoint_dead_letter_quarantine(spark, tmp_path, fake_es):
     assert dropped == {(8, "null_payload"), (9, "corrupt_payload")}
 
 
-def test_es8_template_api_version_sniffed():
-    """Against an ES 8 node (version sniffed from GET /), the template
-    bootstrap must use the composable /_index_template API with the
-    migrated body shape — the legacy /_template the reference targets
-    is deprecated on 8.x. Bulk needs no branching: the action line is
-    already typeless (_index + _id, no _type)."""
-    from kafka_elasticsearch_injector_spark.streaming.es_sink import (
-        ensure_index_template,
-    )
-
-    es = FakeES(version="8.11.3")
-    url = es.start()
-    try:
-        t = HttpTransport(url)
-        assert t.server_major() == 8
-        assert ensure_index_template(t, "my-topic") is True
-        assert ensure_index_template(t, "my-topic") is False
-        assert set(es.template_endpoints) == {"/_index_template/"}
-        body = es.templates["my-topic"]
-        assert body["index_patterns"] == ["my-topic-*"]
-        props = body["template"]["mappings"]["properties"]
-        assert props["@timestamp"]["format"] == "epoch_millis"
-        assert "settings" in body["template"]
-    finally:
-        es.stop()
-
-
-def test_es7_template_api_stays_legacy(fake_es):
-    """Reference parity on 7.x (the fake's default version): legacy
-    /_template endpoint, legacy body shape."""
-    from kafka_elasticsearch_injector_spark.streaming.es_sink import (
-        ensure_index_template,
-    )
-
-    es, url = fake_es
-    t = HttpTransport(url)
-    assert t.server_major() == 7
-    assert ensure_index_template(t, "my-topic") is True
-    assert set(es.template_endpoints) == {"/_template/"}
-    assert es.templates["my-topic"]["template"] == "my-topic-*"
-
-
 def test_gzip_bulk_bodies(fake_es):
     """ES_BULK_COMPRESS=true gzips the _bulk NDJSON (Content-Encoding:
     gzip, honored by ES's default http.compression) — same triage
@@ -637,45 +584,6 @@ def test_bulk_max_bytes_chunking(fake_es):
                                    "KAFKA_CONSUMER_RECORD_TYPE": "json",
                                    "KAFKA_TOPICS": "t"})
     assert cfg.bulk_max_bytes == 5 << 20
-
-
-def test_transient_sniff_failure_never_pins_version():
-    """A transient version-sniff failure during ensure_index_template
-    must not pin the transport onto the assumed-ES-7 legacy API for its
-    lifetime (ADVICE r11): the sniffed major is scoped to the one call
-    — URL and body stay consistent within it — and the NEXT call
-    re-sniffs and upgrades to the composable /_index_template API."""
-    from kafka_elasticsearch_injector_spark.streaming.es_sink import (
-        HttpTransport, ensure_index_template,
-    )
-
-    class FlakySniff(HttpTransport):
-        def __init__(self, url):
-            super().__init__(url)
-            self.sniffs = 0
-
-        def server_major(self):
-            self.sniffs += 1
-            if self.sniffs == 1:
-                return None  # node briefly unreachable
-            return super().server_major()
-
-    es = FakeES(version="8.11.3")
-    url = es.start()
-    try:
-        t = FlakySniff(url)
-        # Call 1: sniff fails → assume 7; URL and body agree (legacy).
-        assert ensure_index_template(t, "topic-a") is True
-        assert es.template_endpoints == ["/_template/", "/_template/"]
-        assert es.templates["topic-a"]["template"] == "topic-a-*"
-        # The failure was NOT pinned: no cached major on the transport.
-        assert t._server_major is None
-        # Call 2: sniff succeeds → composable API + migrated body.
-        assert ensure_index_template(t, "topic-b") is True
-        assert es.template_endpoints[-1] == "/_index_template/"
-        assert es.templates["topic-b"]["index_patterns"] == ["topic-b-*"]
-    finally:
-        es.stop()
 
 
 def test_metrics_port_splits_scrape_surface(spark, tmp_path, fake_es):

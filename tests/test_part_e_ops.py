@@ -141,9 +141,7 @@ def test_semdedup_stats_chunked_kernel_identical(spark):
 def test_winnow_shared_run_guarantee(spark):
     """Winnowing's core guarantee: documents sharing a token run of
     length ≥ w+k-1 share at least one fingerprint VALUE."""
-    from kafka_elasticsearch_injector_spark.operators.text import (
-        winnow_fingerprints,
-    )
+    from .winnow_view import winnow_fingerprints
 
     k, w = 3, 4
     shared = " ".join(f"s{i}" for i in range(w + k - 1))  # exactly w+k-1
@@ -160,9 +158,7 @@ def test_winnow_shared_run_guarantee(spark):
 def test_winnow_density_band(spark):
     """Selected fingerprints ≤ windows; every window contributes, so
     density sits in (0, 1] and n_fingerprints ≤ n_grams - w + 1."""
-    from kafka_elasticsearch_injector_spark.operators.text import (
-        winnow_fingerprints,
-    )
+    from .winnow_view import winnow_fingerprints
 
     text = " ".join(f"t{i % 17}" for i in range(60))
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
@@ -178,9 +174,7 @@ def test_winnow_position_overflow_fails_loudly(spark):
     rightmost-min tie-break and the sel_pos/fp decode)."""
     import pytest
 
-    from kafka_elasticsearch_injector_spark.operators.text import (
-        winnow_fingerprints,
-    )
+    from .winnow_view import winnow_fingerprints
 
     big = " ".join(str(i) for i in range(65536 + 3 - 1 + 1))  # 65536 grams
     df = spark.createDataFrame([(1, big)], "doc_id long, text string")
@@ -478,9 +472,7 @@ def test_winnow_null_text_dropped_not_crashed(spark):
     """A NULL text row rides the silent-drop path (like any doc with
     fewer than w windows); the overflow guard must not fire on the
     NULL branch of the when()."""
-    from kafka_elasticsearch_injector_spark.operators.text import (
-        winnow_fingerprints,
-    )
+    from .winnow_view import winnow_fingerprints
 
     df = spark.createDataFrame(
         [(1, None), (2, "a b c d e f g h")], "doc_id long, text string")
@@ -498,9 +490,7 @@ def test_winnow_matches_bruteforce_reference(spark):
     import hashlib
     import random
 
-    from kafka_elasticsearch_injector_spark.operators.text import (
-        winnow_fingerprints,
-    )
+    from .winnow_view import winnow_fingerprints
 
     k, w = 3, 4
     rng = random.Random(1234)

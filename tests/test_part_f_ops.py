@@ -44,9 +44,10 @@ def test_winnow_pairs_replays_fingerprint_sets(spark):
     winnow_fingerprints sets computed independently (min_shared=1,
     huge ceiling → pure set semantics)."""
     from kafka_elasticsearch_injector_spark.operators.text import (
-        winnow_fingerprints,
         winnow_pairs,
     )
+
+    from .winnow_view import winnow_fingerprints
 
     words = ["w%d" % (i % 17) for i in range(60)]
     df = _docs(spark, [

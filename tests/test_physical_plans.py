@@ -758,3 +758,59 @@ def test_minhash_calibration_carries_sigs_through_candidate_join(
         sa, sb = by_id[r["doc_a"]], by_id[r["doc_b"]]
         est = sum(1 for i in range(8) if sa[i] == sb[i]) / 8
         assert r["est_jac"] == est, (r, est)
+
+
+#: Queries that pin an expensive filter above their fill_cluster
+#: rebalance with scale.no_pushdown: (regex for the pinned Filter line,
+#: text of the pinned expression as the plan prints it).
+_PINNED_FILTERS = {
+    "q_corrupt_drop": (r"Filter .*_corrupt_record", "_corrupt_record"),
+    "q_bm25": (r"Filter .*tf_0#", "split(text"),
+    "q_curation_pipeline": (r"Filter .*\(q#\d+ >= ", "split(text"),
+}
+
+
+def _depth(line: str) -> int:
+    marker = re.search(r"[+:]- ", line)     # "+- " child, ":- " left child
+    return marker.start() if marker else -1
+
+
+def _subtree(lines: list[str], at: int) -> list[str]:
+    """The lines of the plan node at `at` and of everything below it."""
+    depth = _depth(lines[at])
+    end = next((i for i in range(at + 1, len(lines))
+                if _depth(lines[i]) <= depth), len(lines))
+    return lines[at:end]
+
+
+@pytest.mark.parametrize("name", sorted(_PINNED_FILTERS))
+def test_no_pushdown_pins_filter_above_rebalance(spark, sf_dir, name):
+    """The pinned Filter must sit above the RoundRobinPartitioning
+    exchange fill_cluster inserts, and its expression must reach
+    neither a Filter below that exchange nor the scan's
+    PushedFilters/DataFilters: pushed down, the expensive predicate
+    would run on the narrow pre-rebalance scan task."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("fill_cluster cannot fire below 2 cores — there is "
+                    "no rebalance exchange to pin above")
+    filter_re, expr = _PINNED_FILTERS[name]
+    plan = plans.queries()[name](spark, sf_dir)._jdf.queryExecution() \
+        .executedPlan().toString()
+    lines = plan.splitlines()
+    pinned = next((i for i, line in enumerate(lines)
+                   if re.search(filter_re, line)), None)
+    assert pinned is not None, f"{name}: no pinned Filter\n{plan}"
+    below = _subtree(lines, pinned)
+    rebalance = [i for i, line in enumerate(below)
+                 if "Exchange RoundRobinPartitioning" in line]
+    assert rebalance, (
+        f"{name}: pinned Filter is not above the rebalance\n{plan}")
+    for i in rebalance:
+        under = _subtree(below, i)[1:]
+        assert not any(expr in line for line in under), (
+            f"{name}: pinned expression pushed below the rebalance\n{plan}")
+    for line in lines:
+        for key in ("PushedFilters", "DataFilters"):
+            listed = re.search(key + r": \[(.*?)\]", line)
+            assert not (listed and expr in listed.group(1)), (
+                f"{name}: pinned expression in the scan's {key}\n{plan}")

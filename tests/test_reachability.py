@@ -4,8 +4,10 @@ contract, the bench CLIs, the Python worker entry or `perfbench/`.
 A module nothing reaches is deleted. A symbol is reached when a
 reachable module names it (an `ast` Name, Attribute or import) outside
 the symbol's own body, or the plan registry's `@register` decorates it;
-`__init__` re-exports do not count. Only the named `TEST_ONLY` symbols
-are exempt, and an entry that is reached again or gone fails the check.
+`__init__` re-exports do not count, and neither does a Name the
+enclosing function binds itself (a parameter, assignment target, loop
+variable, local import or nested def). Nothing is exempt: code only
+tests call lives under `tests/` or is deleted.
 Static `ast` graph, no Spark; function-level imports, `__init__`
 re-exports and parent packages all count as module edges."""
 
@@ -18,22 +20,6 @@ ROOT_SCRIPTS = ("__spark_entry__.py", "bench.py", "bench_streaming.py",
                 "pyspark_injector_worker.py")
 ROOT_MODULES = (f"{PKG}.__main__", f"{PKG}.plans")
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-
-#: Top-level symbols only tests use: producer-side fixtures, helpers
-#: of kernels the service and the queries run another way, and service
-#: extras no entrypoint calls (ROADMAP item 4).
-TEST_ONLY = frozenset({
-    # producer-side fixtures in product code
-    "encode_confluent", "wire_encode", "drop_decode_errors",
-    "dict_registry", "FileTransport",
-    # test-only helpers
-    "decode_wav", "sample_frames", "extract_features", "decode_image_dims",
-    "resize_stub", "ivf_persist", "ivf_read_cells", "ivf_train",
-    "write_bucketed", "salted_join", "compact", "bitmask64",
-    "simhash64_pairs", "winnow_fingerprints", "driver_history",
-    # service extras no entrypoint calls
-    "replay_dead_letters", "enrich_static", "ensure_index_template",
-})
 
 
 def _package_modules() -> dict[str, Path]:
@@ -78,14 +64,41 @@ def test_every_package_module_is_reached_from_an_entrypoint():
     assert not unreached, f"modules no entrypoint imports: {unreached}"
 
 
-def _names(node: ast.AST, reexport: bool):
-    for n in ast.walk(node):
-        if isinstance(n, ast.Name):
-            yield n.id
-        elif isinstance(n, ast.Attribute):
-            yield n.attr
-        elif isinstance(n, (ast.Import, ast.ImportFrom)) and not reexport:
-            yield from (a.name.rpartition(".")[2] for a in n.names)
+def _bound(fn: ast.AST) -> set[str]:
+    """Names a function or lambda binds in its own scope."""
+    a = fn.args
+    bound = {x.arg for x in (*a.posonlyargs, *a.args, *a.kwonlyargs,
+                             a.vararg, a.kwarg) if x}
+    declared, stack = set(), [fn.body] if isinstance(fn, ast.Lambda) \
+        else list(fn.body)
+    while stack:
+        n = stack.pop()
+        if isinstance(n, (ast.Global, ast.Nonlocal)):
+            declared.update(n.names)
+        elif isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Load):
+            bound.add(n.id)
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            bound.update((a.asname or a.name).partition(".")[0]
+                         for a in n.names)
+        if isinstance(n, DEFS):
+            bound.add(n.name)
+        elif not isinstance(n, ast.Lambda):
+            stack.extend(ast.iter_child_nodes(n))
+    return bound - declared
+
+
+def _names(node: ast.AST, reexport: bool, bound: frozenset = frozenset()):
+    if isinstance(node, ast.Name):
+        if node.id not in bound:
+            yield node.id
+    elif isinstance(node, ast.Attribute):
+        yield node.attr
+    elif isinstance(node, (ast.Import, ast.ImportFrom)) and not reexport:
+        yield from (a.name.rpartition(".")[2] for a in node.names)
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+        bound = bound | _bound(node)
+    for child in ast.iter_child_nodes(node):
+        yield from _names(child, reexport, bound)
 
 
 def _uses(path: Path) -> dict[str, set]:
@@ -103,26 +116,21 @@ def _uses(path: Path) -> dict[str, set]:
     return uses
 
 
-def test_every_top_level_symbol_is_reached_or_test_only():
+def test_every_top_level_symbol_is_reached():
     mods = _package_modules()
     sources = {m: mods[m] for m in _reached(mods)}
     sources.update({s[:-3]: REPO / s for s in ROOT_SCRIPTS})
     sources.update({f"perfbench.{p.stem}": p
                     for p in (REPO / "perfbench").glob("*.py")})
     uses = {m: _uses(p) for m, p in sources.items()}
-    unreached, defined = [], set()
+    unreached = []
     for mod, path in sorted(mods.items()):
         for node in ast.parse(path.read_text(), str(path)).body:
             if not isinstance(node, DEFS):
                 continue
             name = node.name
-            defined.add(name)
             reached = any(name in u for m, u in uses.items() if m != mod) \
                 or bool(uses.get(mod, {}).get(name, set()) - {name})
-            if reached == (name in TEST_ONLY):
+            if not reached:
                 unreached.append(f"{mod}.{name}")
-    stale = sorted(TEST_ONLY - defined)
-    assert not unreached, (
-        "symbols no entrypoint reaches, or TEST_ONLY entries that are "
-        f"reached: {unreached}")
-    assert not stale, f"TEST_ONLY names no longer defined: {stale}"
+    assert not unreached, f"symbols no entrypoint reaches: {unreached}"

@@ -18,11 +18,12 @@ from kafka_elasticsearch_injector_spark.sources import (
     Codec,
     SchemaRegistryError,
     decode_confluent,
-    wire_encode,
 )
 from kafka_elasticsearch_injector_spark.sources.schema_registry import (
     SchemaRegistryClient,
 )
+
+from .confluent_fixtures import wire_encode
 
 from .fake_es import start_http_server
 

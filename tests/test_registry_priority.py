@@ -23,7 +23,7 @@ import pytest
 from kafka_elasticsearch_injector_spark.plans import QUERIES, queries
 from kafka_elasticsearch_injector_spark.plans.registry import (
     DRIVER_PREFIX_CAP,
-    driver_history,
+    _scan_history,
     priority_order,
 )
 
@@ -37,7 +37,7 @@ def test_prefix_covers_unevidenced_queries():
     contain every query with no green driver row in any committed
     CORRECTNESS file (or as many as fit, if they ever exceed the cap)."""
     names = list(queries())
-    last_green, _ = driver_history()
+    last_green, _ = _scan_history(None)
     never_green = [n for n in names if n not in last_green]
     prefix = set(names[: DRIVER_PREFIX_CAP])
     missing = [n for n in never_green if n not in prefix]
@@ -70,7 +70,7 @@ def test_rotation_freshness_invariant():
     if len(rounds) < 4:
         pytest.skip("fewer than 4 driver rounds of history")
     current = rounds[-1]
-    last_green, _ = driver_history()
+    last_green, _ = _scan_history(None)
     names = list(queries())
     # Newly added queries have no driver row yet BY CONSTRUCTION; they
     # are exempt only while the rotation guarantees they verify next

@@ -1,13 +1,10 @@
-"""Scale-technique operators: salted joins/aggregations must be
-result-identical to their plain counterparts (salting is a physical
-rewrite, not a semantic one), and bucketed joins must actually drop the
-exchange from the plan."""
+"""Scale-technique operators: the salted distinct count must be
+result-identical to its plain counterpart (salting is a physical
+rewrite, not a semantic one), fill_cluster must rebalance only narrow
+inputs, and no_pushdown must keep its filter above the exchange."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from kafka_elasticsearch_injector_spark.io import table
@@ -20,33 +17,6 @@ def _rows(df, *order_cols):
     return [tuple(r) for r in df.orderBy(*order_cols).collect()]
 
 
-def test_salted_join_matches_plain_join(spark):
-    orders = table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
-    lineitem = table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity")
-    plain = orders.withColumnRenamed("o_orderkey", "k").join(
-        lineitem.withColumnRenamed("l_orderkey", "k"), "k")
-    salted = S.salted_join(
-        orders.withColumnRenamed("o_orderkey", "k"),
-        lineitem.withColumnRenamed("l_orderkey", "k"), "k", n_salts=8)
-    assert sorted(plain.columns) == sorted(salted.columns)
-    cols = sorted(plain.columns)
-    assert _rows(plain.select(cols), *cols) == _rows(salted.select(cols), *cols)
-
-
-def test_salted_join_spreads_hot_key(spark):
-    # A degenerate all-one-key input must not land on a single salt.
-    big = spark.range(1000).select(
-        F.lit(1).alias("k"), F.col("id").alias("payload"))
-    small = spark.range(3).select(
-        F.lit(1).alias("k"), F.col("id").alias("dim"))
-    joined = S.salted_join(big, small, "k", n_salts=8)
-    assert joined.count() == 3000
-    salt = F.pmod(F.hash("k", "payload"), F.lit(8))
-    n_salts_used = big.select(salt.alias("s")).distinct().count()
-    assert n_salts_used >= 6  # hot key spread across nearly all salts
-
-
 def test_salted_distinct_count_exact(spark):
     li = table(spark, SF_DIR, "lineitem")
     plain = li.groupBy("l_returnflag").agg(
@@ -54,80 +24,6 @@ def test_salted_distinct_count_exact(spark):
     salted = S.salted_distinct_count(li, "l_returnflag", "l_partkey",
                                      n_salts=8)
     assert _rows(plain, "l_returnflag") == _rows(salted, "l_returnflag")
-
-
-@pytest.fixture(scope="module")
-def bucketed_pair(spark, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("buckets"))
-    orders = table(spark, SF_DIR, "orders")
-    lineitem = table(spark, SF_DIR, "lineitem")
-    S.write_bucketed(orders, "orders_b", os.path.join(base, "o"),
-                     ["o_orderkey"], n_buckets=8)
-    S.write_bucketed(lineitem, "lineitem_b", os.path.join(base, "l"),
-                     ["l_orderkey"], n_buckets=8)
-    yield S.bucketed(spark, "orders_b"), S.bucketed(spark, "lineitem_b")
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed_pair):
-    orders_b, lineitem_b = bucketed_pair
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = orders_b.join(
-            lineitem_b, orders_b.o_orderkey == lineitem_b.l_orderkey)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_bucketed_join_matches_plain_join(spark, bucketed_pair):
-    orders_b, lineitem_b = bucketed_pair
-    plain = (
-        table(spark, SF_DIR, "orders")
-        .join(table(spark, SF_DIR, "lineitem"),
-              F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    bucketed_join = (
-        orders_b.join(lineitem_b,
-                      orders_b.o_orderkey == lineitem_b.l_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    assert _rows(plain, "o_orderpriority") == \
-        _rows(bucketed_join, "o_orderpriority")
-
-
-def test_bucketed_agg_has_no_exchange(spark, bucketed_pair):
-    # Aggregation on the bucket key is also exchange-free.
-    _, lineitem_b = bucketed_pair
-    agg = lineitem_b.groupBy("l_orderkey").agg(
-        F.sum("l_quantity").alias("q"))
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-
-
-def test_salted_join_rejects_right_and_full(spark):
-    big = spark.range(10).select(F.col("id").alias("k"))
-    small = spark.range(3).select(F.col("id").alias("k"))
-    for how in ("right", "full", "full_outer"):
-        try:
-            S.salted_join(big, small, "k", how=how)
-            raise AssertionError(f"{how} should be rejected")
-        except ValueError:
-            pass
-
-
-def test_salted_join_left_keeps_unmatched_big_rows(spark):
-    big = spark.range(10).select(F.col("id").alias("k"))
-    small = spark.range(3).select(F.col("id").alias("k"),
-                                  F.col("id").alias("dim"))
-    out = S.salted_join(big, small, "k", n_salts=4, how="left")
-    assert out.count() == 10
-    assert out.filter(F.col("dim").isNull()).count() == 7
 
 
 def test_fill_cluster_rebalances_narrow_input(spark):

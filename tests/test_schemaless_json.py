@@ -14,12 +14,11 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-import os
 
 import pytest
 
 from kafka_elasticsearch_injector_spark.config import InjectorConfig
-from kafka_elasticsearch_injector_spark.streaming.es_sink import FileTransport
+from kafka_elasticsearch_injector_spark.streaming.es_sink import HttpTransport
 from kafka_elasticsearch_injector_spark.streaming.pipeline import (
     build_elastic_records, start_pipeline,
 )
@@ -189,13 +188,12 @@ def test_schemaless_missing_routing_value_fails_batch(spark):
 # --- streaming e2e: no declared schema anywhere -----------------------------
 
 
-def test_stream_schemaless_end_to_end(spark, tmp_path):
+def test_stream_schemaless_end_to_end(spark, tmp_path, fake_es):
     """The reference's most common deployment: point the service at a
     topic, declare NOTHING about the payload. Mirrors
     test_streaming.py's e2e minus the schema."""
+    es, url = fake_es
     src_dir = str(tmp_path / "src")
-    es_root = str(tmp_path / "es")
-    os.makedirs(es_root)
     rows = [
         ("k1", json.dumps({"id": "a", "value": 1, "tags": ["x", "y"]}),
          "my-topic", 0, 7, TS),
@@ -215,7 +213,7 @@ def test_stream_schemaless_end_to_end(spark, tmp_path):
         .parquet(src_dir))
     q = start_pipeline(
         spark, cfg(), payload_schema=None,
-        transport_factory=lambda root=es_root: FileTransport(root),
+        transport_factory=lambda u=url: HttpTransport(u),
         checkpoint_dir=str(tmp_path / "ckpt"), source_df=source,
         available_now=True)
     try:
@@ -223,11 +221,7 @@ def test_stream_schemaless_end_to_end(spark, tmp_path):
     finally:
         q.stop()
 
-    docs = {}
-    for index_name in os.listdir(es_root):
-        for fn in os.listdir(os.path.join(es_root, index_name)):
-            with open(os.path.join(es_root, index_name, fn)) as f:
-                docs[(index_name, fn.removesuffix(".json"))] = json.load(f)
+    docs = es.docs
     assert set(docs) == {("my-topic-2018-03-10", "0:7"),
                          ("my-topic-2018-03-10", "1:3")}
     doc = docs[("my-topic-2018-03-10", "0:7")]

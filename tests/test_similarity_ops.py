@@ -11,8 +11,6 @@ import math
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from kafka_elasticsearch_injector_spark.operators import similarity as S
 
 DIM = 4
@@ -101,51 +99,6 @@ def test_lsh_single_table_matches_legacy_buckets(spark):
     assert a == b
 
 
-def test_ivf_train_and_search_end_to_end(spark):
-    """Production IVF path: KMeans-trained cells drive the same search
-    plan the declared (pre-labeled) query uses."""
-    rows, df = _corpus(spark)
-    cells = S.ivf_train(df.select("vec_id", "embedding"), nlist=4, seed=7)
-    assert cells.count() == 60
-    n_cells = cells.select("label").distinct().count()
-    assert 1 < n_cells <= 4
-    relabeled = df.drop("label").join(cells, "vec_id")
-    got = S.ivf_topk(relabeled, probe_ids=[0, 1, 2], k=3,
-                     nprobe=n_cells, dim=DIM)
-    by_probe: dict[int, list[int]] = {}
-    for r in sorted(got.collect(), key=lambda r: (r.probe_id, r.rn)):
-        by_probe.setdefault(r.probe_id, []).append(r.vec_id)
-    # full cell coverage ⇒ exact, regardless of the trained partition
-    assert by_probe == _brute_topk(rows, [0, 1, 2], 3)
-
-
-def test_ivf_persist_prunes_partitions(spark, tmp_path):
-    rows, emb = _corpus(spark)
-    assignments = emb.select("vec_id", "label")
-    path = str(tmp_path / "ivf_index")
-    S.ivf_persist(emb.drop("label"), assignments, path)
-
-    # Cell-pruned read: the cell predicate must become a partition
-    # filter (directory pruning), not a data filter over a full scan.
-    pruned = S.ivf_read_cells(spark, path, cells=[1, 2])
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "label" in plan
-    got = {r.label for r in pruned.select("label").distinct().collect()}
-    assert got == {1, 2}
-    assert pruned.count() == sum(1 for _, _, c in rows if c in (1, 2))
-
-    # The persisted index serves the same search results as the
-    # in-memory corpus (schema round-trips through the partition col).
-    back = S.ivf_read_cells(spark, path)
-    a = {(r.probe_id, r.vec_id, r.rn)
-         for r in S.ivf_topk(emb, [0, 1], k=3, nprobe=N_CELLS,
-                             dim=DIM).collect()}
-    b = {(r.probe_id, r.vec_id, r.rn)
-         for r in S.ivf_topk(back, [0, 1], k=3, nprobe=N_CELLS,
-                             dim=DIM).collect()}
-    assert a == b
-
-
 def test_quantize_int8_roundtrip_preserves_cosine(spark):
     import numpy as np
 
@@ -176,20 +129,6 @@ def test_quantize_int8_plan_is_projection(spark):
     plan = S.quantize_int8(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_ivf_persist_tolerates_preexisting_label_column(spark, tmp_path):
-    # The embeddings table itself carries `label`; persisting with
-    # assignments must not trip AMBIGUOUS_REFERENCE — the assignment
-    # side is authoritative.
-    rows, emb = _corpus(spark)
-    assignments = emb.select(
-        "vec_id", (F.col("label") + 1).alias("label"))
-    path = str(tmp_path / "ivf_index_relabel")
-    S.ivf_persist(emb, assignments, path)
-    back = S.ivf_read_cells(spark, path)
-    got = {(r.vec_id, r.label) for r in back.select("vec_id", "label").collect()}
-    assert got == {(r[0], r[2] + 1) for r in rows}
 
 
 def test_quantize_int8_null_and_nan_elements(spark):
