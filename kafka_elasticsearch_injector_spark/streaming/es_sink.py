@@ -2,7 +2,8 @@
 
 Re-expresses the reference's store/db layer (src/injector/store/
 store.go:23-48, src/elasticsearch/elasticsearch.go:77-162) as an
-executor-side partition writer for foreachBatch:
+executor-side Arrow writer (`write_arrow_factory`) that runs as a
+`mapInArrow` node of the service's streaming plan:
 
 - bulk `create` (insert-if-absent) — op_type create is the idempotence
   trick: at-least-once delivery × stable doc ids ⇒ effectively-once
@@ -273,12 +274,14 @@ def write_arrow_factory(cfg, transport_factory):
     The 100×-scale encode path (SURVEY §4.1 watch-item closed in r11):
     records cross JVM→Python as Arrow RecordBatches — no per-row pickle,
     no Row object construction — and each column lands as plain Python
-    strings via one C-side `to_pylist()` per batch. The bulk/triage/
-    retry protocol is the same ElasticBulkWriter the row path uses
-    (create-only + 409/400/429 triage, store.go:23-48 parity).
+    strings via one C-side `to_pylist()` per batch, fed to
+    ElasticBulkWriter (create-only + 409/400/429 triage, store.go:23-48
+    parity).
 
     Tasks yield ONE counters row each (STATS_SCHEMA); the driver action
     that runs the sink collects only those counters, never record data.
+    The writer has a side effect, so exactly one action may run it per
+    micro-batch: a second one would send every bulk again.
 
     Metrics flow back through the COLLECTED rows, not executor-side
     accumulator updates: mapInArrow is a transformation, and Spark's

@@ -9,8 +9,9 @@ rendered in Prometheus text exposition format from two sources:
   lag (maxOffsetsBehindLatest ≙ partition_delay), batch durations
   (≙ endpoint latency summary);
 - sink triage totals (created/409/400/retry): the per-task BulkStats
-  rows each micro-batch's sink action collects, summed on the driver
-  in `start_pipeline`'s foreachBatch.
+  rows of the bulk writer in the streaming plan, which
+  `start_pipeline`'s foreachBatch collects (the batch's one action) and
+  sums on the driver.
 
 All state is O(1) running totals, so a scrape costs the same after a
 week of batches as after the first.

@@ -367,7 +367,7 @@ def start_pipeline(spark: SparkSession, cfg: InjectorConfig,
                    registry=None, reader_schema_id: int | None = None,
                    key_reader_schema_id: int | None = None,
                    metrics=None, dead_letter_dir: str | None = None):
-    """Wire source → transform → foreachBatch ES sink and start.
+    """Wire source → transform → ES sink and start.
 
     `transport_factory` is a picklable zero-arg callable building the
     bulk transport on each EXECUTOR (HttpTransport for ES, including
@@ -378,9 +378,31 @@ def start_pipeline(spark: SparkSession, cfg: InjectorConfig,
     as parquet (raw Kafka envelope + `_drop_reason`) instead of being
     dropped.
 
+    The sink is part of the streaming plan: the bulk writer
+    (`mapInArrow` over index_name/doc_id/payload, one counters row per
+    task) is planned once per micro-batch with the rest of the query,
+    and `foreachBatch` only collects the counters rows and folds them
+    into `metrics`. That collect is the batch's ONE action: the writer
+    node has a side effect, so a second action over the same batch
+    would send every bulk again. Dead-letter mode cannot split one
+    planned batch into two outputs, so there `foreachBatch` persists
+    the batch, writes the quarantine, and runs the same bulk writer
+    over the clean rows.
+
     Checkpointing commits offsets only after the batch's sink call
     returns — the reference's mark-after-write loop (consumer.go:163-173)
-    for free.
+    for free. The offset and commit logs are written through Spark's
+    `FileSystemBasedCheckpointFileManager` (set on the session just
+    before `start()`): the default FileContext manager goes through
+    Hadoop's RawLocalFileSystem, which, without the native Hadoop
+    library pip PySpark lacks, forks `chmod` on every file create and
+    `readlink` on every rename — several processes per micro-batch on
+    the driver's critical path. The FileSystem manager keeps the same
+    guarantees for this query: the metadata logs still write each entry
+    to a temp file and rename it with `overwriteIfPossible=false`, the
+    service keeps no state store, and the checkpoint files are the same,
+    so a checkpoint written under either manager resumes under the
+    other.
     """
     from .es_sink import STATS_SCHEMA, write_arrow_factory
 
@@ -392,40 +414,48 @@ def start_pipeline(spark: SparkSession, cfg: InjectorConfig,
         return_drops=dead_letter_dir is not None)
     if metrics is not None:
         # metrics is an InjectorMetrics: the progress listener feeds
-        # rows/lag/latency, run_sink folds the sink triage counts.
+        # rows/lag/latency, fold() adds the sink triage counts.
         spark.streams.addListener(metrics.listener)
     writer = write_arrow_factory(cfg, transport_factory)
 
-    def run_sink(df: DataFrame) -> None:
+    def bulk(df: DataFrame) -> DataFrame:
         # Executor-side bulk writes over Arrow batches (no per-row
-        # pickle, no Row objects); the driver action collects ONE
-        # counters row per task — never record data. Metrics fold in
-        # HERE, on the driver, from the collected rows: collect()
-        # deduplicates task retries, where an executor-side update
-        # inside a transformation would double-count.
-        rows = (df.select("index_name", "doc_id", "payload")
-                .mapInArrow(writer, STATS_SCHEMA).collect())
+        # pickle, no Row objects); ONE counters row per task comes
+        # out — never record data.
+        return (df.select("index_name", "doc_id", "payload")
+                .mapInArrow(writer, STATS_SCHEMA))
+
+    def fold(rows) -> None:
+        # Metrics fold in HERE, on the driver, from collected rows:
+        # collect() deduplicates task retries, where an executor-side
+        # update inside a transformation would double-count.
         if metrics is not None:
             metrics.add_sink_rows(rows)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if dead_letter_dir is None:
-            run_sink(batch_df)
-            return
-        # Dead-letter mode: one shared batch feeds both outputs. The
-        # quarantine keeps the raw Kafka envelope + reason as parquet
-        # (auditable); clean rows go to the bulk writer.
-        batch_df.persist()
-        try:
-            (batch_df.filter(F.col("_drop_reason").isNotNull())
-             .select(*SOURCE_COLS, "_drop_reason")
-             .write.mode("append").parquet(dead_letter_dir))
-            run_sink(batch_df.filter(F.col("_drop_reason").isNull()))
-        finally:
-            batch_df.unpersist()
+    if dead_letter_dir is None:
+        planned = bulk(records)
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            fold(batch_df.collect())
+    else:
+        planned = records
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            # One shared batch feeds both outputs. The quarantine keeps
+            # the raw Kafka envelope + reason as parquet (auditable);
+            # clean rows go to the bulk writer.
+            batch_df.persist()
+            try:
+                (batch_df.filter(F.col("_drop_reason").isNotNull())
+                 .select(*SOURCE_COLS, "_drop_reason")
+                 .write.mode("append").parquet(dead_letter_dir))
+                fold(bulk(batch_df.filter(F.col("_drop_reason").isNull()))
+                     .collect())
+            finally:
+                batch_df.unpersist()
 
     stream = (
-        records.writeStream
+        planned.writeStream
         .foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -435,4 +465,7 @@ def start_pipeline(spark: SparkSession, cfg: InjectorConfig,
         stream = stream.trigger(availableNow=True)
     else:
         stream = stream.trigger(processingTime=f"{trigger_seconds} seconds")
+    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+                   "org.apache.spark.sql.execution.streaming.checkpointing."
+                   "FileSystemBasedCheckpointFileManager")
     return stream.start()

@@ -268,6 +268,90 @@ def test_streaming_pipeline_crash_recovery_over_shared_checkpoint(
     assert doc["id"] == "b" and doc["value"] == 2
 
 
+def test_streaming_pipeline_resumes_file_context_checkpoint(
+        spark, tmp_path, fake_es):
+    """A checkpoint written the way the previous release ran the
+    service resumes under `start_pipeline`: the first pass runs with
+    the checkpoint-manager conf unset (Spark's FileContext manager) and
+    the bulk writer run as a second query inside foreachBatch. Records
+    appended afterwards are the only ones the restart sends — no 409 —
+    and it adds the same checkpoint files a FileContext pass would."""
+    from kafka_elasticsearch_injector_spark.streaming.es_sink import (
+        STATS_SCHEMA, write_arrow_factory,
+    )
+    from kafka_elasticsearch_injector_spark.streaming.metrics import (
+        InjectorMetrics,
+    )
+    from kafka_elasticsearch_injector_spark.streaming.pipeline import (
+        build_elastic_records,
+    )
+
+    from .test_checkpoint_manager import KEY, PACKAGE, manager_class
+
+    es, url = fake_es
+    src_dir = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    cfg = InjectorConfig(record_type="json", topics=("my-topic",))
+    kafka_schema = ("key STRING, value STRING, topic STRING, "
+                    "partition INT, offset LONG, timestamp TIMESTAMP")
+
+    def append(offsets):
+        spark.createDataFrame(
+            [(f"k{o}", json.dumps({"id": f"r{o}", "value": o}),
+              "my-topic", 0, o, TS) for o in offsets],
+            kafka_schema).coalesce(1).write.mode("append").parquet(src_dir)
+
+    def source():
+        return spark.readStream.schema(kafka_schema).parquet(src_dir)
+
+    def files():
+        return {os.path.relpath(os.path.join(root, name), ckpt)
+                for root, _, names in os.walk(ckpt) for name in names}
+
+    def doc_ids():
+        return {doc_id for _, doc_id in es.docs}
+
+    append(range(3))
+    spark.conf.unset(KEY)
+    assert manager_class(spark, ckpt) == \
+        f"{PACKAGE}.FileContextBasedCheckpointFileManager"
+    writer = write_arrow_factory(cfg, lambda u=url: HttpTransport(u))
+    q = (build_elastic_records(source(), cfg, SCHEMA).writeStream
+         .foreachBatch(lambda df, _: df.select("index_name", "doc_id",
+                                               "payload")
+                       .mapInArrow(writer, STATS_SCHEMA).collect())
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    try:
+        assert q.awaitTermination(120), "first pass timed out"
+    finally:
+        q.stop()
+    assert doc_ids() == {"0:0", "0:1", "0:2"}
+    first_files, first_bulks = files(), es.bulk_requests
+    for key in es.docs:         # a re-sent doc would 409 against these
+        es.docs[key] = {"id": "sentinel"}
+
+    append(range(3, 5))
+    metrics = InjectorMetrics()
+    q = start_pipeline(
+        spark, cfg, SCHEMA,
+        transport_factory=lambda u=url: HttpTransport(u),
+        checkpoint_dir=ckpt, source_df=source(), available_now=True,
+        metrics=metrics)
+    try:
+        assert q.awaitTermination(120), "restart pass timed out"
+    finally:
+        q.stop()
+    assert doc_ids() == {"0:0", "0:1", "0:2", "0:3", "0:4"}
+    assert es.bulk_requests == first_bulks + 1
+    assert (metrics.sink.created, metrics.sink.already_exists) == (2, 0)
+    assert sum(v == {"id": "sentinel"} for v in es.docs.values()) == 3
+    assert files() - first_files == {
+        os.path.join(log, name) for log in ("offsets", "commits", "sources/0")
+        for name in ("1", ".1.crc")}
+    assert first_files <= files()
+
+
 def test_service_entrypoint_end_to_end(spark, tmp_path, fake_es):
     """The `python -m kafka_elasticsearch_injector_spark` service path:
     env-var config (the reference's container contract), production

@@ -189,6 +189,69 @@ def test_metrics_endpoint_scrape_during_run(spark, tmp_path, fake_es):
         "kafka_consumer_endpoint_latency_histogram_seconds_count") >= 1
 
 
+def _write_arrow_nodes(plan) -> int:
+    """MapInArrow nodes running `write_arrow` in a physical plan."""
+    found = int(plan.getClass().getSimpleName() == "MapInArrowExec"
+                and plan.func().name() == "write_arrow")
+    children = plan.children()
+    return found + sum(_write_arrow_nodes(children.apply(i))
+                       for i in range(children.size()))
+
+
+def test_sink_is_planned_in_the_stream_and_runs_once_per_batch(
+        spark, tmp_path, fake_es):
+    """The bulk writer is a node of the streaming plan, and the one
+    action foreachBatch runs executes it once per micro-batch: every
+    partition of every batch sends exactly ceil(rows / batch_size)
+    bulks, and /metrics counts exactly the stored docs."""
+    from kafka_elasticsearch_injector_spark.streaming.metrics import (
+        InjectorMetrics,
+    )
+
+    es, url = fake_es
+    src_dir = str(tmp_path / "src")
+    files, rows_per_file, batch_size = 6, 5, 2
+    for f in range(files):             # one file = one source partition
+        spark.createDataFrame(
+            [(f"k{i}", json.dumps({"id": f"f{f}r{i}", "value": i}),
+              "my-topic", f % 2, 100 * f + i, TS)
+             for i in range(rows_per_file)],
+            "key STRING, value STRING, topic STRING, partition INT, "
+            "offset LONG, timestamp TIMESTAMP",
+        ).coalesce(1).write.mode("append").parquet(src_dir)
+
+    cfg = InjectorConfig(record_type="json", topics=("my-topic",),
+                         batch_size=batch_size)
+    metrics = InjectorMetrics()
+    source = (
+        spark.readStream.schema(
+            "key STRING, value STRING, topic STRING, partition INT, "
+            "offset LONG, timestamp TIMESTAMP")
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src_dir)
+    )
+    q = start_pipeline(
+        spark, cfg, SCHEMA,
+        transport_factory=lambda u=url: HttpTransport(u),
+        checkpoint_dir=str(tmp_path / "ckpt"), source_df=source,
+        available_now=True, metrics=metrics)
+    try:
+        assert q.awaitTermination(120), "stream pass timed out"
+    finally:
+        q.stop()
+
+    batches = [p for p in q.recentProgress if p["numInputRows"]]
+    assert [p["numInputRows"] for p in batches] == [2 * rows_per_file] * 3
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+    assert _write_arrow_nodes(plan) == 1
+    bulks_per_partition = -(-rows_per_file // batch_size)
+    assert es.bulk_requests == len(batches) * 2 * bulks_per_partition
+    assert len(es.docs) == files * rows_per_file
+    created = [line for line in metrics.prometheus_text().splitlines()
+               if line.startswith("elasticsearch_documents_created ")]
+    assert created == [f"elasticsearch_documents_created {len(es.docs)}"]
+
+
 def test_create_only_dedup_and_triage(fake_es):
     """elasticsearch_test.go:70-133 semantics: duplicate id → 409 counted
     AlreadyExists, count stays 1; 429 retried with backoff."""
