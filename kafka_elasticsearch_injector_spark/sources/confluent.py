@@ -9,14 +9,14 @@ schema id, bytes 5.. = Avro binary body.
 Decode strategy (SURVEY.md §4.2 custom work #1):
 - the READER schema is resolved at plan time (one registry fetch → a
   constant of the query, the Catalyst analog of the reference's
-  sync.Map schema cache) and compiled to the output StructType;
+  sync.Map schema cache) and mapped to the output StructType;
 - the hot path is an Arrow kernel (`mapInArrow`, no pandas round
-  trip): per executor, a codec cache keyed by writer schema id
-  (exactly encode_decode.go:123-134) decodes each record, and a
-  conformer compiled once from the reader struct projects it by field
-  name — so multi-schema-id topics work without replanning; the
-  conformed values become the Arrow struct column in one `pa.array`
-  call and the input columns pass through untouched;
+  trip): per executor, one reader per writer schema id (exactly
+  encode_decode.go:123-134) is compiled against the reader struct by
+  `avro_codec.compile_reader`, so each record is decoded and resolved
+  by field name in one pass and multi-schema-id topics work without
+  replanning; the resolved values become the Arrow struct column in one
+  `pa.array` call and the input columns pass through untouched;
 - decode failures do NOT fail the batch: the record's `decoded` is
   null and the error lands in `_decode_error` (malformed side-drop,
   consumer.go:154-159 — the pipeline filters on `_decode_error IS
@@ -25,20 +25,16 @@ Decode strategy (SURVEY.md §4.2 custom work #1):
 
 from __future__ import annotations
 
-import datetime as dt
-import decimal
 import struct
-from collections.abc import Callable, Iterator
-from decimal import Decimal
+from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from .avro_codec import AvroError, Codec, logical_type, parse_schema
+from .avro_codec import AvroError, compile_reader, logical_type, parse_schema
 from .schema_registry import SchemaRegistryClient
 
 WIRE_HEADER_LEN = 5
@@ -73,8 +69,8 @@ def avro_to_spark_type(schema) -> T.DataType:
             "float": T.FloatType(), "double": T.DoubleType(),
             "bytes": T.BinaryType(), "string": T.StringType(),
         }[schema]
-    # Logical types (Avro 1.11 spec): the codec surfaces logical Python
-    # values (avro_codec._logical_reader), so the Spark type must be the
+    # Logical types (Avro 1.11 spec): the reader surfaces logical Python
+    # values (avro_codec._LOGICAL), so the Spark type must be the
     # logical one — a decimal field silently arriving as BinaryType was
     # exactly the goavro-parity gap this closes (encode_decode.go:52-62).
     logical = logical_type(schema)
@@ -114,140 +110,6 @@ def avro_to_spark_type(schema) -> T.DataType:
     raise AvroError(f"unsupported Avro type {t!r}")
 
 
-def _misfit(value: Any, dtype: T.DataType) -> AvroError:
-    return AvroError(
-        f"writer value of type {type(value).__name__} does not fit "
-        f"reader column type {dtype.simpleString()} (logical-type "
-        "divergence between writer and reader schemas?)")
-
-
-def compile_conformer(dtype: T.DataType,
-                      session_tz: str | None = None) -> Callable[[Any], Any]:
-    """Compile the projection of decoded values onto the reader type.
-
-    Built once per reader type, like the codec's readers
-    (avro_codec._make_reader): the returned closure does no schema
-    interpretation per record. Its contract:
-
-    - structs project by field name — missing fields → null, extra
-      fields dropped (name-based resolution; full Avro aliases/defaults
-      are out of scope and documented so); a non-dict value → null;
-    - atomic values are TYPE-CHECKED against the reader column. Decode
-      surfaces values per the WRITER schema (incl. its logical types),
-      so a writer/reader logical-type divergence (say the producer adds
-      ``timestamp-millis`` to a long the pinned reader still declares
-      plain) would otherwise sail through here and fail the Arrow
-      conversion of the whole batch instead of side-dropping the record
-      (consumer.go:154-159 parity). The AvroError raised here is caught
-      per record;
-    - `bool` is not an int; an int is accepted for a double;
-    - decimals are quantized to the reader's scale with Inexact and
-      InvalidOperation trapped under prec = reader precision: a
-      LOSSLESS rescale (writer scale differs but the extra digits are
-      zeros) passes, while lossy rescale, precision overflow and NaN
-      raise;
-    - with `session_tz` set, a naive datetime bound for a TimestampType
-      column is a wall-clock time in that zone and comes back as the
-      aware-UTC instant Spark's pandas conversion gives it
-      (``pd.Timestamp(v).tz_localize(session_tz)``); a wall-clock time
-      the zone skips or repeats raises. Without it the value stays
-      naive and the caller's conversion decides.
-    """
-    if isinstance(dtype, T.StructType):
-        fields = [(f.name, compile_conformer(f.dataType, session_tz))
-                  for f in dtype.fields]
-
-        def conform_struct(value):
-            if not isinstance(value, dict):
-                return None
-            get = value.get
-            return {name: conform(get(name)) for name, conform in fields}
-
-        return conform_struct
-    if isinstance(dtype, T.ArrayType):
-        conform_item = compile_conformer(dtype.elementType, session_tz)
-
-        def conform_array(value):
-            if value is None:
-                return None
-            return [conform_item(v) for v in value]
-
-        return conform_array
-    if isinstance(dtype, T.MapType):
-        conform_value = compile_conformer(dtype.valueType, session_tz)
-
-        def conform_map(value):
-            if value is None:
-                return None
-            return {k: conform_value(v) for k, v in value.items()}
-
-        return conform_map
-    if isinstance(dtype, T.DecimalType):
-        ctx = decimal.Context(
-            prec=dtype.precision,
-            traps=[decimal.Inexact, decimal.InvalidOperation])
-        quantum = Decimal(1).scaleb(-dtype.scale)
-
-        def conform_decimal(value):
-            if value is None:
-                return None
-            # quiet NaN quantizes to NaN, so finiteness is checked first
-            if isinstance(value, Decimal) and value.is_finite():
-                try:
-                    return ctx.quantize(value, quantum)
-                except decimal.DecimalException:
-                    pass
-            raise _misfit(value, dtype)
-
-        return conform_decimal
-    if isinstance(dtype, T.TimestampType) and session_tz is not None:
-
-        def conform_instant(value):
-            if value is None:
-                return None
-            if not isinstance(value, dt.datetime):
-                raise _misfit(value, dtype)
-            if value.tzinfo is None:
-                # returned in UTC: pyarrow binds an aware datetime to
-                # timestamp[tz=UTC] by its wall clock, ignoring its zone
-                return pd.Timestamp(value).tz_localize(
-                    session_tz).tz_convert("UTC").to_pydatetime()
-            return value
-
-        return conform_instant
-
-    # (the exact type that passes at once, the full gate for the rest)
-    if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType,
-                          T.ByteType)):
-        exact, accept = int, (lambda v: isinstance(v, int)
-                              and not isinstance(v, bool))
-    elif isinstance(dtype, (T.DoubleType, T.FloatType)):
-        exact, accept = float, (lambda v: isinstance(v, (int, float))
-                                and not isinstance(v, bool))
-    elif isinstance(dtype, T.BooleanType):
-        exact, accept = bool, (lambda v: isinstance(v, bool))
-    elif isinstance(dtype, T.StringType):
-        exact, accept = str, (lambda v: isinstance(v, str))
-    elif isinstance(dtype, T.BinaryType):
-        exact, accept = bytes, (lambda v: isinstance(v, (bytes, bytearray)))
-    elif isinstance(dtype, T.DateType):
-        exact, accept = dt.date, (lambda v: isinstance(v, dt.date)
-                                  and not isinstance(v, dt.datetime))
-    elif isinstance(dtype, T.TimeType):
-        exact, accept = dt.time, (lambda v: isinstance(v, dt.time))
-    elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        exact, accept = dt.datetime, (lambda v: isinstance(v, dt.datetime))
-    else:
-        return lambda value: value
-
-    def conform_atomic(value):
-        if value is None or type(value) is exact or accept(value):
-            return value
-        raise _misfit(value, dtype)
-
-    return conform_atomic
-
-
 def decode_confluent(
     df: DataFrame,
     registry: SchemaRegistryClient,
@@ -263,7 +125,10 @@ def decode_confluent(
     streaming DataFrames alike — mapInArrow is a narrow, shuffle-free
     map, so source parallelism is preserved end to end. The input
     columns pass through as the Arrow arrays they arrived in; only the
-    payload column is read into Python.
+    payload column is read into Python. Each record costs one
+    `wire_decode` and one pass of the reader compiled for its writer
+    schema id (`avro_codec.compile_reader`: resolution rules, misfit
+    side-drops); each batch costs one `pa.array` per output column.
     """
     reader_json = registry.get_schema(reader_schema_id)
     reader_type = avro_to_spark_type(reader_json)
@@ -278,26 +143,28 @@ def decode_confluent(
             T.StructField(error_col, T.StringType(), True),
         ])
     decoded_type = to_arrow_type(reader_type)
-    conform = compile_conformer(
-        reader_type, df.sparkSession.conf.get("spark.sql.session.timeZone"))
+    session_tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
 
     def decode_batches(batches: Iterator[pa.RecordBatch]
                        ) -> Iterator[pa.RecordBatch]:
-        codecs: dict[int, Codec] = {}  # per-worker, keyed by writer id
+        readers: dict[int, Any] = {}  # per-worker, keyed by writer id
 
         def decode_one(raw) -> tuple[Any, str | None]:
             if raw is None:
                 return None, "nil message"  # ErrNilMessage path
             try:
                 schema_id, body = wire_decode(raw)
-                codec = codecs.get(schema_id)
-                if codec is None:
-                    codec = Codec(registry.get_schema(schema_id))
-                    codecs[schema_id] = codec
-                value = codec.decode(body)
-                if not isinstance(value, dict):
+                read = readers.get(schema_id)
+                if read is None:
+                    read = readers[schema_id] = compile_reader(
+                        registry.get_schema(schema_id), reader_type,
+                        session_tz)
+                value, pos = read(memoryview(body), 0)
+                if pos != len(body):
+                    raise AvroError(f"{len(body) - pos} trailing bytes")
+                if value is None:  # a writer value that is not a record
                     return None, "non-record payload"
-                return conform(value), None
+                return value, None
             except Exception as ex:  # noqa: BLE001 — side-drop, not fail
                 return None, f"{type(ex).__name__}: {ex}"
 

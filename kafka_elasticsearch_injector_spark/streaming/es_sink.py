@@ -192,7 +192,7 @@ class ElasticBulkWriter:
     row-count behavior (store.go:23-48 batches by count)."""
 
     def __init__(self, transport, batch_size: int = 100,
-                 backoff_s: float = 1.0, max_retries: int | None = 10,
+                 backoff_s: float = 1.0, max_retries: int = 10,
                  max_bytes: int | None = None):
         self.transport = transport
         self.batch_size = batch_size
@@ -252,7 +252,7 @@ class ElasticBulkWriter:
             if not retry:
                 return
             attempts += 1
-            if self.max_retries is not None and attempts > self.max_retries:
+            if attempts > self.max_retries:
                 raise RuntimeError(
                     f"bulk write failed after {attempts} attempts for "
                     f"{len(retry)} records"
@@ -292,7 +292,7 @@ def write_arrow_factory(cfg, transport_factory):
     """
     batch_size = cfg.batch_size
     backoff_s = cfg.bulk_backoff_s
-    max_retries = cfg.max_retries if cfg.max_retries is not None else 10
+    max_retries = cfg.max_retries
     max_bytes = cfg.bulk_max_bytes
 
     def write_arrow(batches: Iterator) -> Iterator:

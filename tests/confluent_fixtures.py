@@ -17,11 +17,12 @@ from pyspark.sql import types as T
 
 from kafka_elasticsearch_injector_spark.sources import (
     AvroError,
-    Codec,
     SchemaRegistryClient,
     SchemaRegistryError,
     avro_to_spark_type,
 )
+
+from .avro_writer import Codec
 
 
 def _header(schema_id: int) -> bytes:

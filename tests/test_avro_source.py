@@ -20,12 +20,12 @@ import pytest
 
 from kafka_elasticsearch_injector_spark.sources import (
     AvroError,
-    Codec,
     avro_to_spark_type,
     decode_confluent,
     wire_decode,
 )
 
+from .avro_writer import Codec
 from .confluent_fixtures import dict_registry, encode_confluent, wire_encode
 
 # The reference's Avro fixture schema (src/kafka/fixtures/fixtures.go:15-24).
@@ -685,3 +685,143 @@ def test_local_timestamp_aware_writer_keeps_wall_clock():
         {"type": "long", "logicalType": "local-timestamp-micros"}))
     assert us_codec.decode(us_codec.encode(aware)) == \
         dt.datetime(2021, 6, 1, 12, 30, 0)
+
+
+# --- poison integers and schema evolution (one resolver per writer id) -----
+
+_LONG_REC = json.dumps({"type": "record", "name": "n", "fields": [
+    {"name": "v", "type": "long"}]})
+_INT_REC = json.dumps({"type": "record", "name": "n", "fields": [
+    {"name": "v", "type": "int"}]})
+
+
+@pytest.mark.parametrize("reader, writer, poison", [
+    # 13-byte varint: 1.9e25 overflows an Arrow int64
+    (_LONG_REC, _LONG_REC, b"\xfe" * 12 + b"\x01"),
+    # an Avro int holding 2^40 overflows the reader's int32 column
+    (_INT_REC, _INT_REC, Codec(_LONG_REC).encode({"v": 2**40})),
+    # a writer long read into a reader int column
+    (_INT_REC, _LONG_REC, Codec(_LONG_REC).encode({"v": 2**40})),
+], ids=["varint-13-bytes", "int-2^40", "long-into-int"])
+def test_poison_integer_side_drops_one_record(spark, reader, writer, poison):
+    """An integer no Arrow column can hold side-drops its own record; the
+    micro-batch around it still decodes (consumer.go:154-159)."""
+    registry = dict_registry({1: reader, 2: writer})
+    good = Codec(writer)
+    rows = [(1, wire_encode(2, good.encode({"v": 7}))),
+            (2, wire_encode(2, poison)),
+            (3, wire_encode(2, good.encode({"v": -8})))]
+    out = decode_confluent(
+        spark.createDataFrame(rows, "k int, value binary"), registry,
+        reader_schema_id=1)
+    got = sorted((r.k, r.v, r.err) for r in out.selectExpr(
+        "k", "decoded.v as v", "_decode_error as err").collect())
+    assert [(k, v) for k, v, _ in got] == [(1, 7), (2, None), (3, -8)]
+    assert [k for k, _, err in got if err is not None] == [2]
+    assert got[1][2].startswith("AvroError: ")
+
+
+_EVOLVED_READER = json.dumps({"type": "record", "name": "ev", "fields": [
+    {"name": "id", "type": "long"},
+    {"name": "score", "type": "double"},
+    {"name": "name", "type": "string"},
+    {"name": "opt", "type": ["null", "long"]},
+    {"name": "inner", "type": {"type": "record", "name": "in", "fields": [
+        {"name": "a", "type": "int"}]}},
+    {"name": "added", "type": ["null", "string"]},
+    {"name": "tail", "type": "string"},
+]})
+# fields reordered; int → long and int → double; [null, X] → X and
+# X → [null, X]; writer-only array, map and nested record fields; a
+# nested record field the reader's record drops
+_EVOLVED_WRITER = json.dumps({"type": "record", "name": "ev", "fields": [
+    {"name": "tail", "type": "string"},
+    {"name": "tags", "type": {"type": "array", "items": "string"}},
+    {"name": "inner", "type": {"type": "record", "name": "in", "fields": [
+        {"name": "dropped", "type": {"type": "map", "values": "long"}},
+        {"name": "a", "type": "int"}]}},
+    {"name": "attrs", "type": {"type": "map", "values": {
+        "type": "array", "items": "long"}}},
+    {"name": "name", "type": ["null", "string"]},
+    {"name": "opt", "type": "long"},
+    {"name": "gone", "type": {"type": "record", "name": "g", "fields": [
+        {"name": "x", "type": "double"}, {"name": "y", "type": "bytes"}]}},
+    {"name": "score", "type": "int"},
+    {"name": "id", "type": "int"},
+]})
+
+
+def test_schema_evolution_resolves_by_name(spark):
+    registry = dict_registry({1: _EVOLVED_READER, 2: _EVOLVED_WRITER})
+    codec = Codec(_EVOLVED_WRITER)
+    rows = [(wire_encode(2, codec.encode({
+        "tail": "t1", "tags": ["a", "bc"],
+        "inner": {"dropped": {"k": 1, "l": -2}, "a": 5},
+        "attrs": {"x": [1, 2, 3], "y": []}, "name": "n1", "opt": -4,
+        "gone": {"x": 0.5, "y": b"\x00\x01"}, "score": 3, "id": 2**31 - 1,
+    })),), (wire_encode(2, codec.encode({
+        "tail": "", "tags": [], "inner": {"dropped": {}, "a": -1},
+        "attrs": {}, "name": None, "opt": 0,
+        "gone": {"x": -1.0, "y": b""}, "score": -2, "id": -9,
+    })),)]
+    out = decode_confluent(spark.createDataFrame(rows, "value binary"),
+                           registry, reader_schema_id=1)
+    got = sorted((tuple(r.decoded) if r.decoded else None, r._decode_error)
+                 for r in out.collect())
+    assert got == [
+        ((-9, -2.0, None, 0, (-1,), None, ""), None),
+        ((2**31 - 1, 3.0, "n1", -4, (5,), None, "t1"), None),
+    ]
+
+
+def test_container_kind_misfits_side_drop(spark):
+    """A writer container of another kind than the reader column side-drops
+    the record (a string read as an array, a record or an array read as a
+    map); a writer map read as a struct is null, like any non-record."""
+    reader = json.dumps({"type": "record", "name": "c", "fields": [
+        {"name": "s", "type": ["null", {"type": "array", "items": "string"}]},
+        {"name": "m", "type": ["null", {"type": "map", "values": "long"}]},
+        {"name": "r", "type": ["null", {"type": "record", "name": "rr",
+                                        "fields": [{"name": "a",
+                                                    "type": "long"}]}]}]})
+
+    def writer(s, m, r):
+        return json.dumps({"type": "record", "name": "c", "fields": [
+            {"name": "s", "type": s}, {"name": "m", "type": m},
+            {"name": "r", "type": r}]})
+
+    arr = {"type": "array", "items": "string"}
+    lmap = {"type": "map", "values": "long"}
+    rec = {"type": "record", "name": "rr", "fields": [
+        {"name": "a", "type": "long"}]}
+    schemas = {
+        2: writer(arr, lmap, rec),
+        3: writer("string", lmap, rec),                   # string → array
+        4: writer(arr, rec, rec),                         # record → map
+        5: writer(arr, {"type": "array", "items": "long"}, rec),  # array → map
+        6: writer(arr, lmap, lmap),                       # map → struct
+    }
+    values = {
+        2: {"s": ["x"], "m": {"k": 1}, "r": {"a": 2}},
+        3: {"s": "xy", "m": {"k": 1}, "r": {"a": 2}},
+        4: {"s": ["x"], "m": {"a": 1}, "r": {"a": 2}},
+        5: {"s": ["x"], "m": [1], "r": {"a": 2}},
+        6: {"s": ["x"], "m": {"k": 1}, "r": {"a": 2}},
+    }
+    registry = dict_registry({1: reader, **schemas})
+    rows = [(i, wire_encode(i, Codec(schemas[i]).encode(values[i])))
+            for i in schemas]
+    out = decode_confluent(spark.createDataFrame(rows, "i int, value binary"),
+                           registry, reader_schema_id=1)
+    got = {r.i: (r.decoded and (r.decoded.s, r.decoded.m,
+                                r.decoded.r and tuple(r.decoded.r)),
+                 r._decode_error) for r in out.collect()}
+    assert got[2] == ((["x"], {"k": 1}, (2,)), None)
+    assert got[6] == ((["x"], {"k": 1}, None), None)
+    for i, (value_type, column) in {3: ("str", "array<string>"),
+                                    4: ("dict", "map<string,bigint>"),
+                                    5: ("list", "map<string,bigint>")}.items():
+        assert got[i] == (None, (
+            f"AvroError: writer value of type {value_type} does not fit "
+            f"reader column type {column} (logical-type divergence between "
+            "writer and reader schemas?)"))

@@ -524,8 +524,8 @@ def test_service_entrypoint_avro_full_stack(spark, tmp_path, fake_es):
     import datetime as dt
 
     from kafka_elasticsearch_injector_spark.__main__ import main
-    from kafka_elasticsearch_injector_spark.sources import Codec
 
+    from .avro_writer import Codec
     from .confluent_fixtures import wire_encode
 
     from .test_registry_http import FIXTURE_SCHEMA, FakeRegistry

@@ -149,8 +149,7 @@ def test_include_key_undecodable_key_fails_record(spark):
 def test_include_key_avro_decodes_key_record(spark):
     # Avro keys go through the same Confluent decode path as values
     # (encode_decode.go:66-72, nativeFromBinary on msg.Key).
-    from kafka_elasticsearch_injector_spark.sources import Codec
-
+    from .avro_writer import Codec
     from .confluent_fixtures import dict_registry, wire_encode
 
     val_schema = json.dumps({
@@ -467,8 +466,7 @@ def test_avro_time_logical_payload_serializes(spark):
     serialize. The payload builder must cast TIME (at any nesting
     depth) to its ISO string instead of crashing the batch
     (pipeline._json_safe)."""
-    from kafka_elasticsearch_injector_spark.sources import Codec
-
+    from .avro_writer import Codec
     from .confluent_fixtures import dict_registry, wire_encode
 
     val_schema = json.dumps({
@@ -545,8 +543,7 @@ def test_avro_time_in_key_schema_serializes(spark):
     """r12 review: the DECODED KEY struct takes the same TIME→string
     JSON guard as payload fields — a time-millis field in the key
     schema must serialize, not crash the batch at to_json."""
-    from kafka_elasticsearch_injector_spark.sources import Codec
-
+    from .avro_writer import Codec
     from .confluent_fixtures import dict_registry, wire_encode
 
     val_schema = json.dumps({

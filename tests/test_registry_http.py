@@ -15,13 +15,14 @@ from http.server import BaseHTTPRequestHandler
 import pytest
 
 from kafka_elasticsearch_injector_spark.sources import (
-    Codec,
     SchemaRegistryError,
     decode_confluent,
 )
 from kafka_elasticsearch_injector_spark.sources.schema_registry import (
     SchemaRegistryClient,
 )
+
+from .avro_writer import Codec
 
 from .confluent_fixtures import wire_encode
 
