@@ -49,39 +49,20 @@ def _session_key(spark: SparkSession) -> str:
         return f"id-{id(spark)}"
 
 
-# Runtime-settable confs every reader needs, applied to whatever session we
-# are handed (not just the one session.py builds): the testdata parquet
-# stores TIMESTAMP(NANOS) columns, which Spark refuses to read without
-# nanosAsLong, and date_format/window hashing must not shift with the host
-# timezone.
-_SESSION_CONFS = (
-    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ("spark.sql.session.timeZone", "UTC"),
-)
-_CONFIGURED_SESSIONS: set[str] = set()
-
-
-def _ensure_session_confs(spark: SparkSession) -> None:
-    key = _session_key(spark)
-    if key in _CONFIGURED_SESSIONS:
-        return
-    for k, v in _SESSION_CONFS:
-        try:
-            if spark.conf.get(k, None) != v:
-                spark.conf.set(k, v)
-        except Exception:
-            spark.conf.set(k, v)
-    _CONFIGURED_SESSIONS.add(key)
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one of the substrate tables from `sf_dir` (memoized)."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    _ensure_session_confs(spark)
     key = (_session_key(spark), sf_dir, name)
     df = _TABLE_CACHE.get(key)
     if df is None:
+        # A caller may hand in a session built without session.get_spark
+        # (a plain `SparkSession.builder` one): set the two confs every
+        # read needs before the first one. Spark refuses TIMESTAMP(NANOS)
+        # parquet without nanosAsLong, and date_format/window hashing
+        # must not shift with the host time zone.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         dtypes = dict(df.dtypes)
         for c in _EVENT_TS_COLS.get(name, ()):

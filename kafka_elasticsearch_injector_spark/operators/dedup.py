@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .scale import fill_cluster, fill_cluster_rebalanced
+from .scale import fill_cluster, on_round_robin
 
 
 def tokens(text: Column | str) -> Column:
@@ -153,10 +153,12 @@ def minhash_lsh_pairs(
       metadata, catalog stats — see io.parquet_row_count). When the
       exploded band side fits a broadcast (size_hint·bands ≤ 1M rows)
       the candidate join broadcasts one side so the pair-join OUTPUT
-      never hits an exchange. When None/large: plain shuffle equi-join
-      on (band, hash) — the standard LSH topology; AQE splits hot
-      buckets and still broadcasts at runtime if the side turns out
-      tiny.
+      never hits an exchange; its streamed side gets a round-robin
+      repartition of its own unless the rebalanced input already sits
+      on one (`scale.on_round_robin`, read off the plan). When
+      None/large: plain shuffle equi-join on (band, hash) — the
+      standard LSH topology; AQE splits hot buckets and still
+      broadcasts at runtime if the side turns out tiny.
     - `vocab_hint`: global distinct-shingle count when the caller knows
       it is ≤ 64 (enum-like sets). Enables single-long set encoding:
       verify is `bit_count(mask_a & mask_b)` inline in the same codegen
@@ -183,18 +185,16 @@ def minhash_lsh_pairs(
     # Shingling + k salted hashes are CPU-bound and sit BELOW any later
     # exchange, so they inherit the scan's split count — rebalance first.
     filled = fill_cluster(df)
-    # When fill_cluster DID insert its repartition, the streamed side of
-    # the broadcastable candidate join below sits on that explicit
-    # (AQE-coalescing-exempt) exchange and needs no further guard. When
-    # it no-op'd (input already ≥ cores partitions), the input may
-    # descend from an upstream AQE-coalescible exchange — the
-    # hamming_segment_pairs single-core trap — so the old explicit
+    # When `filled` sits on a round-robin repartition (fill_cluster's
+    # own, or one the caller already applied), the streamed side of the
+    # broadcastable candidate join below sits on that explicit
+    # (AQE-coalescing-exempt) exchange and needs no further guard.
+    # Otherwise (input already ≥ cores partitions, under no such root)
+    # the input may descend from an upstream AQE-coalescible exchange —
+    # the hamming_segment_pairs single-core trap — so the explicit
     # probe-side repartition is restored for exactly that case. The
-    # branch is read off fill_cluster's own marker, not object identity
-    # against our input: a prior fill_cluster OUTPUT routed back in
-    # returns via the memo with `filled is df` True although it already
-    # sits on its explicit repartition (ADVICE r15).
-    guard_probe_side = not fill_cluster_rebalanced(filled)
+    # branch is read off the plan, so it holds for any input.
+    guard_probe_side = not on_round_robin(filled)
     shingled = filled.select(
         F.col(id_col),
         F.array_distinct(word_ngrams(toks, shingle_n)).alias("shingles"),
@@ -258,14 +258,14 @@ def minhash_lsh_pairs(
     # The exploded sides are N·bands rows. Small corpora: broadcast one
     # side, so the N_candidate-row join OUTPUT is produced (and
     # filtered) in parallel with zero shuffle. The streamed side is NOT
-    # re-repartitioned when fill_cluster already rebalanced it (r15):
-    # it then sits on that explicit repartition (user-specified ⇒
+    # re-repartitioned when `filled` sits on a round-robin repartition:
+    # it then sits on that explicit exchange (user-specified ⇒
     # AQE-coalescing-exempt, so the probe stays at defaultParallelism),
     # and the removed exchange was reshipping the per-doc shingle
     # arrays — measured on the bigram leg at sf0.1, 1.01 → 0.73 s for
     # the identical pair set (a full join-back rewrite measured 0.79 —
     # keeping arrays on the streamed side and slimming only the
-    # exchange wins). When fill_cluster no-op'd (guard_probe_side), the
+    # exchange wins). Under any other root (guard_probe_side), the
     # input's own partitioning may be an AQE-coalescible upstream
     # exchange — the same trap hamming_segment_pairs documents, whose
     # streamed side descends from a KB-sized AGGREGATION shuffle — so

@@ -13,24 +13,8 @@ reducer owns the hot key.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# fill_cluster memo: DataFrame objects already probed (or produced by a
-# probe). A WeakSet so the memo never extends object lifetimes and never
-# mutates caller-owned objects.
-_FILL_CLUSTER_SEEN: "weakref.WeakSet[DataFrame]" = weakref.WeakSet()
-
-# Subset of _FILL_CLUSTER_SEEN: outputs that sit DIRECTLY on the
-# explicit repartition fill_cluster inserted (as opposed to inputs the
-# probe left untouched). Queried via fill_cluster_rebalanced() by
-# callers that must know whether a further exchange guard is needed —
-# previously inferred at the call site from object identity
-# (`filled is df`), which mis-fires when a prior fill_cluster OUTPUT is
-# routed back in and returns via the memo (ADVICE r15).
-_FILL_CLUSTER_REBALANCED: "weakref.WeakSet[DataFrame]" = weakref.WeakSet()
 
 
 def fill_cluster(df: DataFrame) -> DataFrame:
@@ -48,50 +32,33 @@ def fill_cluster(df: DataFrame) -> DataFrame:
     definition small (few splits), so the round-robin shuffle costs
     less than the idle cores it reclaims.
 
-    The partition probe (`df.rdd.getNumPartitions()`) converts the plan
-    driver-side — no Spark job, no data read — but it DOES force full
-    physical planning of the pre-AQE plan, and when that plan already
-    contains an exchange it reports the static shuffle-partition count,
-    not parquet scan splits. Two consequences, both handled here:
-
-    - Nested operators (ivf_topk → label_centroids, curation stages)
-      route the same DataFrame through fill_cluster repeatedly; the
-      probe's planning cost would be paid each time. The returned
-      DataFrame OBJECT is therefore MARKED, and a marked input is
-      returned untouched. The memo is per Python object, not per
-      lineage: any intervening transformation (.select, .filter)
-      returns a fresh unmarked object and the next call re-probes —
-      acceptable, because the probe is driver-side planning only, but
-      operators that nest should pass the SAME object through when
-      they want the memo to hit.
-    - The probe reflects the pre-AQE plan: downstream of an exchange
-      the decision is "is the static shuffle width ≥ cores", which is
-      the right question for the CPU-kernel placement this guards, but
-      callers should know AQE may still coalesce those partitions at
-      runtime.
+    A pure function of `df`: re-applying it to its own output is a
+    no-op, because that output reports exactly `defaultParallelism`
+    partitions. The partition probe (`df.rdd.getNumPartitions()`)
+    converts the plan driver-side — no Spark job, no data read — but it
+    does physically plan the pre-AQE plan (a warm re-probe costs about a
+    millisecond). Downstream of an exchange it reports the static
+    shuffle-partition count, not scan splits: the decision is then "is
+    the static shuffle width ≥ cores", the right question for the
+    CPU-kernel placement this guards, though AQE may still coalesce
+    those partitions at runtime.
     """
-    if df in _FILL_CLUSTER_SEEN:
-        return df
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
-        out = df.repartition(target)
-        _FILL_CLUSTER_REBALANCED.add(out)
-    else:
-        out = df
-    _FILL_CLUSTER_SEEN.add(out)
-    return out
+        return df.repartition(target)
+    return df
 
 
-def fill_cluster_rebalanced(df: DataFrame) -> bool:
-    """True iff `df` is a fill_cluster output sitting directly on the
-    explicit (AQE-coalescing-exempt) repartition fill_cluster inserted.
-    False for outputs the probe left untouched — whose own partitioning
-    may descend from an AQE-coalescible upstream exchange — and for
-    anything fill_cluster never returned. Callers use this (not object
-    identity against their input) to decide whether a downstream
-    exchange guard is still required."""
-    return df in _FILL_CLUSTER_REBALANCED
+def on_round_robin(df: DataFrame) -> bool:
+    """True iff `df`'s analyzed plan is rooted on a round-robin
+    `repartition(n)` (a `Repartition` with shuffle on) — what a firing
+    fill_cluster returns. That exchange has a user-given partition
+    count, so AQE never coalesces it; a `coalesce`, a
+    `repartition(n, col)` (`RepartitionByExpression`) or any other root
+    gives no such promise, and callers that need one add their own
+    exchange."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.nodeName() == "Repartition" and plan.shuffle()
 
 
 def no_pushdown(col: Column) -> Column:

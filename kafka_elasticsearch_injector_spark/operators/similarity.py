@@ -34,8 +34,7 @@ from .scale import fill_cluster
 
 
 def label_centroids(emb: DataFrame, label_col: str = "label",
-                    vec_col: str = "embedding", dim: int = 64,
-                    prefilled: bool = False) -> DataFrame:
+                    vec_col: str = "embedding", dim: int = 64) -> DataFrame:
     """Per-cell centroid as `dim` per-dimension exact decimal means in ONE
     map-side-combinable aggregation. Decimal summation keeps the mean
     order-independent (bit-stable under shuffle), so downstream cosine
@@ -46,9 +45,8 @@ def label_centroids(emb: DataFrame, label_col: str = "label",
     divides by the cell's ROW count; a null element or short array
     would silently deflate that dimension's mean (sum skips nulls, the
     count doesn't) — quantize/ingest lanes are responsible for
-    quarantining such vectors before indexing. `prefilled=True` skips
-    the fill_cluster rebalance when the caller already ran it (saves a
-    plan→RDD partition probe).
+    quarantining such vectors before indexing. The aggregation's input
+    goes through fill_cluster, a no-op when the caller already did.
 
     Plan shape: no explode — a posexplode formulation shuffles N·dim rows
     through two aggregations (per-(cell,pos) mean, then collect_list
@@ -61,7 +59,7 @@ def label_centroids(emb: DataFrame, label_col: str = "label",
         return (F.element_at(F.col(vec_col), d + 1)
                 .cast("double").cast("decimal(30,10)"))
 
-    sums = (emb if prefilled else fill_cluster(emb)).groupBy(label_col).agg(
+    sums = fill_cluster(emb).groupBy(label_col).agg(
         F.count(F.lit(1)).alias("_n"),
         *[F.sum(xd(d)).alias(f"_s{d}") for d in range(dim)],
     )
@@ -87,8 +85,7 @@ def ivf_topk(emb: DataFrame, probe_ids: list[int], k: int = 3,
     # Per-candidate cosine is interpreted-HOF work below any exchange —
     # spread the corpus scan before it.
     emb = fill_cluster(emb)
-    cents = label_centroids(emb, label_col, vec_col, dim=dim,
-                            prefilled=True)
+    cents = label_centroids(emb, label_col, vec_col, dim=dim)
     probes = (
         emb.filter(F.col(id_col).isin(probe_ids))
         .select(F.col(id_col).alias("probe_id"),

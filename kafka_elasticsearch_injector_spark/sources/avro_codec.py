@@ -319,16 +319,35 @@ def _record_reader(schema: dict, reader_type: T.StructType | None,
     return read_record
 
 
+#: cap on the items of one array or map whose items take no bytes
+#: (`null`, an empty record): the bytes left cannot bound their count.
+_MAX_ZERO_WIDTH_ITEMS = 4096
+
+
+def _min_width(schema) -> int:
+    """Fewest bytes one value of `schema` encodes to."""
+    schema = parse_schema(schema)
+    t = _schema_type(schema)
+    if t == "record":
+        return sum(_min_width(f["type"]) for f in schema["fields"])
+    if t == "fixed":
+        return schema["size"]
+    return {"null": 0, "float": 4, "double": 8}.get(t, 1)
+
+
 def _blocks_reader(schema: dict, t: str, reader_type: T.DataType | None,
                    session_tz: str | None) -> _Reader:
     is_map = t == "map"
+    item_schema = schema["values" if is_map else "items"]
     item_type = None if reader_type is None else (
         reader_type.valueType if is_map else reader_type.elementType)
-    read_item = compile_reader(schema["values" if is_map else "items"],
-                               item_type, session_tz)
+    read_item = compile_reader(item_schema, item_type, session_tz)
+    read_key = _leaf_reader("string", "string")[1]
+    width = _min_width(item_schema) + is_map  # a map key takes ≥ 1 byte
 
     def read_blocks(buf, pos):
         out: Any = {} if is_map else []
+        total = 0
         while True:
             n, pos = _read_varint(buf, pos)
             if n == 0:
@@ -336,11 +355,14 @@ def _blocks_reader(schema: dict, t: str, reader_type: T.DataType | None,
             if n < 0:  # negative count: byte size follows (skippable)
                 n = -n
                 _, pos = _read_varint(buf, pos)
+            # bound the count before the item loop, once per block
+            total += n
+            if (n * width > len(buf) - pos if width
+                    else total > _MAX_ZERO_WIDTH_ITEMS):
+                raise AvroError(f"block count {n} exceeds the body")
             for _ in range(n):
                 if is_map:
-                    klen, pos = _read_varint(buf, pos)
-                    key = bytes(buf[pos:pos + klen]).decode("utf-8")
-                    pos += klen
+                    key, pos = read_key(buf, pos)
                     out[key], pos = read_item(buf, pos)
                 else:
                     v, pos = read_item(buf, pos)

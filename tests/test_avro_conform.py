@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import time
 from decimal import Decimal
 
 import pytest
@@ -21,7 +22,7 @@ from kafka_elasticsearch_injector_spark.sources.avro_codec import (
     compile_reader,
 )
 
-from .avro_writer import Codec
+from .avro_writer import Codec, _write_varint
 
 UTC = dt.timezone.utc
 
@@ -180,3 +181,40 @@ def test_conformer_localizes_naive_instants_to_session_zone():
     naive = dt.datetime(2021, 5, 6, 7, 8, 9)
     out = read(local, naive, T.TimestampType())
     assert out == naive and out.tzinfo is None
+
+
+def _body(*counts: int, tail: bytes = b"") -> memoryview:
+    out = bytearray()
+    for n in counts:
+        _write_varint(out, n)
+    return memoryview(bytes(out) + tail)
+
+
+def test_map_key_length_is_checked():
+    # count 1, key length -1: the string reader's check rejects it
+    # instead of moving the cursor backwards
+    read = compile_reader('{"type": "map", "values": "int"}')
+    with pytest.raises(AvroError, match="bad length"):
+        read(memoryview(bytes([0x02, 0x01, 0x00])), 0)
+
+
+@pytest.mark.parametrize("items, body", [
+    # 4 bytes claiming 1,000,000 items that take no bytes each
+    ("null", _body(1_000_000, 0)),
+    # 100 longs (at least a byte each) in 3 bytes
+    ("long", _body(100, tail=b"\x02\x04\x06")),
+], ids=["null-1M-in-4-bytes", "long-100-in-3-bytes"])
+def test_block_count_is_bounded_before_the_items(items, body):
+    read = compile_reader(json.dumps({"type": "array", "items": items}))
+    start = time.perf_counter()
+    with pytest.raises(AvroError, match="block count"):
+        read(body, 0)
+    assert time.perf_counter() - start < 0.05
+
+
+def test_legal_zero_width_blocks_still_decode():
+    read = compile_reader('{"type": "array", "items": "null"}')
+    assert read(_body(5, 0), 0) == ([None] * 5, 2)
+    empty = {"type": "record", "name": "e", "fields": []}
+    read = compile_reader(json.dumps({"type": "map", "values": empty}))
+    assert read(_body(1, tail=b"\x02k\x00"), 0) == ({"k": {}}, 4)

@@ -721,6 +721,40 @@ def test_poison_integer_side_drops_one_record(spark, reader, writer, poison):
     assert got[1][2].startswith("AvroError: ")
 
 
+
+def _v_rec(v_type: dict) -> str:
+    return json.dumps({"type": "record", "name": "h", "fields": [
+        {"name": "v", "type": v_type}]})
+
+
+@pytest.mark.parametrize("writer, good, hostile", [
+    # map<int> key length -1
+    (_v_rec({"type": "map", "values": "int"}), {"a": 1}, b"\x02\x01\x00"),
+    # array<null>: 4 bytes claiming 1,000,000 items
+    (_v_rec({"type": "array", "items": "null"}), [None] * 5,
+     b"\x80\x89\x7a\x00"),
+    # array<long>: 100 items claimed, 3 bytes left
+    (_v_rec({"type": "array", "items": "long"}), [1, -2],
+     b"\xc8\x01\x02\x04\x06"),
+], ids=["map-key-length", "null-1M-in-4-bytes", "long-100-in-3-bytes"])
+def test_hostile_block_side_drops_one_record(spark, writer, good, hostile):
+    """A block whose key length or item count the body cannot hold
+    side-drops its own record; the records around it decode."""
+    codec = Codec(writer)
+    rows = [(1, wire_encode(1, codec.encode({"v": good}))),
+            (2, wire_encode(1, hostile)),
+            (3, wire_encode(1, codec.encode({"v": good})))]
+    out = decode_confluent(
+        spark.createDataFrame(rows, "k int, value binary"),
+        dict_registry({1: writer}), reader_schema_id=1)
+    got = sorted((r.k, r.v, r.err) for r in out.selectExpr(
+        "k", "decoded.v as v", "_decode_error as err").collect())
+    assert [k for k, _, err in got if err is not None] == [2]
+    assert got[1][1] is None and got[1][2].startswith("AvroError: ")
+    assert [dict(v) if isinstance(good, dict) else list(v)
+            for k, v, _ in got if k != 2] == [good, good]
+
+
 _EVOLVED_READER = json.dumps({"type": "record", "name": "ev", "fields": [
     {"name": "id", "type": "long"},
     {"name": "score", "type": "double"},

@@ -309,7 +309,7 @@ def test_minhash_probe_side_guard_follows_fill_cluster(spark):
     streamed side ONLY when fill_cluster left the input untouched
     (already >= defaultParallelism partitions — whose upstream exchange
     AQE may coalesce to 1-2 tasks); when fill_cluster inserted its own
-    exempt repartition — or the input IS such an output already — a
+    exempt repartition — or the input already sits on one — a
     second exchange would just reship the shingle payloads (measured
     1.01 -> 0.73 s on the bigram leg).
 
@@ -344,10 +344,11 @@ def test_minhash_probe_side_guard_follows_fill_cluster(spark):
     assert n_roundrobin(guarded) == 1, \
         guarded._jdf.queryExecution().sparkPlan().toString()
 
-    # A prior fill_cluster OUTPUT routed back in returns via the memo:
-    # it already sits on its explicit repartition, so NO guard — the
-    # branch reads fill_cluster_rebalanced(), not object identity
-    # (ADVICE r15; identity said `filled is df` here and mis-guarded).
+    # A prior fill_cluster OUTPUT routed back in is returned as-is: it
+    # already sits on its explicit repartition, so NO guard — the
+    # branch reads the plan root (scale.on_round_robin), not object
+    # identity (ADVICE r15; identity said `filled is df` here and
+    # mis-guarded).
     from kafka_elasticsearch_injector_spark.operators.scale import fill_cluster
     pre = fill_cluster(_planted_corpus(spark).repartition(1))
     memoed = D.minhash_lsh_pairs(pre, threshold=0.5, size_hint=63)

@@ -56,3 +56,27 @@ def test_micros_utc_generation_passes_through(spark, tmp_path):
     # directly; the normalization must not double-convert it.
     sf = _write_events(tmp_path, pa.timestamp("us", tz="UTC"))
     assert _read_ts(spark, sf) == _INSTANT
+
+
+#: The confs every table() read needs.
+_READER_CONFS = {"spark.sql.legacy.parquet.nanosAsLong": "true",
+                 "spark.sql.session.timeZone": "UTC"}
+
+
+def test_get_spark_sets_the_reader_confs(spark):
+    conf = spark.sparkContext.getConf()
+    for k, v in _READER_CONFS.items():
+        assert conf.get(k) == v, k
+        assert spark.conf.get(k) == v, k
+
+
+def test_table_sets_the_reader_confs_on_a_plain_session(spark, tmp_path):
+    # a session without the builder's confs (as a plain
+    # SparkSession.builder one has) still reads the nanos flavor
+    plain = spark.newSession()
+    for k in _READER_CONFS:
+        plain.conf.unset(k)
+    sf = _write_events(tmp_path, pa.timestamp("ns"))
+    assert _read_ts(plain, sf) == _INSTANT
+    for k, v in _READER_CONFS.items():
+        assert plain.conf.get(k) == v, k

@@ -88,6 +88,60 @@ def test_ts_similarity_out_of_window_probe_user_matches_oracle(
     assert s_rows == d_rows
 
 
+
+#: Declared queries that run a fill_cluster-bearing operator on the
+#: documents or embeddings scan.
+FILL_CLUSTER_QUERIES = ["q_dedup_minhash", "q_ann_ivf", "q_embed_outliers",
+                        "q_dedup_simhash_pairs"]
+
+
+@pytest.fixture(scope="module")
+def multi_file_dir(spark, sf_dir, tmp_path_factory):
+    """documents and embeddings re-laid as defaultParallelism files each,
+    so their scans split at least as wide as the cluster and fill_cluster
+    takes its at-scale side (no exchange)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    par = spark.sparkContext.defaultParallelism
+    root = tmp_path_factory.mktemp("multi_file")
+    for name in ("documents", "embeddings"):
+        t = pq.read_table(os.path.join(sf_dir, f"{name}.parquet"))
+        assert t.num_rows >= par, (name, t.num_rows)
+        out = root / f"{name}.parquet"
+        out.mkdir()
+        step = -(-t.num_rows // par)
+        for i in range(par):
+            pq.write_table(t.slice(i * step, step), out / f"part-{i}.parquet")
+    return str(root)
+
+
+def test_multi_file_scan_keeps_fill_cluster_a_no_op(spark, multi_file_dir):
+    from kafka_elasticsearch_injector_spark.io import table
+    from kafka_elasticsearch_injector_spark.operators.scale import fill_cluster
+
+    par = spark.sparkContext.defaultParallelism
+    for name in ("documents", "embeddings"):
+        df = table(spark, multi_file_dir, name)
+        assert df.rdd.getNumPartitions() >= par
+        assert fill_cluster(df) is df
+    # so minhash's broadcast candidate join keeps its probe-side guard:
+    # that one round-robin exchange is the only one in the plan
+    plan = QUERIES["q_dedup_minhash"].spark(spark, multi_file_dir) \
+        ._jdf.queryExecution().sparkPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+
+
+@pytest.mark.parametrize("name", FILL_CLUSTER_QUERIES)
+def test_fill_cluster_queries_match_oracle_on_multi_file_layout(
+        name, spark, multi_file_dir, duck):
+    # the oracle reads the original single-file tables
+    qd = QUERIES[name]
+    problems = compare(qd.spark(spark, multi_file_dir), duck, qd.oracle, name)
+    assert not problems, "\n".join(problems)
+
+
 @pytest.fixture(scope="module")
 def edge_events(spark, sf_dir, tmp_path_factory):
     """A copy of `events` whose `props` also holds what the payload ops

@@ -64,13 +64,27 @@ def test_no_pushdown_keeps_filter_above_exchange(spark):
     assert all(r.guarded == r.id * 2 for r in rows)
 
 
-def test_fill_cluster_memoizes_nested_calls(spark):
-    # Operators nest (ivf_topk -> label_centroids both rebalance); the
-    # physical-planning probe must run once per lineage: a DataFrame
-    # that already went through fill_cluster is returned as-is.
+def test_fill_cluster_is_idempotent(spark):
+    # Operators nest (ivf_topk -> label_centroids both rebalance): a
+    # DataFrame that already went through fill_cluster reports
+    # defaultParallelism partitions, so a second call returns it as-is.
     narrow = spark.range(1000).coalesce(1)
     once = S.fill_cluster(narrow)
     assert S.fill_cluster(once) is once
     wide = spark.range(1000).repartition(
         spark.sparkContext.defaultParallelism)
     assert S.fill_cluster(S.fill_cluster(wide)) is wide
+
+
+def test_on_round_robin_reads_the_plan_root(spark):
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(1000)
+    assert S.on_round_robin(df.repartition(par))
+    assert S.on_round_robin(S.fill_cluster(df.coalesce(1))) == (par > 1)
+    # no promise of a user-sized exchange: a hash repartition (which AQE
+    # may coalesce), a coalesce, a bare scan, anything on top of a
+    # round-robin root
+    assert not S.on_round_robin(df.repartition(par, "id"))
+    assert not S.on_round_robin(df.coalesce(1))
+    assert not S.on_round_robin(df)
+    assert not S.on_round_robin(df.repartition(par).select("id"))

@@ -54,6 +54,20 @@ def test_ivf_nprobe_full_coverage_is_exact(spark):
     assert by_probe == _brute_topk(rows, [0, 1, 2], 3)
 
 
+
+def test_ivf_plan_keeps_three_round_robin_exchanges(spark):
+    """ivf_topk rebalances a narrow corpus once; label_centroids' own
+    fill_cluster call on that output is a no-op. sparkPlan() is
+    pre-ReuseExchange, so the one exchange is listed once per consumer:
+    the centroid aggregate, the probe filter and the cell scan."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("fill_cluster cannot fire below 2 cores")
+    _, df = _corpus(spark)
+    out = S.ivf_topk(df.coalesce(1), probe_ids=[0, 1, 2], k=3, dim=DIM)
+    plan = out._jdf.queryExecution().sparkPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 3, plan
+
+
 def test_ivf_nprobe_recall_monotone(spark):
     _, df = _corpus(spark)
 
