@@ -24,42 +24,26 @@ def to_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def dot(a: Column, b: Column) -> Column:
     """In-order sequential sum (0 + a1·b1) + a2·b2 + … — the exact IEEE
-    sequence DuckDB's list_reduce walks, so results are bit-identical.
-
-    When `dim` is known at plan time the loop is UNROLLED into a flat
-    codegen-able expression chain: Spark's higher-order functions
-    (ArrayAggregate/ZipWith) are CodegenFallback — interpreted per
-    element — so unrolling is worth ~10× on hot N²-pair scoring.
-    """
-    if dim is None:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    acc: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + F.element_at(a, i) * F.element_at(b, i)
-    return acc
+    sequence DuckDB's list_reduce walks, so results are bit-identical."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
-def sq_norm(vec: Column, dim: int | None = None) -> Column:
-    if dim is None:
-        return F.aggregate(
-            F.transform(vec, lambda x: x * x), F.lit(0.0),
-            lambda acc, x: acc + x)
-    acc: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + F.element_at(vec, i) * F.element_at(vec, i)
-    return acc
+def sq_norm(vec: Column) -> Column:
+    return F.aggregate(
+        F.transform(vec, lambda x: x * x), F.lit(0.0),
+        lambda acc, x: acc + x)
 
 
-def l2_norm(vec: Column, dim: int | None = None) -> Column:
-    return F.sqrt(sq_norm(vec, dim))
+def l2_norm(vec: Column) -> Column:
+    return F.sqrt(sq_norm(vec))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity; inputs must already be double arrays."""
-    return dot(a, b, dim) / (l2_norm(a, dim) * l2_norm(b, dim))
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))

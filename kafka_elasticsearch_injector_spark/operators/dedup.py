@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .scale import fill_cluster, on_round_robin
+from .scale import banded_pairs, fill_cluster
 
 
 def tokens(text: Column | str) -> Column:
@@ -102,6 +102,29 @@ def lsh_band_hashes(k: int, rows_per_band: int) -> list[Column]:
     return bands
 
 
+def _minhash_bands(df: DataFrame, id_col: str, text_col: str, k: int,
+                   rows_per_band: int, shingle_n: int,
+                   sig_names: list[str]) -> tuple[DataFrame, list[str]]:
+    """(id, shingles, *sig_names, band_0..band_{k/rows-1}) in one narrow
+    pass — distinct word-`shingle_n`-gram shingles, the k-permutation
+    signature and its band hashes — and the band columns' names.
+    `sig_names` (a subset of
+    sig_0..sig_{k-1}) ride along as 16-byte binaries: unhex halves the
+    row vs the 32-char hex strings, and equality — all a consumer of
+    carried signatures needs — is representation-invariant."""
+    shingled = df.select(
+        F.col(id_col),
+        F.array_distinct(
+            word_ngrams(tokens(text_col), shingle_n)).alias("shingles"))
+    sigs = shingled.select(
+        id_col, "shingles", *minhash_signature(F.col("shingles"), k))
+    bands = lsh_band_hashes(k, rows_per_band)
+    return (sigs.select(id_col, "shingles",
+                        *[F.unhex(F.col(n)).alias(n) for n in sig_names],
+                        *bands),
+            [f"band_{i}" for i in range(len(bands))])
+
+
 def _vocab_row(shingled: DataFrame, set_col: str = "shingles") -> DataFrame:
     """ONE-row relation holding the sorted global vocabulary of
     `set_col` as an array — the broadcast-able dictionary the masked
@@ -142,23 +165,18 @@ def minhash_lsh_pairs(
     """MinHash→LSH→verify near-dup pairs (doc_a < doc_b, jac ≥ threshold).
 
     Plan shape (scale-critical): one narrow pass computes signatures and
-    distinct shingle sets per doc; explode to (doc, band, hash) — k/rows
-    rows per doc, NOT N² — equi-join on (band, hash) for candidates;
-    exact-Jaccard verify runs only on candidates. Building the plan
-    launches ZERO Spark jobs: physical-strategy choices come from the
-    caller's hints, not driver-side counts (at 100 TB a `count()` for a
-    broadcast heuristic is a full scan before the real query).
+    distinct shingle sets per doc; the candidates are the banded join
+    on (band, hash) (scale.banded_pairs: k/rows rows per doc, NOT N²;
+    each pair once, at its lowest matching band); exact-Jaccard verify
+    runs only on candidates. Building the plan launches ZERO Spark
+    jobs: physical-strategy choices come from the caller's hints, not
+    driver-side counts (at 100 TB a `count()` for a broadcast
+    heuristic is a full scan before the real query).
 
     - `size_hint`: approximate row count of `df` (parquet footer
-      metadata, catalog stats — see io.parquet_row_count). When the
-      exploded band side fits a broadcast (size_hint·bands ≤ 1M rows)
-      the candidate join broadcasts one side so the pair-join OUTPUT
-      never hits an exchange; its streamed side gets a round-robin
-      repartition of its own unless the rebalanced input already sits
-      on one (`scale.on_round_robin`, read off the plan). When
-      None/large: plain shuffle equi-join on (band, hash) — the
-      standard LSH topology; AQE splits hot buckets and still
-      broadcasts at runtime if the side turns out tiny.
+      metadata, catalog stats — see io.parquet_row_count); it picks
+      the candidate join's broadcast or shuffle topology
+      (scale.banded_pairs).
     - `vocab_hint`: global distinct-shingle count when the caller knows
       it is ≤ 64 (enum-like sets). Enables single-long set encoding:
       verify is `bit_count(mask_a & mask_b)` inline in the same codegen
@@ -173,45 +191,16 @@ def minhash_lsh_pairs(
       loses 2 BroadcastHashJoins + one signature-projection subtree).
       Adds k·16 B per exploded row, so pair it with the hash-sampled
       calibration contract at corpus scale, not full-corpus runs.
-
-    Two shuffle-killers on top of the naive bucket join:
-    - **first-matching-band emission**: a pair sharing several bands is
-      emitted only at its LOWEST matching band (post-join predicate: all
-      earlier bands differ), so candidates are distinct by construction —
-      no N-candidate `distinct()` shuffle. Near-dup-heavy corpora share
-      most bands, making that shuffle the dominant cost otherwise.
     """
-    toks = tokens(text_col)
     # Shingling + k salted hashes are CPU-bound and sit BELOW any later
     # exchange, so they inherit the scan's split count — rebalance first.
     filled = fill_cluster(df)
-    # When `filled` sits on a round-robin repartition (fill_cluster's
-    # own, or one the caller already applied), the streamed side of the
-    # broadcastable candidate join below sits on that explicit
-    # (AQE-coalescing-exempt) exchange and needs no further guard.
-    # Otherwise (input already ≥ cores partitions, under no such root)
-    # the input may descend from an upstream AQE-coalescible exchange —
-    # the hamming_segment_pairs single-core trap — so the explicit
-    # probe-side repartition is restored for exactly that case. The
-    # branch is read off the plan, so it holds for any input.
-    guard_probe_side = not on_round_robin(filled)
-    shingled = filled.select(
-        F.col(id_col),
-        F.array_distinct(word_ngrams(toks, shingle_n)).alias("shingles"),
-    )
-    sigs = shingled.select(
-        id_col, "shingles", *minhash_signature(F.col("shingles"), k))
-    n_bands = k // rows_per_band
-    band_cols = [f"band_{i}" for i in range(n_bands)]
-    # carry_sigs transport: 16-byte binaries (unhex halves the exploded
-    # row vs the 32-char hex strings; equality — all est needs — is
-    # representation-invariant).
     sig_names = [f"sig_{i}" for i in range(k)] if carry_sigs else []
-    sig_carry = [F.unhex(F.col(n)).alias(n) for n in sig_names]
-    banded = sigs.select(
-        id_col, "shingles", *sig_carry, *lsh_band_hashes(k, rows_per_band))
+    banded, band_cols = _minhash_bands(filled, id_col, text_col, k,
+                                       rows_per_band, shingle_n, sig_names)
 
-    if vocab_hint is not None and vocab_hint <= 64:
+    masked = vocab_hint is not None and vocab_hint <= 64
+    if masked:
         # Inline (sz, mask) in the SAME projection as the band hashes
         # (r15): the old shape ran a separate mask relation's
         # (id, gram) explode + dictionary join + groupBy(id) and then a
@@ -219,12 +208,11 @@ def minhash_lsh_pairs(
         # ~1.0 s at sf0.1. Here the sorted vocabulary is ONE broadcast
         # row and the mask is a row-local fold, so the masked projection
         # costs one vocab aggregate plus narrow compute.
-        masked = True
         sz, mask = _mask_cols("shingles")
         gid_map = F.map_from_arrays(
             F.col("_vocab"), F.sequence(F.lit(0), F.size("_vocab") - 1))
         # The vocab aggregate reads the RAW scan, not the rebalanced
-        # `shingled`: explode→distinct partial-aggregates per
+        # `filled`: explode→distinct partial-aggregates per
         # partition, so rebalancing first only adds a full shuffle and
         # ~32 extra tasks per candidate-join side (measured ~0.5 s per
         # side at sf0.01, pure stage overhead). At scale the scan's
@@ -236,59 +224,14 @@ def minhash_lsh_pairs(
             banded.crossJoin(F.broadcast(_vocab_row(raw_grams)))
             .withColumn("_m", gid_map)
             .filter(F.size("shingles") > 0)
-            .select(id_col, sz, mask, *sig_names,
-                    *[f"band_{i}" for i in range(n_bands)])
+            .select(id_col, sz, mask, *sig_names, *band_cols)
         )
-        payload = ["sz", "mask", *sig_names]
-    else:
-        masked = None
-        payload = ["shingles", *sig_names]
 
-    exploded = banded.select(
-        id_col, *payload, *band_cols,
-        F.posexplode(F.array(*[F.col(c) for c in band_cols])).alias("bidx", "bh"),
-    )
-    a = exploded.select(
-        F.col(id_col).alias("doc_a"), "bidx", "bh",
-        *[F.col(c).alias(f"a_{c}") for c in [*payload, *band_cols]])
-    b = exploded.select(
-        F.col(id_col).alias("doc_b"), "bidx", "bh",
-        *[F.col(c).alias(f"b_{c}") for c in [*payload, *band_cols]])
-
-    # The exploded sides are N·bands rows. Small corpora: broadcast one
-    # side, so the N_candidate-row join OUTPUT is produced (and
-    # filtered) in parallel with zero shuffle. The streamed side is NOT
-    # re-repartitioned when `filled` sits on a round-robin repartition:
-    # it then sits on that explicit exchange (user-specified ⇒
-    # AQE-coalescing-exempt, so the probe stays at defaultParallelism),
-    # and the removed exchange was reshipping the per-doc shingle
-    # arrays — measured on the bigram leg at sf0.1, 1.01 → 0.73 s for
-    # the identical pair set (a full join-back rewrite measured 0.79 —
-    # keeping arrays on the streamed side and slimming only the
-    # exchange wins). Under any other root (guard_probe_side), the
-    # input's own partitioning may be an AQE-coalescible upstream
-    # exchange — the same trap hamming_segment_pairs documents, whose
-    # streamed side descends from a KB-sized AGGREGATION shuffle — so
-    # the explicit repartition is kept for that case (bounded: the
-    # broadcastable gate caps this side at ≤ 1M rows). Beyond
-    # broadcastable size (or with no hint), the shuffle equi-join on
-    # (band, hash) — the standard LSH topology; AQE splits hot buckets.
-    broadcastable = size_hint is not None and size_hint * n_bands <= 1_000_000
-    first_match = [
-        (F.lit(j) >= F.col("bidx"))
-        | (F.col(f"a_band_{j}") != F.col(f"b_band_{j}"))
-        for j in range(n_bands - 1)
-    ]
-    if broadcastable:
-        probe = a
-        if guard_probe_side:
-            probe = a.repartition(a.sparkSession.sparkContext.defaultParallelism)
-        joined = probe.join(F.broadcast(b), ["bidx", "bh"])
-    else:
-        joined = a.join(b, ["bidx", "bh"])
-    joined = joined.filter(F.col("doc_a") < F.col("doc_b"))
-    for cond in first_match:
-        joined = joined.filter(cond)
+    # The candidate sides keep the per-doc payload: a join-back rewrite
+    # that ships only ids measured 0.79 s against 0.73 s for this shape
+    # (bigram leg at sf0.1).
+    joined = banded_pairs(banded, band_cols, id_col, size_hint=size_hint,
+                          rebalanced=filled)
 
     # jac is emitted UNROUNDED: an integer-count ratio is one IEEE
     # division on exactly-representable operands, so Spark and any
@@ -299,9 +242,11 @@ def minhash_lsh_pairs(
     # value in BOTH branches for the same reason (the second branch
     # previously filtered the rounded value, which could admit a
     # boundary pair the exact-jaccard oracle rejects).
+    pair = [F.col(f"a_{id_col}").alias("doc_a"),
+            F.col(f"b_{id_col}").alias("doc_b")]
     carried = [F.col(f"a_{n}") for n in sig_names] + [
         F.col(f"b_{n}") for n in sig_names]
-    if masked is not None:
+    if masked:
         inter = F.bit_count(F.col("a_mask").bitwiseAND(F.col("b_mask")))
         jac = inter.cast("double") / (F.col("a_sz") + F.col("b_sz") - inter)
         # threshold ≤ 0 is a tautology on this branch — every row here
@@ -313,10 +258,10 @@ def minhash_lsh_pairs(
         # filter drops even at threshold 0).
         if threshold > 0.0:
             joined = joined.filter(jac >= threshold)
-        return joined.select("doc_a", "doc_b", jac.alias("jac"), *carried)
+        return joined.select(*pair, jac.alias("jac"), *carried)
     jac = jaccard(F.col("a_shingles"), F.col("b_shingles"))
     return (
-        joined.select("doc_a", "doc_b", jac.alias("jac"), *carried)
+        joined.select(*pair, jac.alias("jac"), *carried)
         .filter(F.col("jac") >= threshold)
     )
 
@@ -492,14 +437,11 @@ def simhash_pairs(
     Scale topology (the Manku/Jain/Sarma WWW'07 multi-index shape): two
     fingerprints within hamming distance r must agree EXACTLY on at least
     one of r+1 disjoint bit segments (pigeonhole), so candidate
-    generation is a bucket equi-join on (segment_idx, segment_value) —
-    r+1 rows per doc, never the O(N²) pair space and never the
-    C(16,r) bit-flip expansion. Verify is one codegen'd
-    `bit_count(a ^ b)` per candidate.
-
-    Same shuffle-killer as minhash_lsh_pairs: a pair agreeing on several
-    segments is emitted only at its LOWEST matching segment, so
-    candidates are distinct by construction — no distinct() shuffle.
+    generation is the banded join on (segment_idx, segment_value)
+    (scale.banded_pairs: r+1 rows per doc, never the O(N²) pair space
+    and never the C(16,r) bit-flip expansion; each pair once, at its
+    lowest matching segment). Verify is one codegen'd `bit_count(a ^ b)`
+    per candidate.
 
     Scale note: 16 bits (md5-nibble lanes, oracle-checkable in DuckDB)
     is the verification width — segment buckets are 2^4-way and grow
@@ -523,19 +465,11 @@ def hamming_segment_pairs(fp: DataFrame, id_col: str = "doc_id",
     (production) fingerprint widths.
 
     `size_hint` (≈ |fp| rows, from parquet footer metadata — zero
-    plan-time Spark jobs) picks the candidate-join topology exactly
-    like minhash_lsh_pairs: when the exploded segment side provably
-    fits a broadcast (size_hint·(r+1) ≤ 1M rows), one side broadcasts
-    and the streamed side is EXPLICITLY repartitioned to
-    defaultParallelism — the streamed side descends from the
-    fingerprint aggregation, whose KB-sized shuffle AQE coalesces to
-    1-2 partitions, which then produce the (possibly millions of)
-    candidate pairs nearly single-core (measured at sf0.1:
-    3.5 s → 0.85 s for q_dedup_simhash_pairs' 7.1M pairs; a
-    user-specified repartition is exempt from AQE coalescing). Beyond
-    broadcastable size (or with no hint) it stays the plain shuffle
-    equi-join on (segment, value) — the corpus-scale topology, where
-    partitions are byte-sized and coalescing is not a hazard."""
+    plan-time Spark jobs) picks the candidate join's broadcast or
+    shuffle topology (scale.banded_pairs). `fp` is the rebalance
+    check's frame: a fingerprint aggregation or projection is no
+    round-robin root, so a broadcast candidate join repartitions its
+    streamed side."""
     n_seg = max_hamming + 1
     assert 1 <= n_seg <= bits, f"max_hamming must be in [0, {bits - 1}]"
 
@@ -551,40 +485,16 @@ def hamming_segment_pairs(fp: DataFrame, id_col: str = "doc_id",
         return shifted.bitwiseAND(
             F.lit((1 << widths[j]) - 1)).alias(f"seg_{j}")
 
-    seg_cols = [seg(j) for j in range(n_seg)]
-    seg_names = [f"seg_{j}" for j in range(n_seg)]
-    segmented = fp.select(id_col, fp_col, *seg_cols)
-
-    exploded = segmented.select(
-        id_col, fp_col, *seg_names,
-        F.posexplode(F.array(*[F.col(c) for c in seg_names]))
-        .alias("sidx", "sval"),
-    )
-    a = exploded.select(
-        F.col(id_col).alias("doc_a"), "sidx", "sval",
-        F.col(fp_col).alias("fp_a"),
-        *[F.col(c).alias(f"a_{c}") for c in seg_names])
-    b = exploded.select(
-        F.col(id_col).alias("doc_b"), "sidx", "sval",
-        F.col(fp_col).alias("fp_b"),
-        *[F.col(c).alias(f"b_{c}") for c in seg_names])
-
-    n_seg_rows = None if size_hint is None else size_hint * n_seg
-    if n_seg_rows is not None and n_seg_rows <= 1_000_000:
-        par = fp.sparkSession.sparkContext.defaultParallelism
-        joined = a.repartition(par).join(F.broadcast(b), ["sidx", "sval"])
-    else:
-        joined = a.join(b, ["sidx", "sval"])
-    joined = joined.filter(F.col("doc_a") < F.col("doc_b"))
-    # First-matching-segment emission: all segments before sidx differ.
-    for j in range(n_seg - 1):
-        joined = joined.filter(
-            (F.lit(j) >= F.col("sidx"))
-            | (F.col(f"a_seg_{j}") != F.col(f"b_seg_{j}")))
-
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+    segmented = fp.select(id_col, fp_col, *[seg(j) for j in range(n_seg)])
+    joined = banded_pairs(
+        segmented, [f"seg_{j}" for j in range(n_seg)], id_col,
+        size_hint=size_hint, rebalanced=fp)
+    hamming = F.bit_count(
+        F.col(f"a_{fp_col}").bitwiseXOR(F.col(f"b_{fp_col}")))
     return (
-        joined.select("doc_a", "doc_b", hamming.alias("hamming"))
+        joined.select(F.col(f"a_{id_col}").alias("doc_a"),
+                      F.col(f"b_{id_col}").alias("doc_b"),
+                      hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -734,47 +644,23 @@ def minhash_lsh_pairs_cross(
     self-dedup catches near-dups).
 
     Scale shape: the probe side is a benchmark/eval set — tiny versus
-    the corpus by construction — so its exploded band table is
-    BROADCAST: corpus band rows never shuffle, the whole screen is one
-    map-side equi-join over the corpus scan plus a verify on the few
-    candidates. Same signature/band functions as the self-join path
-    (minhash_lsh_pairs), so one corpus-side signature materialization
-    can feed both. Candidates are deduped by first-matching-band
-    emission (no distinct() shuffle), exactly as in the self-join."""
-    n_bands = k // rows_per_band
-    band_cols = [f"band_{i}" for i in range(n_bands)]
+    the corpus by construction — so the candidates are the banded
+    join's probe form (scale.banded_pairs): the probe band table
+    broadcasts, corpus band rows never shuffle, and a verify runs on
+    the few candidates. Same signature/band projection as the
+    self-join path (minhash_lsh_pairs), so one corpus-side signature
+    materialization can feed both."""
+    def bands(df: DataFrame) -> tuple[DataFrame, list[str]]:
+        return _minhash_bands(df, id_col, text_col, k, rows_per_band,
+                              shingle_n, [])
 
-    def sig_bands(df: DataFrame) -> DataFrame:
-        shingled = df.select(
-            F.col(id_col),
-            F.array_distinct(
-                word_ngrams(tokens(text_col), shingle_n)).alias("shingles"))
-        sigs = shingled.select(
-            id_col, "shingles", *minhash_signature(F.col("shingles"), k))
-        return sigs.select(id_col, "shingles",
-                           *lsh_band_hashes(k, rows_per_band))
-
-    def explode_bands(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col("shingles").alias(f"{prefix}_sh"),
-            *[F.col(c).alias(f"{prefix}_{c}") for c in band_cols],
-            F.posexplode(F.array(*[F.col(c) for c in band_cols]))
-            .alias("bidx", "bh"))
-
-    a = explode_bands(sig_bands(fill_cluster(corpus)), "c")
-    b = explode_bands(sig_bands(probe), "p")
-
-    joined = a.join(F.broadcast(b), ["bidx", "bh"])
-    for j in range(n_bands - 1):
-        joined = joined.filter(
-            (F.lit(j) >= F.col("bidx"))
-            | (F.col(f"c_band_{j}") != F.col(f"p_band_{j}")))
-
-    jac = jaccard(F.col("c_sh"), F.col("p_sh"))
+    banded, band_cols = bands(fill_cluster(corpus))
+    joined = banded_pairs(banded, band_cols, id_col,
+                          right=bands(probe)[0])
+    jac = jaccard(F.col("a_shingles"), F.col("b_shingles"))
     return (joined
-            .select(F.col("c_id").alias("doc_id"),
-                    F.col("p_id").alias("probe_id"),
+            .select(F.col(f"a_{id_col}").alias("doc_id"),
+                    F.col(f"b_{id_col}").alias("probe_id"),
                     jac.alias("jac"))
             .filter(F.col("jac") >= threshold))
 

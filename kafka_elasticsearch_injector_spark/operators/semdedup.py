@@ -60,7 +60,7 @@ def _dist_sq_sql(centroid: list[int]) -> str:
     """Exact integer squared L2 distance to a plan-time centroid
     literal, as a zip_with/aggregate fold IN SQL TEXT. Two deliberate
     choices against the hot-pair-kernel idioms:
-    - not the unrolled-expression form (functions/vectors.dot): k
+    - not an unrolled per-element expression chain: k
       centroids × dim terms of FRESH literals every Lloyd iteration
       forces a multi-thousand-node Janino compile per iteration
       (measured ~4-5 s each, dwarfing the scan), while the interpreted

@@ -13,8 +13,9 @@ Two tiers (SURVEY.md north star):
   nprobe=8, each query scans 0.2% of the corpus; the cell-assignment
   column doubles as the partition key so a cell is co-located.
 
-LSH sign-bucket sketch (alternative ANN path) is in dedup.py's banding
-machinery — hyperplane signs bucket vectors, same equi-join shape.
+LSH sign-bucket sketch (alternative ANN path): hyperplane signs bucket
+vectors, and the candidates come from the same banded join as dedup.py's
+minhash bands (scale.banded_pairs).
 
 Determinism (round-6 audit, round 6): every cosine/scale here is
 emitted UNROUNDED — functions/vectors.py folds walk the oracle's exact
@@ -30,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
-from .scale import fill_cluster
+from .scale import banded_pairs, fill_cluster
 
 
 def label_centroids(emb: DataFrame, label_col: str = "label",
@@ -222,6 +223,21 @@ def lsh_sign_buckets(emb: DataFrame, n_planes: int = 8, dim: int = 64,
     return emb.withColumn(out_col, bucket.cast("int"))
 
 
+def _lsh_tables(emb: DataFrame, n_tables: int, n_planes: int, dim: int,
+                id_col: str, vec_col: str) -> tuple[DataFrame, list[str]]:
+    """(id, vec as doubles, bucket_0..bucket_{n_tables-1}) — one
+    independent sign-LSH table per bucket column — and those columns'
+    names."""
+    bucket_cols = [f"bucket_{t}" for t in range(n_tables)]
+    bucketed = emb
+    for t in range(n_tables):
+        bucketed = lsh_sign_buckets(
+            bucketed, n_planes, dim, vec_col, table=t, out_col=bucket_cols[t])
+    return (bucketed.select(id_col, V.to_double(F.col(vec_col)).alias("vec"),
+                            *bucket_cols),
+            bucket_cols)
+
+
 def lsh_topk(emb: DataFrame, probe_ids: list[int], k: int = 3,
              n_planes: int = 8, dim: int = 64,
              id_col: str = "vec_id", vec_col: str = "embedding",
@@ -232,45 +248,28 @@ def lsh_topk(emb: DataFrame, probe_ids: list[int], k: int = 3,
     each table hashes with an independent hyperplane set, and a
     candidate qualifies if it shares a bucket in ANY table —
     P(miss) = (1 - (1-θ/π)^planes)^tables decays exponentially in
-    tables. Candidates seen in several tables are emitted only at their
-    LOWEST matching table (the same first-match predicate as the
-    minhash/simhash banding), so no distinct() shuffle is needed.
-    Returns (probe_id, bucket, vec_id, cos_sim, rn); `bucket` is the
-    matching table's bucket. The declared oracle query pins n_tables=1.
+    tables. The candidates are the banded join's probe form over the
+    tables' buckets (scale.banded_pairs: the probes broadcast, the
+    corpus streams in place; a candidate seen in several tables is
+    emitted only at its LOWEST matching table, so no distinct() shuffle
+    is needed). Returns (probe_id, bucket, vec_id, cos_sim, rn);
+    `bucket` is the matching table's bucket. The declared oracle query
+    pins n_tables=1.
     """
-    bucket_cols = [f"bucket_{t}" for t in range(n_tables)]
-    bucketed = emb
-    for t in range(n_tables):
-        bucketed = lsh_sign_buckets(
-            bucketed, n_planes, dim, vec_col, table=t, out_col=bucket_cols[t])
-    probes = (
-        bucketed.filter(F.col(id_col).isin(probe_ids))
-        .select(F.col(id_col).alias("probe_id"),
-                V.to_double(F.col(vec_col)).alias("probe_vec"),
-                *[F.col(c).alias(f"p_{c}") for c in bucket_cols],
-                F.posexplode(F.array(*[F.col(c) for c in bucket_cols]))
-                .alias("tidx", "bucket"))
-    )
-    corpus = bucketed.select(
-        F.col(id_col), V.to_double(F.col(vec_col)).alias("vec"),
-        *[F.col(c).alias(f"c_{c}") for c in bucket_cols],
-        F.posexplode(F.array(*[F.col(c) for c in bucket_cols]))
-        .alias("tidx", "bucket"))
-    joined = (
-        F.broadcast(probes).join(corpus, ["tidx", "bucket"])
-        .filter(F.col("probe_id") != F.col(id_col))
-    )
-    # First-matching-table emission keeps candidates distinct.
-    for t in range(n_tables - 1):
-        joined = joined.filter(
-            (F.lit(t) >= F.col("tidx"))
-            | (F.col(f"p_bucket_{t}") != F.col(f"c_bucket_{t}")))
+    vecs, bucket_cols = _lsh_tables(emb, n_tables, n_planes, dim,
+                                    id_col, vec_col)
+    joined = banded_pairs(
+        vecs, bucket_cols, id_col,
+        right=vecs.filter(F.col(id_col).isin(probe_ids)),
+    ).filter(F.col(f"b_{id_col}") != F.col(f"a_{id_col}"))
     w = Window.partitionBy("probe_id").orderBy(
         F.col("_cos").desc(), F.col(id_col))
     return (
         joined.select(
-            "probe_id", "bucket", id_col,
-            V.cosine(F.col("probe_vec"), F.col("vec")).alias("_cos"))
+            F.col(f"b_{id_col}").alias("probe_id"),
+            F.col("bh").alias("bucket"),
+            F.col(f"a_{id_col}").alias(id_col),
+            V.cosine(F.col("b_vec"), F.col("a_vec")).alias("_cos"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("probe_id", "bucket", id_col,
@@ -288,42 +287,27 @@ def cosine_pairs_lsh(emb: DataFrame, threshold: float = 0.9,
     (vec_a < vec_b, unrounded exact cos_sim).
 
     This is the discovery path the blocked O(N²) kernel
-    (nearest_neighbor_pairs) verifies against: per (table, bucket)
-    equi-join, first-matching-table emission (no distinct() shuffle),
-    cosine computed only on candidates. Recall: a pair at angle θ
-    collides in one table with P = (1-θ/π)^planes; T tables union as
-    1-(1-P)^T. Worked: at cos ≥ 0.95 (θ ≤ 18°) P ≈ 0.43, so two
-    8-plane tables catch ~2/3 of pairs; at the cos ≥ 0.9 boundary
-    (θ ≤ 26°) P ≈ 0.29 and two tables catch only ~49% — size
-    `n_tables` from THIS formula against the target recall at the
-    LOOSEST threshold you care about, not from the tight-pair number.
-    Wide-angle pairs stay cheaply unexamined either way. At 100 TB partition the corpus by (table 0's)
-    bucket so the self-join is co-located.
+    (nearest_neighbor_pairs) verifies against: the candidates are the
+    banded self-join over the tables' buckets (scale.banded_pairs: a
+    shuffle equi-join on (table, bucket), each pair once at its first
+    matching table), and cosine is computed only on candidates.
+    Recall: a pair at angle θ collides in one table with
+    P = (1-θ/π)^planes; T tables union as 1-(1-P)^T. Worked: at
+    cos ≥ 0.95 (θ ≤ 18°) P ≈ 0.43, so two 8-plane tables catch ~2/3
+    of pairs; at the cos ≥ 0.9 boundary (θ ≤ 26°) P ≈ 0.29 and two
+    tables catch only ~49% — size `n_tables` from THIS formula against
+    the target recall at the LOOSEST threshold you care about, not
+    from the tight-pair number. Wide-angle pairs stay cheaply
+    unexamined either way. At 100 TB partition the corpus by
+    (table 0's) bucket so the self-join is co-located.
     """
-    bucket_cols = [f"bucket_{t}" for t in range(n_tables)]
-    bucketed = emb
-    for t in range(n_tables):
-        bucketed = lsh_sign_buckets(
-            bucketed, n_planes, dim, vec_col, table=t, out_col=bucket_cols[t])
-    exploded = bucketed.select(
-        F.col(id_col), V.to_double(F.col(vec_col)).alias("vec"),
-        *bucket_cols,
-        F.posexplode(F.array(*[F.col(c) for c in bucket_cols]))
-        .alias("tidx", "bh"))
-    a = exploded.select(
-        F.col(id_col).alias("vec_a"), F.col("vec").alias("va"), "tidx", "bh",
-        *[F.col(c).alias(f"a_{c}") for c in bucket_cols])
-    b = exploded.select(
-        F.col(id_col).alias("vec_b"), F.col("vec").alias("vb"), "tidx", "bh",
-        *[F.col(c).alias(f"b_{c}") for c in bucket_cols])
-    joined = a.join(b, ["tidx", "bh"]).filter(F.col("vec_a") < F.col("vec_b"))
-    for t in range(n_tables - 1):
-        joined = joined.filter(
-            (F.lit(t) >= F.col("tidx"))
-            | (F.col(f"a_bucket_{t}") != F.col(f"b_bucket_{t}")))
-    cos = V.cosine(F.col("va"), F.col("vb"))
+    vecs, bucket_cols = _lsh_tables(emb, n_tables, n_planes, dim,
+                                    id_col, vec_col)
+    joined = banded_pairs(vecs, bucket_cols, id_col)
+    cos = V.cosine(F.col("a_vec"), F.col("b_vec"))
     return (
-        joined.select("vec_a", "vec_b", cos.alias("_cos"))
+        joined.select(F.col(f"a_{id_col}").alias("vec_a"),
+                      F.col(f"b_{id_col}").alias("vec_b"), cos.alias("_cos"))
         .filter(F.col("_cos") >= threshold)
         .select("vec_a", "vec_b", F.col("_cos").alias("cos_sim"))
     )

@@ -220,13 +220,34 @@ def compile_reader(writer_schema, reader_type: T.DataType | None = None,
     a TimestampType column is a wall-clock time in that zone and comes
     back as the aware-UTC instant Spark's pandas conversion gives it; a
     wall-clock time the zone skips or repeats raises. Without it the
-    value stays naive and the caller's conversion decides."""
+    value stays naive and the caller's conversion decides.
+
+    Array and map items that take no bytes (`null`, an empty record)
+    are bounded per decoded value: `_MAX_ZERO_WIDTH_ITEMS` across all
+    of its blocks, nested ones included. The reader keeps that count
+    while it decodes a value, so one reader serves one thread at a
+    time (`decode_confluent` compiles its readers per partition)."""
+    zero_width: list[int] = []  # such items so far; see _blocks_reader
+    read = _compile(writer_schema, reader_type, session_tz, zero_width)
+    if not zero_width:
+        return read
+
+    def read_bounded(buf, pos):
+        zero_width[0] = 0
+        return read(buf, pos)
+
+    return read_bounded
+
+
+def _compile(writer_schema, reader_type: T.DataType | None,
+             session_tz: str | None, zero_width: list[int]) -> _Reader:
+    """compile_reader's tree, sharing one zero-width item count."""
     schema = parse_schema(writer_schema)
     t = _schema_type(schema)
     if t == "null":
         return lambda buf, pos: (None, pos)
     if t == "union":
-        branches = [compile_reader(b, reader_type, session_tz)
+        branches = [_compile(b, reader_type, session_tz, zero_width)
                     for b in schema]
 
         def read_union(buf, pos):
@@ -238,13 +259,17 @@ def compile_reader(writer_schema, reader_type: T.DataType | None = None,
         return read_union
     if t == "record":
         if reader_type is None or isinstance(reader_type, T.StructType):
-            return _record_reader(schema, reader_type, session_tz)
-        return _mismatch(compile_reader(schema), reader_type)
+            return _record_reader(schema, reader_type, session_tz,
+                                  zero_width)
+        return _mismatch(_compile(schema, None, None, zero_width),
+                         reader_type)
     if t in ("array", "map"):
         if reader_type is None or isinstance(
                 reader_type, T.MapType if t == "map" else T.ArrayType):
-            return _blocks_reader(schema, t, reader_type, session_tz)
-        return _mismatch(compile_reader(schema), reader_type)
+            return _blocks_reader(schema, t, reader_type, session_tz,
+                                  zero_width)
+        return _mismatch(_compile(schema, None, None, zero_width),
+                         reader_type)
 
     kind, read = _leaf_reader(schema, t)
     if reader_type is None:
@@ -299,12 +324,13 @@ def _mismatch(read: _Reader, reader_type: T.DataType) -> _Reader:
 
 
 def _record_reader(schema: dict, reader_type: T.StructType | None,
-                   session_tz: str | None) -> _Reader:
+                   session_tz: str | None, zero_width: list[int]) -> _Reader:
     targets = ({f["name"]: None for f in schema["fields"]}
                if reader_type is None
                else {f.name: f.dataType for f in reader_type.fields})
     fields = [(f["name"] if f["name"] in targets else None,
-               compile_reader(f["type"], targets.get(f["name"]), session_tz))
+               _compile(f["type"], targets.get(f["name"]), session_tz,
+                        zero_width))
               for f in schema["fields"]]
     names = tuple(targets)
 
@@ -319,8 +345,9 @@ def _record_reader(schema: dict, reader_type: T.StructType | None,
     return read_record
 
 
-#: cap on the items of one array or map whose items take no bytes
-#: (`null`, an empty record): the bytes left cannot bound their count.
+#: cap on the array and map items of one decoded value whose items take
+#: no bytes (`null`, an empty record): the bytes left cannot bound
+#: their count, and nested blocks multiply it.
 _MAX_ZERO_WIDTH_ITEMS = 4096
 
 
@@ -336,18 +363,19 @@ def _min_width(schema) -> int:
 
 
 def _blocks_reader(schema: dict, t: str, reader_type: T.DataType | None,
-                   session_tz: str | None) -> _Reader:
+                   session_tz: str | None, zero_width: list[int]) -> _Reader:
     is_map = t == "map"
     item_schema = schema["values" if is_map else "items"]
     item_type = None if reader_type is None else (
         reader_type.valueType if is_map else reader_type.elementType)
-    read_item = compile_reader(item_schema, item_type, session_tz)
+    read_item = _compile(item_schema, item_type, session_tz, zero_width)
     read_key = _leaf_reader("string", "string")[1]
     width = _min_width(item_schema) + is_map  # a map key takes ≥ 1 byte
+    if not width and not zero_width:
+        zero_width.append(0)  # compile_reader resets it per value
 
     def read_blocks(buf, pos):
         out: Any = {} if is_map else []
-        total = 0
         while True:
             n, pos = _read_varint(buf, pos)
             if n == 0:
@@ -356,9 +384,12 @@ def _blocks_reader(schema: dict, t: str, reader_type: T.DataType | None,
                 n = -n
                 _, pos = _read_varint(buf, pos)
             # bound the count before the item loop, once per block
-            total += n
-            if (n * width > len(buf) - pos if width
-                    else total > _MAX_ZERO_WIDTH_ITEMS):
+            if width:
+                too_many = n * width > len(buf) - pos
+            else:
+                zero_width[0] += n
+                too_many = zero_width[0] > _MAX_ZERO_WIDTH_ITEMS
+            if too_many:
                 raise AvroError(f"block count {n} exceeds the body")
             for _ in range(n):
                 if is_map:
@@ -425,5 +456,11 @@ def _leaf_reader(schema, t: str) -> tuple[str, _Reader]:
         return t, read_enum
     if t == "fixed":
         size = schema["size"]
-        return t, lambda buf, pos: (bytes(buf[pos:pos + size]), pos + size)
+
+        def read_fixed(buf, pos):
+            if pos + size > len(buf):
+                raise AvroError("bad length")
+            return bytes(buf[pos:pos + size]), pos + size
+
+        return t, read_fixed
     raise AvroError(f"unsupported Avro type {t!r}")

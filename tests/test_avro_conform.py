@@ -203,7 +203,11 @@ def test_map_key_length_is_checked():
     ("null", _body(1_000_000, 0)),
     # 100 longs (at least a byte each) in 3 bytes
     ("long", _body(100, tail=b"\x02\x04\x06")),
-], ids=["null-1M-in-4-bytes", "long-100-in-3-bytes"])
+    # 1,000 blocks of 4,096 nulls in 3,003 bytes: the bound spans the
+    # nested blocks
+    ({"type": "array", "items": "null"}, _body(1000, *[4096, 0] * 1000, 0)),
+], ids=["null-1M-in-4-bytes", "long-100-in-3-bytes",
+        "nested-null-4M-in-3003-bytes"])
 def test_block_count_is_bounded_before_the_items(items, body):
     read = compile_reader(json.dumps({"type": "array", "items": items}))
     start = time.perf_counter()
@@ -212,9 +216,26 @@ def test_block_count_is_bounded_before_the_items(items, body):
     assert time.perf_counter() - start < 0.05
 
 
+def test_fixed_length_is_checked():
+    # a fixed(4) field over a 1-byte body: the reader rejects it like a
+    # short bytes/string body instead of returning the short slice
+    fixed4 = {"type": "fixed", "name": "f4", "size": 4}
+    read = compile_reader(json.dumps({
+        "type": "record", "name": "r", "fields": [
+            {"name": "f", "type": fixed4}]}))
+    with pytest.raises(AvroError, match="bad length"):
+        read(memoryview(b"\x01"), 0)
+    assert read(memoryview(b"abcd"), 0) == ({"f": b"abcd"}, 4)
+
+
 def test_legal_zero_width_blocks_still_decode():
     read = compile_reader('{"type": "array", "items": "null"}')
     assert read(_body(5, 0), 0) == ([None] * 5, 2)
+    read = compile_reader(json.dumps(
+        {"type": "array", "items": {"type": "array", "items": "null"}}))
+    assert read(_body(2, 3, 0, 2, 0, 0), 0) == ([[None] * 3, [None] * 2], 6)
+    for _ in range(2):  # each value starts a fresh count
+        assert read(_body(1, 4000, 0, 0), 0) == ([[None] * 4000], 5)
     empty = {"type": "record", "name": "e", "fields": []}
     read = compile_reader(json.dumps({"type": "map", "values": empty}))
     assert read(_body(1, tail=b"\x02k\x00"), 0) == ({"k": {}}, 4)

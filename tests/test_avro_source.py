@@ -736,7 +736,11 @@ def _v_rec(v_type: dict) -> str:
     # array<long>: 100 items claimed, 3 bytes left
     (_v_rec({"type": "array", "items": "long"}), [1, -2],
      b"\xc8\x01\x02\x04\x06"),
-], ids=["map-key-length", "null-1M-in-4-bytes", "long-100-in-3-bytes"])
+    # array<array<null>>: 1,000 blocks of 4,096 nulls in 3,003 bytes
+    (_v_rec({"type": "array", "items": {"type": "array", "items": "null"}}),
+     [[None] * 3, []], b"\xd0\x0f" + b"\x80\x40\x00" * 1000 + b"\x00"),
+], ids=["map-key-length", "null-1M-in-4-bytes", "long-100-in-3-bytes",
+        "nested-null-4M-in-3003-bytes"])
 def test_hostile_block_side_drops_one_record(spark, writer, good, hostile):
     """A block whose key length or item count the body cannot hold
     side-drops its own record; the records around it decode."""

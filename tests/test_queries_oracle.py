@@ -4,6 +4,8 @@ sf0.01 (CORRECTNESS_r{N}.json)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from kafka_elasticsearch_injector_spark.plans import QUERIES, queries
@@ -139,6 +141,47 @@ def test_fill_cluster_queries_match_oracle_on_multi_file_layout(
     # the oracle reads the original single-file tables
     qd = QUERIES[name]
     problems = compare(qd.spark(spark, multi_file_dir), duck, qd.oracle, name)
+    assert not problems, "\n".join(problems)
+
+
+@pytest.fixture(scope="module")
+def sf001_dir(sf_dir):
+    """The sf0.01 sibling of the configured testdata root."""
+    import os
+
+    path = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    if not os.path.isdir(path):
+        pytest.skip(f"sf0.01 testdata not found at {path}")
+    return path
+
+
+@pytest.mark.parametrize("arm", ["broadcast", "shuffle"])
+@pytest.mark.parametrize("name", ["q_dedup_minhash", "q_dedup_simhash_pairs"])
+def test_banded_join_arms_match_oracle(name, arm, spark, sf001_dir,
+                                       monkeypatch):
+    """Both arms of scale.banded_pairs' broadcast rule are oracle-equal:
+    the declared query's footer row count gives the broadcast arm, and
+    no row count (size_hint=None) the shuffle arm. Spark's own
+    size-based broadcast is off in the shuffle arm, so that arm runs
+    the corpus-scale shuffle join, not a broadcast Spark picked."""
+    from kafka_elasticsearch_injector_spark import io
+
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(threshold)
+    if arm == "shuffle":
+        monkeypatch.setattr(io, "parquet_row_count", lambda *a: None)
+        spark.conf.set(threshold, "-1")
+    con = duck_connection(sf001_dir)
+    try:
+        df = QUERIES[name].spark(spark, sf001_dir)
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        join = "BroadcastHashJoin" if arm == "broadcast" else "SortMergeJoin"
+        # the candidate join itself, keyed on (bidx, bh)
+        assert re.search(join + r" \[bidx#\d+, bh#\d+L?\]", plan), plan
+        problems = compare(df, con, QUERIES[name].oracle, name)
+    finally:
+        spark.conf.set(threshold, prev)
+        con.close()
     assert not problems, "\n".join(problems)
 
 

@@ -5,8 +5,9 @@ Usage: python tools/dump_plans.py OUTDIR [suffix] [only,names]
 
 Writes OUTDIR/<query>_<suffix>.txt (suffix default "before").  Plans are
 analyzed+optimized but NOT executed, so this is driver-only work (cheap).
-A summary line per query with Exchange / join-node / Python-eval counts
-goes to stdout for quick grep-based triage (guide §1/§7.2).
+A summary line per query with Exchange / join-node / Python-eval /
+Generate (explode) counts goes to stdout for quick grep-based triage
+(guide §1/§7.2).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ NODES = [
     "Exchange", "BroadcastExchange", "SortMergeJoin", "ShuffledHashJoin",
     "BroadcastHashJoin", "BroadcastNestedLoopJoin", "CartesianProduct",
     "BatchEvalPython", "ArrowEvalPython", "MapInArrow", "FlatMapGroupsInPandas",
-    "Window", "Sort ",
+    "Window", "Sort ", "Generate",
 ]
 
 
