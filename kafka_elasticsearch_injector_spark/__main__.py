@@ -104,27 +104,16 @@ def main(env: dict[str, str] | None = None, source_df=None):
         metrics=metrics,
         dead_letter_dir=e.get("DEAD_LETTER_DIR"),
     )
-    # METRICS_PORT parity (reference cmd/injector.go:33 + promhttp):
-    # when set and distinct from PROBES_PORT, /metrics gets its own
-    # server on that port (scrape traffic off the probe surface) and
-    # the probes server reverts to probes-only; unset, /metrics stays
-    # on the probes server — one port, same endpoints either way.
-    # (port 0 = ephemeral: two 0s are two DIFFERENT resolved ports,
-    # so 0 always splits; only a literal shared non-zero port means
-    # "one server".)
-    split_metrics = (cfg.metrics_port is not None
-                     and (cfg.metrics_port == 0
-                          or cfg.metrics_port != cfg.probes_port))
     probes = (start_probes(cfg.probes_port,
                            ready_fn=lambda: query.isActive,
-                           metrics_fn=(None if split_metrics
+                           metrics_fn=(None if cfg.metrics_split
                                        else metrics.prometheus_text),
                            liveness_route=cfg.liveness_route,
                            readiness_route=cfg.readiness_route)
               if cfg.probes_port is not None else None)
     metrics_server = (start_probes(cfg.metrics_port,
                                    metrics_fn=metrics.prometheus_text)
-                      if split_metrics else None)
+                      if cfg.metrics_split else None)
     return query, probes, metrics_server
 
 

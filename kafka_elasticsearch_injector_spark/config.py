@@ -151,23 +151,17 @@ class InjectorConfig:
                 raise ValueError(
                     f"{var} must start with '/', got {route!r}")
             # /metrics is the Prometheus surface on the SAME server
-            # whenever METRICS_PORT doesn't split it off (__main__.py:
-            # split iff metrics_port set and distinct from probes_port;
-            # port 0 is ephemeral so two 0s are two ports). In the
-            # folded topology the probe handler matches liveness/
-            # readiness FIRST, so a probe route at /metrics would
-            # silently shadow the scrape endpoint with a bare 200 "ok"
-            # — zero samples, no error. With a split metrics server the
-            # probes server has no /metrics branch and the reference
-            # (promhttp on its own port) allows the route — so do we.
-            # With NO probes server at all (PROBES_PORT unset) the
-            # routes are never served, so nothing can be shadowed —
-            # the check only applies when a probes server exists.
-            metrics_folded = (self.probes_port is not None
-                              and (self.metrics_port is None
-                                   or (self.metrics_port == self.probes_port
-                                       and self.metrics_port != 0)))
-            if route == "/metrics" and metrics_folded:
+            # unless metrics_split. In that folded topology the probe
+            # handler matches liveness/readiness FIRST, so a probe
+            # route at /metrics would silently shadow the scrape
+            # endpoint with a bare 200 "ok" — zero samples, no error.
+            # With a split metrics server the probes server has no
+            # /metrics branch and the reference (promhttp on its own
+            # port) allows the route — so do we. With NO probes server
+            # at all (PROBES_PORT unset) the routes are never served,
+            # so nothing can be shadowed.
+            if (route == "/metrics" and self.probes_port is not None
+                    and not self.metrics_split):
                 raise ValueError(
                     f"{var} must not be /metrics while the Prometheus "
                     "endpoint is served on the probes server (set a "
@@ -176,6 +170,19 @@ class InjectorConfig:
             raise ValueError(
                 "K8S_LIVENESS_ROUTE and K8S_READINESS_ROUTE must differ, "
                 f"both are {self.liveness_route!r}")
+
+    @property
+    def metrics_split(self) -> bool:
+        """Whether /metrics gets its own server on METRICS_PORT
+        (reference cmd/injector.go:33 + promhttp: scrape traffic off
+        the probe surface, the probes server reverts to probes-only).
+        Unset, /metrics stays on the probes server — one port, same
+        endpoints either way. Port 0 is ephemeral, so two 0s are two
+        DIFFERENT resolved ports: 0 always splits, and only a literal
+        shared non-zero port means "one server"."""
+        return (self.metrics_port is not None
+                and (self.metrics_port == 0
+                     or self.metrics_port != self.probes_port))
 
     def python_log_level(self) -> int:
         """The stdlib-logging level for LOG_LEVEL (logger_builder.go's

@@ -21,8 +21,8 @@ Determinism contract (the t2 oracle hash-compares against DuckDB):
 - set intersections are float32 matmuls of 0/1 matrices — exact integers
   below 2^24, so Jaccard = inter/union is the same IEEE double division
   DuckDB computes;
-- dot products / norms accumulate DIMENSION-SEQUENTIALLY
-  (``C += L[:,d] * R[:,d]`` in a loop), reproducing the exact IEEE
+- dot products / norms accumulate DIMENSION-SEQUENTIALLY (seq_cosine:
+  ``C += L[:,d] * R[:,d]`` in a loop), reproducing the exact IEEE
   addition order of ``list_reduce(list_prepend(0.0, ...))`` — results
   are bit-identical to the oracle, not merely close;
 - rounding uses floor(x·1e6 + 0.5)/1e6 — half-away-from-zero for x ≥ 0,
@@ -38,8 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .scale import fill_cluster
-
-DEFAULT_BLOCKS = 8
 
 # Adaptive blocking targets ~this many rows per tile side: tiles stay
 # memory-bounded as N grows (work per tile ~ target², tile count ~
@@ -223,6 +221,71 @@ def _tile_intersections(lpdf: pd.DataFrame, rpdf: pd.DataFrame,
     return inter, llens, rlens, lid, rid
 
 
+# pandas dtype of each Spark type a kernel emits (typed empty frames)
+_PANDAS_DTYPES = {"int": "int32", "bigint": "int64", "double": "float64"}
+
+
+def empty_frame(schema: str) -> pd.DataFrame:
+    """Zero-row frame typed like the DDL `schema` ("a bigint, b double")."""
+    return pd.DataFrame({
+        name: pd.Series(dtype=_PANDAS_DTYPES[kind])
+        for name, kind in (field.split() for field in schema.split(","))})
+
+
+def seq_cosine(lv: np.ndarray, rv: np.ndarray) -> np.ndarray:
+    """Cosine of every (left row, right row) pair, shape (len(lv),
+    len(rv)). Dots and squared norms accumulate DIMENSION-SEQUENTIALLY,
+    ((0 + x1) + x2) + ... per cell — DuckDB list_reduce's IEEE order —
+    and the division is dot / (norm_a · norm_b), the op sequence of
+    functions/vectors.cosine, so every cosine is bit-identical to the
+    oracle fold."""
+    dots = np.zeros((lv.shape[0], rv.shape[0]), np.float64)
+    lsq = np.zeros(lv.shape[0], np.float64)
+    rsq = np.zeros(rv.shape[0], np.float64)
+    for d in range(lv.shape[1]):
+        dots += lv[:, d, None] * rv[None, :, d]
+        lsq += lv[:, d] * lv[:, d]
+        rsq += rv[:, d] * rv[:, d]
+    return dots / (np.sqrt(lsq)[:, None] * np.sqrt(rsq)[None, :])
+
+
+def _tile_pairs(df: DataFrame, id_col: str, payload_col: str, schema: str,
+                score, n_blocks: int | None,
+                size_hint: int | None) -> DataFrame:
+    """The all-pairs tile topology every blocked operator runs on.
+
+    Selects (id, payload), takes B = n_blocks or choose_blocks(size_hint,
+    defaultParallelism), replicates rows to the B(B+1)/2 block pairs and
+    calls ``score(left_rows, right_rows, is_diagonal)`` once per
+    (_k1, _k2) tile through applyInPandas; `schema` is the DDL of the
+    frames `score` returns. A tile that holds no pair of distinct rows
+    (an empty side, or a one-row diagonal) returns the typed empty frame
+    without calling `score`.
+
+    Block choice never counts rows — a plan-time count() is a full scan
+    at 100 TB — so a call with neither n_blocks nor size_hint (parquet
+    footer metadata, io.parquet_row_count, or catalog stats) raises.
+    """
+    if n_blocks is None:
+        if size_hint is None:
+            raise ValueError(
+                "blocked kernels need n_blocks or size_hint (a footer or "
+                "catalog row count); block choice never counts rows")
+        n_blocks = choose_blocks(
+            size_hint, df.sparkSession.sparkContext.defaultParallelism)
+    rep = replicate_block_pairs(
+        df.select(F.col(id_col), F.col(payload_col)), id_col, n_blocks)
+    empty = empty_frame(schema)
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        lpdf, rpdf, diag = _split_tile(pdf, id_col, n_blocks)
+        if len(lpdf) == 0 or len(rpdf) == 0 or (diag and len(lpdf) < 2):
+            return empty
+        return score(lpdf, rpdf, diag)
+
+    return rep.groupBy("_k1", "_k2").applyInPandas(kernel, schema)
+
+
 def jaccard_pairs_blocked(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -234,30 +297,13 @@ def jaccard_pairs_blocked(
 ) -> DataFrame:
     """Exact set-Jaccard for every pair (doc_a < doc_b, jac ≥ threshold).
 
-    `set_col` must hold distinct-element string arrays. Each tile
-    dictionary-encodes its local element vocabulary (pd.factorize), builds
-    0/1 float32 matrices, and gets all pairwise intersection counts from
-    one BLAS sgemm — exact integers, so the Jaccard division is
-    bit-identical to the DuckDB oracle's list_intersect formulation.
-
-    Pass `size_hint` (parquet footer metadata / catalog stats) so block
-    choice doesn't need a plan-time count() — that count is a full scan
-    at 100 TB. With neither n_blocks nor size_hint, count() runs as a
-    last resort.
+    `set_col` must hold distinct-element string arrays. Each tile gets
+    all pairwise intersection counts from _tile_intersections — exact
+    integers, so the Jaccard division is bit-identical to the DuckDB
+    oracle's list_intersect formulation. `n_blocks` / `size_hint` as in
+    _tile_pairs: one of them is required.
     """
-    base = df.select(F.col(id_col), F.col(set_col))
-    if n_blocks is None:
-        n_blocks = choose_blocks(
-            size_hint if size_hint is not None else base.count(),
-            df.sparkSession.sparkContext.defaultParallelism)
-    rep = replicate_block_pairs(base, id_col, n_blocks)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf, rpdf, diag = _split_tile(pdf, id_col, n_blocks)
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({"doc_a": [], "doc_b": [], "jac": []}).astype(
-                {"doc_a": "int64", "doc_b": "int64", "jac": "float64"})
-
+    def score(lpdf, rpdf, diag):
         inter, llens, rlens, lid, rid = _tile_intersections(
             lpdf, rpdf, diag, id_col, set_col, sparse_cutoff)
         union = (llens[:, None] + rlens[None, :]).astype(np.float64) - inter
@@ -273,8 +319,9 @@ def jaccard_pairs_blocked(
         return pd.DataFrame(
             {"doc_a": lo, "doc_b": hi, "jac": jac[ii, jj]})
 
-    return rep.groupBy("_k1", "_k2").applyInPandas(
-        kernel, "doc_a bigint, doc_b bigint, jac double")
+    return _tile_pairs(df, id_col, set_col,
+                       "doc_a bigint, doc_b bigint, jac double",
+                       score, n_blocks, size_hint)
 
 
 def nearest_neighbor_blocked(
@@ -286,36 +333,16 @@ def nearest_neighbor_blocked(
 ) -> DataFrame:
     """Exact cosine top-1 neighbor for every vector (excluding itself).
 
-    Tiles emit each row's best neighbor within the tile (exact cosine,
+    Tiles emit each row's best neighbor within the tile (seq_cosine,
     ties → smallest id); a cheap global max-of-struct combine over the
-    N·B tile winners picks the final neighbor. Cosines accumulate
-    dimension-sequentially, so scores are bit-identical to the oracle's
-    list_reduce and the argmax/tie-break agree exactly.
+    N·B tile winners picks the final neighbor. The cosines are
+    bit-identical to the oracle's list_reduce fold, so the argmax and
+    tie-break agree exactly.
 
     Returns (vec_id_a, nn_id, cos_sim) — the cosine unrounded and
-    bit-identical to the oracle fold (round-6 audit). `size_hint` as in
-    jaccard_pairs_blocked: avoids the plan-time count() for block choice.
+    bit-identical to the oracle fold (round-6 audit). `n_blocks` /
+    `size_hint` as in _tile_pairs: one of them is required.
     """
-    base = df.select(F.col(id_col), F.col(vec_col))
-    if n_blocks is None:
-        n_blocks = choose_blocks(
-            size_hint if size_hint is not None else base.count(),
-            df.sparkSession.sparkContext.defaultParallelism)
-    rep = replicate_block_pairs(base, id_col, n_blocks)
-
-    def seq_dots(lv: np.ndarray, rv: np.ndarray) -> np.ndarray:
-        # ((0 + x1) + x2) + ... per cell — DuckDB list_reduce's IEEE order.
-        out = np.zeros((lv.shape[0], rv.shape[0]), np.float64)
-        for d in range(lv.shape[1]):
-            out += lv[:, d, None] * rv[None, :, d]
-        return out
-
-    def seq_norms(v: np.ndarray) -> np.ndarray:
-        out = np.zeros(v.shape[0], np.float64)
-        for d in range(v.shape[1]):
-            out += v[:, d] * v[:, d]
-        return np.sqrt(out)
-
     int64_max = np.iinfo(np.int64).max
 
     def best_in_tile(cos, own_ids, other_ids):
@@ -324,21 +351,13 @@ def nearest_neighbor_blocked(
         nn = np.where(tied, other_ids[None, :], int64_max).min(axis=1)
         return pd.DataFrame({"vec_id_a": own_ids, "nn_id": nn, "cos": best})
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf, rpdf, diag = _split_tile(pdf, id_col, n_blocks)
-        empty = pd.DataFrame({"vec_id_a": [], "nn_id": [], "cos": []}).astype(
-            {"vec_id_a": "int64", "nn_id": "int64", "cos": "float64"})
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return empty
+    def score(lpdf, rpdf, diag):
         lv = np.stack(list(lpdf[vec_col])).astype(np.float64)
         lid = lpdf[id_col].to_numpy()
         rv = lv if diag else np.stack(list(rpdf[vec_col])).astype(np.float64)
         rid = lid if diag else rpdf[id_col].to_numpy()
-
-        cos = seq_dots(lv, rv) / (seq_norms(lv)[:, None] * seq_norms(rv)[None, :])
+        cos = seq_cosine(lv, rv)
         if diag:
-            if len(lid) < 2:
-                return empty
             np.fill_diagonal(cos, -np.inf)
             return best_in_tile(cos, lid, rid)
         return pd.concat([
@@ -346,8 +365,9 @@ def nearest_neighbor_blocked(
             best_in_tile(cos.T, rid, lid),
         ])
 
-    tile_best = rep.groupBy("_k1", "_k2").applyInPandas(
-        kernel, "vec_id_a bigint, nn_id bigint, cos double")
+    tile_best = _tile_pairs(df, id_col, vec_col,
+                            "vec_id_a bigint, nn_id bigint, cos double",
+                            score, n_blocks, size_hint)
     # Global winner: lexicographic max of (cos, -nn_id) == highest cosine,
     # ties to the smallest neighbor id — same ORDER BY as the oracle.
     won = tile_best.groupBy("vec_id_a").agg(
@@ -356,9 +376,9 @@ def nearest_neighbor_blocked(
     return won.select(
         "vec_id_a",
         (-F.col("w.neg_id")).alias("nn_id"),
-        # unrounded: seq_dots/seq_norms replicate the oracle fold's
-        # IEEE order exactly, so the cosine is bit-identical — the
-        # round was the only divergence-capable step (round-6 audit)
+        # unrounded: seq_cosine replicates the oracle fold's IEEE order
+        # exactly, so the cosine is bit-identical — the round was the
+        # only divergence-capable step (round-6 audit)
         F.col("w.cos").alias("cos_sim"),
     )
 
@@ -400,46 +420,23 @@ def containment_pairs_blocked(
     Both regimes produce identical exact-integer intersections → pair
     output is bit-identical.
     """
-    base = df.select(F.col(id_col), F.col(set_col))
-    if n_blocks is None:
-        n_blocks = choose_blocks(
-            size_hint if size_hint is not None else base.count(),
-            df.sparkSession.sparkContext.defaultParallelism)
-    rep = replicate_block_pairs(base, id_col, n_blocks)
+    def emit(inter_ab, a_lens, a_ids, b_ids, mask):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cont = inter_ab / a_lens[:, None].astype(np.float64)
+        ii, jj = np.nonzero(mask & (a_lens[:, None] > 0) & (cont >= threshold))
+        return pd.DataFrame({
+            "doc_a": a_ids[ii], "doc_b": b_ids[jj],
+            "containment": cont[ii, jj]})
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"doc_a": [], "doc_b": [], "containment": []}).astype(
-            {"doc_a": "int64", "doc_b": "int64", "containment": "float64"})
-        lpdf, rpdf, diag = _split_tile(pdf, id_col, n_blocks)
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return empty
-
+    def score(lpdf, rpdf, diag):
         inter, llens, rlens, lid, rid = _tile_intersections(
             lpdf, rpdf, diag, id_col, set_col, sparse_cutoff)
-
-        frames = []
-
-        def emit(inter_ab, a_lens, a_ids, b_ids, mask_extra=None):
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cont = inter_ab / a_lens[:, None].astype(np.float64)
-            mask = (a_lens[:, None] > 0) & (cont >= threshold)
-            if mask_extra is not None:
-                mask &= mask_extra
-            ii, jj = np.nonzero(mask)
-            frames.append(pd.DataFrame({
-                "doc_a": a_ids[ii], "doc_b": b_ids[jj],
-                "containment": cont[ii, jj]}))
-
         if diag:
-            emit(inter, llens, lid, rid,
-                 mask_extra=lid[:, None] != rid[None, :])
-        else:
-            emit(inter, llens, lid, rid)          # left-in-right
-            emit(inter.T, rlens, rid, lid)        # right-in-left
-        out = pd.concat(frames, ignore_index=True) if frames else empty
-        return out.astype({"doc_a": "int64", "doc_b": "int64",
-                           "containment": "float64"})
+            return emit(inter, llens, lid, rid, lid[:, None] != rid[None, :])
+        return pd.concat([emit(inter, llens, lid, rid, True),    # left-in-right
+                          emit(inter.T, rlens, rid, lid, True)],  # right-in-left
+                         ignore_index=True)
 
-    return rep.groupBy("_k1", "_k2").applyInPandas(
-        kernel, "doc_a bigint, doc_b bigint, containment double")
+    return _tile_pairs(df, id_col, set_col,
+                       "doc_a bigint, doc_b bigint, containment double",
+                       score, n_blocks, size_hint)

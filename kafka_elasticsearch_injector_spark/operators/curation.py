@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import tokens, word_ngrams
+from .dedup import gram_set, tokens, word_ngrams
 from .scale import fill_cluster
 
 # 2^32 as a double: dividing the 8-hex-digit (32-bit) md5 prefix by it
@@ -124,7 +124,7 @@ def decontaminate(corpus: DataFrame, eval_df: DataFrame, n: int = 8,
     side derived from a cluster-scale corpus scan already has ≥-cores
     splits, so no rebalance is needed there either way.
     """
-    grams = F.array_distinct(word_ngrams(tokens(text_col), n))
+    grams = gram_set(text_col, n)
     # N-gram construction is the CPU cost here and runs below any
     # exchange — rebalance the CORPUS side so it uses the whole
     # cluster. The eval side stays on its scan's own splits (the same
@@ -268,8 +268,7 @@ def ngram_coverage(corpus: DataFrame, probe: DataFrame, n: int = 2,
       semi-join; no global distinct over corpus grams ever runs.
     """
     probe_grams = (probe.select(
-        F.col(id_col), F.explode(F.array_distinct(
-            word_ngrams(tokens(text_col), n))).alias("g")))
+        F.col(id_col), F.explode(gram_set(text_col, n)).alias("g")))
     probe_gram_set = probe_grams.select("g").distinct()
     # fill_cluster: the corpus-side shingling is the CPU-bound stage;
     # a few-split input would run it on a sliver of the cluster (no-op
@@ -694,8 +693,7 @@ def ngram_novelty(df: DataFrame, buckets: int = 10, n: int = 2,
     no-op at real scale where splits already parallelize."""
     per_gram = (fill_cluster(ntile_by_id(df, buckets, id_col))
                 .select("bucket",
-                        F.explode(F.array_distinct(
-                            word_ngrams(tokens(text_col), n))).alias("_g"))
+                        F.explode(gram_set(text_col, n)).alias("_g"))
                 .groupBy("_g")
                 .agg(F.collect_set("bucket").alias("_bs")))
     ex = per_gram.select(F.array_min("_bs").alias("_first"),

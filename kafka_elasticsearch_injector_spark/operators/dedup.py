@@ -56,6 +56,12 @@ def word_ngrams(toks: Column, n: int) -> Column:
     return F.when(F.size(toks) >= n, grams).otherwise(empty)
 
 
+def gram_set(text: Column | str, n: int) -> Column:
+    """The distinct word n-grams of `text`: the shingle set every
+    near-dup, containment and n-gram-overlap operator compares."""
+    return F.array_distinct(word_ngrams(tokens(text), n))
+
+
 def _salted_md5(salt: int, value: Column) -> Column:
     return F.md5(F.concat(F.lit(f"{salt}:"), value))
 
@@ -114,8 +120,7 @@ def _minhash_bands(df: DataFrame, id_col: str, text_col: str, k: int,
     carried signatures needs — is representation-invariant."""
     shingled = df.select(
         F.col(id_col),
-        F.array_distinct(
-            word_ngrams(tokens(text_col), shingle_n)).alias("shingles"))
+        gram_set(text_col, shingle_n).alias("shingles"))
     sigs = shingled.select(
         id_col, "shingles", *minhash_signature(F.col("shingles"), k))
     bands = lsh_band_hashes(k, rows_per_band)
@@ -218,8 +223,7 @@ def minhash_lsh_pairs(
         # side at sf0.01, pure stage overhead). At scale the scan's
         # own splits parallelize the distinct.
         raw_grams = df.select(
-            F.array_distinct(word_ngrams(tokens(text_col), shingle_n))
-            .alias("shingles"))
+            gram_set(text_col, shingle_n).alias("shingles"))
         banded = (
             banded.crossJoin(F.broadcast(_vocab_row(raw_grams)))
             .withColumn("_m", gid_map)
@@ -520,9 +524,7 @@ def ngram_jaccard_pairs(
     from .blocked import jaccard_pairs_blocked
 
     grams = fill_cluster(df).select(
-        F.col(id_col),
-        F.array_distinct(word_ngrams(tokens(text_col), n)).alias("g"),
-    )
+        F.col(id_col), gram_set(text_col, n).alias("g"))
     return jaccard_pairs_blocked(
         grams, id_col=id_col, set_col="g", threshold=threshold,
         size_hint=size_hint)

@@ -166,8 +166,7 @@ def semdedup_cluster_stats(emb: DataFrame, threshold: float, k: int = 8,
     oracle-replayable small.
 
     Physical shape (r15 optimization): the within-cluster scoring runs
-    as ONE numpy tile kernel per cluster group (the same Arrow
-    group-map topology as operators/blocked.py) instead of a
+    as ONE numpy kernel per cluster group (applyInPandas) instead of a
     cluster-keyed self-JOIN + per-pair codegen cosine. The join
     formulation shuffled ~1 MB yet burned ~2.6 s at sf0.1: with only k
     join keys AQE's byte-based partition coalescing ran the quadratic
@@ -178,17 +177,16 @@ def semdedup_cluster_stats(emb: DataFrame, threshold: float, k: int = 8,
     chunk×|cluster| tiles, never |cluster|², so a production-sized
     cluster (~10⁴ rows) peaks at chunk·10⁴·8 B ≈ 40 MB, not 800 MB.
 
-    Determinism contract (same as blocked.py): dots/norms accumulate
-    DIMENSION-SEQUENTIALLY (``acc += M[:,d]*M[:,d]``), reproducing the
-    oracle's list_reduce IEEE order exactly, and the division is
-    dot/(norm_a·norm_b) — the same op sequence as
-    functions/vectors.cosine — so the threshold admits the bit-identical
-    pair set in both engines (equality verified in
+    Each chunk's cosines come from blocked.seq_cosine, bit-identical to
+    the oracle's list_reduce fold, so the threshold admits the
+    bit-identical pair set in both engines (equality verified in
     tests/test_part_e_ops.py against the join+HOF formulation).
     The kernel emits only the QUALIFYING (cluster, id_b) pairs; the
     count / distinct-count rollup stays a JVM hash aggregate."""
     import numpy as np
     import pandas as pd
+
+    from .blocked import empty_frame, seq_cosine
 
     assigned = kmeans_assign(emb, k=k, iters=iters, dim=dim,
                              id_col=id_col, vec_col=vec_col)
@@ -197,26 +195,20 @@ def semdedup_cluster_stats(emb: DataFrame, threshold: float, k: int = 8,
     members = assigned.join(vecs, id_col).select(
         "cluster", F.col(id_col).alias("vid"), "v")
 
+    schema = "cluster int, id_b bigint"
+    empty = empty_frame(schema)
+
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        empty = pd.DataFrame({"cluster": [], "id_b": []}).astype(
-            {"cluster": "int32", "id_b": "int64"})
         ids = pdf["vid"].to_numpy()
         m = len(ids)
         if m < 2:
             return empty
         mat = np.stack(list(pdf["v"])).astype(np.float64)
-        norms = np.zeros(m, np.float64)
-        for d in range(mat.shape[1]):   # oracle's sequential IEEE order
-            norms += mat[:, d] * mat[:, d]
-        norms = np.sqrt(norms)
         cl = int(pdf["cluster"].iat[0])
         outs = []
         for lo in range(0, m, chunk_rows):
             hi = min(lo + chunk_rows, m)
-            dots = np.zeros((hi - lo, m), np.float64)
-            for d in range(mat.shape[1]):
-                dots += mat[lo:hi, d, None] * mat[None, :, d]
-            cos = dots / (norms[lo:hi, None] * norms[None, :])
+            cos = seq_cosine(mat[lo:hi], mat)
             mask = (cos >= threshold) & (ids[lo:hi, None] < ids[None, :])
             ii, jj = np.nonzero(mask)
             if len(ii):
@@ -225,8 +217,7 @@ def semdedup_cluster_stats(emb: DataFrame, threshold: float, k: int = 8,
                      "id_b": ids[jj]}))
         return pd.concat(outs, ignore_index=True) if outs else empty
 
-    qpairs = members.groupBy("cluster").applyInPandas(
-        kernel, "cluster int, id_b bigint")
+    qpairs = members.groupBy("cluster").applyInPandas(kernel, schema)
     dups = (qpairs.groupBy("cluster")
             .agg(F.count(F.lit(1)).alias("n_dup_pairs"),
                  F.countDistinct("id_b").alias("n_pruned")))

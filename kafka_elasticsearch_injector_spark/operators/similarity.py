@@ -287,10 +287,11 @@ def cosine_pairs_lsh(emb: DataFrame, threshold: float = 0.9,
     (vec_a < vec_b, unrounded exact cos_sim).
 
     This is the discovery path the blocked O(N²) kernel
-    (nearest_neighbor_pairs) verifies against: the candidates are the
-    banded self-join over the tables' buckets (scale.banded_pairs: a
-    shuffle equi-join on (table, bucket), each pair once at its first
-    matching table), and cosine is computed only on candidates.
+    (blocked.nearest_neighbor_blocked) verifies against: the candidates
+    are the banded self-join over the tables' buckets
+    (scale.banded_pairs: a shuffle equi-join on (table, bucket), each
+    pair once at its first matching table), and cosine is computed only
+    on candidates.
     Recall: a pair at angle θ collides in one table with
     P = (1-θ/π)^planes; T tables union as 1-(1-P)^T. Worked: at
     cos ≥ 0.95 (θ ≤ 18°) P ≈ 0.43, so two 8-plane tables catch ~2/3
@@ -312,21 +313,3 @@ def cosine_pairs_lsh(emb: DataFrame, threshold: float = 0.9,
         .select("vec_a", "vec_b", F.col("_cos").alias("cos_sim"))
     )
 
-
-def nearest_neighbor_pairs(emb: DataFrame, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           size_hint: int | None = None) -> DataFrame:
-    """Embedding-cosine near-dup: exact top-1 neighbor for every vector.
-    O(N²) scoring — the verify/oracle baseline; ivf_topk (or LSH banding)
-    prunes candidates first when exactness isn't required.
-
-    Physical plan: blocked tile topology (operators/blocked.py) — B²
-    tiles, one numpy kernel per tile with dimension-sequential cosine
-    accumulation (bit-identical to the oracle's list_reduce), per-tile
-    winners combined by a cheap global max — instead of materializing the
-    N² cross-join rows through interpreted higher-order functions.
-    """
-    from .blocked import nearest_neighbor_blocked
-
-    return nearest_neighbor_blocked(
-        emb, id_col=id_col, vec_col=vec_col, size_hint=size_hint)

@@ -525,9 +525,9 @@ _DD_PAIR_DOT = ("list_reduce(list_prepend(0.0, list_transform(range(1, 65), "
 )
 def q_dedup_embcos(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import parquet_row_count
-    from ..operators import similarity as S
+    from ..operators.blocked import nearest_neighbor_blocked
 
-    return S.nearest_neighbor_pairs(
+    return nearest_neighbor_blocked(
         table(spark, sf_dir, "embeddings"),
         size_hint=parquet_row_count(sf_dir, "embeddings"))
 

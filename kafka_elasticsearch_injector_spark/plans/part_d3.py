@@ -621,7 +621,7 @@ _CONTAIN_THRESH = 0.3
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import parquet_row_count
     from ..operators.blocked import containment_pairs_blocked
-    from ..operators.dedup import tokens, word_ngrams
+    from ..operators.dedup import gram_set
     docs = table(spark, sf_dir, "documents")
     # Rebalance the RAW scan before the bigram projection (guide §2.6
     # shape, r15): the interpreted word_ngrams/array_distinct HOF chain
@@ -631,8 +631,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # after the fix, identical pairs). At scale the guard makes this a
     # no-op, same as every fill_cluster site.
     grams = fill_cluster(docs.select("doc_id", "text")).select(
-        "doc_id",
-        F.array_distinct(word_ngrams(tokens("text"), 2)).alias("g"))
+        "doc_id", gram_set("text", 2).alias("g"))
     return containment_pairs_blocked(
         grams, id_col="doc_id", set_col="g", threshold=_CONTAIN_THRESH,
         size_hint=parquet_row_count(sf_dir, "documents"))

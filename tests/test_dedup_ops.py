@@ -165,6 +165,23 @@ def test_blocked_size_hint_skips_count_job(spark):
     assert dict(out.dtypes)["doc_a"] == "bigint"   # int ids widen
 
 
+@pytest.mark.parametrize("op", ["jaccard_pairs_blocked",
+                                "containment_pairs_blocked",
+                                "nearest_neighbor_blocked"])
+def test_blocked_kernels_without_size_raise(spark, op):
+    # Block choice never counts rows: with neither n_blocks nor
+    # size_hint the call raises at plan time and starts no Spark job.
+    from kafka_elasticsearch_injector_spark.operators import blocked
+
+    df = spark.createDataFrame(
+        [(1, ["x", "y"]), (2, ["x", "z"])], "doc_id bigint, g array<string>")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup() or [])
+    with pytest.raises(ValueError, match="n_blocks or size_hint"):
+        getattr(blocked, op)(df, "doc_id", "g")
+    assert set(tracker.getJobIdsForGroup() or []) == before
+
+
 @pytest.mark.parametrize("max_hamming", [0, 1, 3, 5])
 def test_simhash_pairs_complete_vs_bruteforce(spark, max_hamming):
     """The multi-index topology must find EXACTLY the brute-force pair

@@ -500,10 +500,10 @@ def test_dedup_recall_sample_mod_one_is_full(spark):
     )
 
     docs = _recall_fixture(spark)
-    full = dedup_recall(docs, threshold=0.5).collect()
+    full = dedup_recall(docs, threshold=0.5, size_hint=40).collect()
     assert len(full) == 1 and full[0].n_true_pairs > 0
-    assert dedup_recall(docs, threshold=0.5, sample_mod=1).collect() \
-        == full
+    assert dedup_recall(docs, threshold=0.5, size_hint=40,
+                        sample_mod=1).collect() == full
 
 
 def test_dedup_recall_sampled_equals_direct_on_subcorpus(spark):
@@ -518,8 +518,9 @@ def test_dedup_recall_sampled_equals_direct_on_subcorpus(spark):
     sub = hash_sample(docs, 3)
     n_sub = sub.count()
     assert 0 < n_sub < 40            # the sample is real and proper
-    direct = dedup_recall(sub, threshold=0.5).collect()
-    sampled = dedup_recall(docs, threshold=0.5, sample_mod=3).collect()
+    direct = dedup_recall(sub, threshold=0.5, size_hint=n_sub).collect()
+    sampled = dedup_recall(docs, threshold=0.5, size_hint=40,
+                           sample_mod=3).collect()
     assert sampled == direct
     assert len(sampled) == 1 and sampled[0].n_true_pairs > 0
 

@@ -185,6 +185,32 @@ def test_banded_join_arms_match_oracle(name, arm, spark, sf001_dir,
     assert not problems, "\n".join(problems)
 
 
+@pytest.mark.parametrize("name", ["q_dedup_ngram", "q_containment_pairs"])
+def test_sparse_tile_regime_matches_oracle(name, spark, sf001_dir,
+                                           monkeypatch):
+    """The sparse side of the set kernels' per-tile regime switch
+    (blocked.SPARSE_TILE_VOCAB) is oracle-equal. Every sf0.01 tile
+    vocabulary is under the cutoff, so the declared query runs with the
+    kernels' cutoff at 0, which sends every non-empty tile through the
+    sparse accumulation."""
+    from kafka_elasticsearch_injector_spark.operators import blocked
+
+    forced = []
+    for op in ("jaccard_pairs_blocked", "containment_pairs_blocked"):
+        def sparse(*args, _op=getattr(blocked, op), **kwargs):
+            forced.append(_op)
+            return _op(*args, sparse_cutoff=0, **kwargs)
+        monkeypatch.setattr(blocked, op, sparse)
+    con = duck_connection(sf001_dir)
+    try:
+        problems = compare(QUERIES[name].spark(spark, sf001_dir), con,
+                           QUERIES[name].oracle, name)
+    finally:
+        con.close()
+    assert forced, "the declared query did not reach a patched kernel"
+    assert not problems, "\n".join(problems)
+
+
 @pytest.fixture(scope="module")
 def edge_events(spark, sf_dir, tmp_path_factory):
     """A copy of `events` whose `props` also holds what the payload ops

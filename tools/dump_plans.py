@@ -5,6 +5,8 @@ Usage: python tools/dump_plans.py OUTDIR [suffix] [only,names]
 
 Writes OUTDIR/<query>_<suffix>.txt (suffix default "before").  Plans are
 analyzed+optimized but NOT executed, so this is driver-only work (cheap).
+Expression ids (`#123`) and `plan_id=123` are masked in the written
+files, so dumps from two commits diff as text.
 A summary line per query with Exchange / join-node / Python-eval /
 Generate (explode) counts goes to stdout for quick grep-based triage
 (guide §1/§7.2).
@@ -27,6 +29,9 @@ NODES = [
     "Window", "Sort ", "Generate",
 ]
 
+# per-session counters: expression ids and subquery/reuse plan ids
+MASK = re.compile(r"(#|plan_id=)\d+")
+
 
 def main() -> None:
     outdir = sys.argv[1]
@@ -48,7 +53,7 @@ def main() -> None:
         plan = jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(plan)
+            f.write(MASK.sub(r"\1N", plan))
         counts = {n: len(re.findall(re.escape(n), plan)) for n in NODES}
         short = " ".join(f"{n.strip()}={c}" for n, c in counts.items() if c)
         print(f"{name}: {short}", flush=True)
