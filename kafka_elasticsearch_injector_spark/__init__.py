@@ -10,11 +10,13 @@ surface and LLM-data-pipeline operators declared in SURVEY.md §2.
 Layout:
   session.py   — SparkSession builder tuned for local[*] and cluster scale
   config.py    — dataclass mirroring the reference env-var surface
-  io.py        — table readers (parquet substrate, Kafka source)
+  io.py        — table readers (parquet substrate)
   operators/   — injector ops (Part A), dedup, similarity, text, multimodal
-  functions/   — reusable column expression helpers (vector math, json)
+  functions/   — reusable column expression helpers (vector math)
   plans/       — declared query inventory (queries() + oracle_sql() pairs)
-  streaming/   — the actual injector pipeline: Kafka source → ES sink
+  sources/     — Confluent-framed Avro decode and the schema registry client
+  streaming/   — the actual injector pipeline: Kafka source
+                 (pipeline.py) → ES sink
 """
 
 __version__ = "0.1.0"

@@ -47,7 +47,7 @@ from .sources.schema_registry import SchemaRegistryClient
 from .streaming.es_sink import HttpTransport
 from .streaming.metrics import InjectorMetrics
 from .streaming.pipeline import start_pipeline
-from .streaming.probes import start_probes
+from .streaming.probes import ProbeServer
 
 
 def main(env: dict[str, str] | None = None, source_df=None):
@@ -104,15 +104,15 @@ def main(env: dict[str, str] | None = None, source_df=None):
         metrics=metrics,
         dead_letter_dir=e.get("DEAD_LETTER_DIR"),
     )
-    probes = (start_probes(cfg.probes_port,
-                           ready_fn=lambda: query.isActive,
-                           metrics_fn=(None if cfg.metrics_split
-                                       else metrics.prometheus_text),
-                           liveness_route=cfg.liveness_route,
-                           readiness_route=cfg.readiness_route)
+    probes = (ProbeServer(cfg.probes_port,
+                          ready_fn=lambda: query.isActive,
+                          metrics_fn=(None if cfg.metrics_split
+                                      else metrics.prometheus_text),
+                          liveness_route=cfg.liveness_route,
+                          readiness_route=cfg.readiness_route).start()
               if cfg.probes_port is not None else None)
-    metrics_server = (start_probes(cfg.metrics_port,
-                                   metrics_fn=metrics.prometheus_text)
+    metrics_server = (ProbeServer(cfg.metrics_port,
+                                  metrics_fn=metrics.prometheus_text).start()
                       if cfg.metrics_split else None)
     return query, probes, metrics_server
 

@@ -111,8 +111,6 @@ class InjectorConfig:
     # "512kb", or plain bytes). ES sizes bulk guidance in MB, not rows;
     # None keeps the reference's pure row-count batching.
     bulk_max_bytes: int | None = None
-    max_retries: int = 10                # reference retries FOREVER (store.go:33-46);
-                                         # bounded here: an endless loop live-locks
 
     def __post_init__(self) -> None:
         if self.record_type not in ("avro", "json"):

@@ -96,24 +96,29 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def small_vocab_probe(sf_dir: str, name: str, col: str = "text",
-                      limit: int = 64, probe_rows: int = 4096) -> int | None:
+# Width of the single-long set mask in dedup.minhash_lsh_pairs' masked
+# verify: one bit per vocabulary element, so at most 64 distinct grams.
+VOCAB_MASK_BITS = 64
+
+
+def small_vocab_probe(sf_dir: str, name: str,
+                      col: str = "text") -> int | None:
     """Driver-side bounded probe: distinct whitespace tokens of `col`
-    over the first `probe_rows` rows, early-exiting as soon as the
-    running union exceeds `limit`. Returns the observed count (≤ limit)
-    or None.
+    over the first 4,096 rows, early-exiting as soon as the running
+    union exceeds VOCAB_MASK_BITS. Returns the observed count (≤
+    VOCAB_MASK_BITS) or None.
 
     Purpose: choosing the single-long set encoding in
     dedup.minhash_lsh_pairs needs to know whether the GLOBAL vocabulary
-    fits 64 bits. Deciding with a Spark job means a scan before the real
-    query; this probe streams a few Arrow batches of one column on the
-    driver (keyboard-interrupt cheap, no Spark job) instead. Real text
-    blows past `limit` within the first batch and exits immediately;
-    enum-like columns confirm cheaply. The probe is a SAMPLE: a corpus
-    whose tail introduces new tokens past `probe_rows` would pass here
-    and then fail LOUDLY at runtime via the masked verify's overflow
-    guard — callers with corpus knowledge should pass vocab_hint
-    directly.
+    fits the mask. Deciding with a Spark job means a scan before the
+    real query; this probe streams a few Arrow batches of one column on
+    the driver (keyboard-interrupt cheap, no Spark job) instead. Real
+    text blows past the width within the first batch and exits
+    immediately; enum-like columns confirm cheaply. The probe is a
+    SAMPLE: a corpus whose tail introduces new tokens past 4,096 rows
+    would pass here and then fail LOUDLY at runtime via the masked
+    verify's overflow guard — callers with corpus knowledge should pass
+    vocab_hint directly.
     """
     import pyarrow.parquet as pq
 
@@ -131,9 +136,9 @@ def small_vocab_probe(sf_dir: str, name: str, col: str = "text",
         for txt in batch.column(0).to_pylist():
             if txt:
                 vocab.update(txt.split(" "))
-                if len(vocab) > limit:
+                if len(vocab) > VOCAB_MASK_BITS:
                     return None
         seen += batch.num_rows
-        if seen >= probe_rows:
+        if seen >= 4096:
             break
     return len(vocab)

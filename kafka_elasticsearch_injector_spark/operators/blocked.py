@@ -45,9 +45,8 @@ from .scale import fill_cluster
 TARGET_TILE_ROWS = 1500
 
 
-def choose_blocks(n_rows: int, parallelism: int,
-                  target: int = TARGET_TILE_ROWS) -> int:
-    by_size = -(-n_rows // target)  # ceil: bound tile memory/compute
+def choose_blocks(n_rows: int, parallelism: int) -> int:
+    by_size = -(-n_rows // TARGET_TILE_ROWS)  # ceil: bound tile memory/compute
     floor = max(4, int((2 * parallelism) ** 0.5))  # ≥ ~parallelism tiles
     return max(min(max(by_size, floor), 256), 1)
 
@@ -328,7 +327,6 @@ def nearest_neighbor_blocked(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_blocks: int | None = None,
     size_hint: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-1 neighbor for every vector (excluding itself).
@@ -340,8 +338,8 @@ def nearest_neighbor_blocked(
     tie-break agree exactly.
 
     Returns (vec_id_a, nn_id, cos_sim) — the cosine unrounded and
-    bit-identical to the oracle fold (round-6 audit). `n_blocks` /
-    `size_hint` as in _tile_pairs: one of them is required.
+    bit-identical to the oracle fold (round-6 audit). `size_hint` as in
+    _tile_pairs: it is required.
     """
     int64_max = np.iinfo(np.int64).max
 
@@ -367,7 +365,7 @@ def nearest_neighbor_blocked(
 
     tile_best = _tile_pairs(df, id_col, vec_col,
                             "vec_id_a bigint, nn_id bigint, cos double",
-                            score, n_blocks, size_hint)
+                            score, n_blocks=None, size_hint=size_hint)
     # Global winner: lexicographic max of (cos, -nn_id) == highest cosine,
     # ties to the smallest neighbor id — same ORDER BY as the oracle.
     won = tile_best.groupBy("vec_id_a").agg(

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import gram_set, tokens, word_ngrams
+from .dedup import gram_set, md5_32, tokens, word_ngrams
 from .scale import fill_cluster
 
 # 2^32 as a double: dividing the 8-hex-digit (32-bit) md5 prefix by it
@@ -91,12 +91,19 @@ def mixture_sample(docs: DataFrame, rates: dict[str, float],
     id, thresholds are nested), which makes mixture experiments
     monotone. Plan: one narrow filter, no shuffle, no state.
     """
-    u = (F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
-                16, 10).cast("bigint") / F.lit(_TWO_32))
+    u, rate = mixture_draw(rates, key_col, default_rate, id_col)
+    return docs.filter(u < rate)
+
+
+def mixture_draw(rates: dict[str, float], key_col: str,
+                 default_rate: float, id_col: str) -> tuple[Column, Column]:
+    """(u, rate) of mixture_sample: the row's uniform [0,1) md5 draw
+    and its domain's keep rate; a row is kept iff u < rate."""
+    u = md5_32(F.col(id_col).cast("string")) / F.lit(_TWO_32)
     rate: Column = F.lit(float(default_rate))
     for key, r in sorted(rates.items()):
         rate = F.when(F.col(key_col) == key, F.lit(float(r))).otherwise(rate)
-    return docs.filter(u < rate)
+    return u, rate
 
 
 def decontaminate(corpus: DataFrame, eval_df: DataFrame, n: int = 8,
@@ -189,9 +196,7 @@ def dsir_weights(corpus: DataFrame, target: DataFrame,
     def feats(df: DataFrame) -> DataFrame:
         toks = tokens(text_col)
         grams = word_ngrams(toks, 2)
-        bucket = F.pmod(
-            F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10)
-            .cast("bigint"), F.lit(n_buckets))
+        bucket = F.pmod(md5_32(F.col("gram")), F.lit(n_buckets))
         return (fill_cluster(df)
                 .select(F.col(id_col), F.explode(grams).alias("gram"))
                 .select(id_col, bucket.alias("bucket")))

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import VOCAB_MASK_BITS
 from .scale import banded_pairs, fill_cluster
 
 
@@ -64,6 +65,12 @@ def gram_set(text: Column | str, n: int) -> Column:
 
 def _salted_md5(salt: int, value: Column) -> Column:
     return F.md5(F.concat(F.lit(f"{salt}:"), value))
+
+
+def md5_32(value: Column) -> Column:
+    """The first 32 bits of md5(value) as a non-negative bigint. The SQL
+    twin is CAST('0x' || substr(md5(value), 1, 8) AS BIGINT)."""
+    return F.conv(F.substring(F.md5(value), 1, 8), 16, 10).cast("bigint")
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -149,9 +156,10 @@ def _mask_cols(set_col: str = "shingles") -> tuple[Column, Column]:
     it away."""
     mask = F.expr(
         f"aggregate({set_col}, cast(0 as bigint), (acc, g) -> acc | "
-        "shiftleft(1L, if(element_at(_m, g) < 64, element_at(_m, g), "
-        "cast(raise_error('minhash_lsh_pairs vocab_hint: global "
-        "vocabulary exceeds 64 distinct elements') as int))))")
+        f"shiftleft(1L, if(element_at(_m, g) < {VOCAB_MASK_BITS}, "
+        "element_at(_m, g), cast(raise_error('minhash_lsh_pairs "
+        "vocab_hint: global vocabulary exceeds "
+        f"{VOCAB_MASK_BITS} distinct elements') as int))))")
     return F.size(set_col).alias("sz"), mask.alias("mask")
 
 
@@ -183,10 +191,11 @@ def minhash_lsh_pairs(
       the candidate join's broadcast or shuffle topology
       (scale.banded_pairs).
     - `vocab_hint`: global distinct-shingle count when the caller knows
-      it is ≤ 64 (enum-like sets). Enables single-long set encoding:
-      verify is `bit_count(mask_a & mask_b)` inline in the same codegen
-      stage — no join back to shingle arrays. Real text vocabularies
-      leave this None and verify via array_intersect on candidates.
+      it is ≤ VOCAB_MASK_BITS (64; enum-like sets). Enables single-long
+      set encoding: verify is `bit_count(mask_a & mask_b)` inline in the
+      same codegen stage — no join back to shingle arrays. Real text
+      vocabularies leave this None and verify via array_intersect on
+      candidates.
     - `carry_sigs`: additionally emit the two endpoints' signatures as
       16-byte binaries (a_sig_0..k-1 / b_sig_0..k-1) on every pair.
       The calibration consumer (q_minhash_calibration) needs per-pair
@@ -204,7 +213,7 @@ def minhash_lsh_pairs(
     banded, band_cols = _minhash_bands(filled, id_col, text_col, k,
                                        rows_per_band, shingle_n, sig_names)
 
-    masked = vocab_hint is not None and vocab_hint <= 64
+    masked = vocab_hint is not None and vocab_hint <= VOCAB_MASK_BITS
     if masked:
         # Inline (sz, mask) in the SAME projection as the band hashes
         # (r15): the old shape ran a separate mask relation's
@@ -572,8 +581,7 @@ def hash_sample(df: DataFrame, sample_mod: int | None,
       % m = 0."""
     if sample_mod is None or sample_mod <= 1:
         return df
-    u = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
-               16, 10).cast("bigint")
+    u = md5_32(F.col(id_col).cast("string"))
     return df.filter(u % sample_mod == 0)
 
 

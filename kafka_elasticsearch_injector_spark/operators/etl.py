@@ -38,8 +38,7 @@ def merge_upsert(target: DataFrame, updates: DataFrame,
 def scd2_apply(dim: DataFrame, changes: DataFrame, key_cols: list[str],
                ts_col: str, current_col: str = "is_current",
                start_col: str = "valid_from",
-               end_col: str = "valid_to",
-               broadcast_changes: bool = True) -> DataFrame:
+               end_col: str = "valid_to") -> DataFrame:
     """Slowly-changing-dimension type 2: each change CLOSES the key's
     current row (valid_to = change ts, is_current = false) and appends
     a new current row (valid_from = change ts, valid_to = null).
@@ -49,16 +48,11 @@ def scd2_apply(dim: DataFrame, changes: DataFrame, key_cols: list[str],
     most one change per key per call (dedupe upstream with a
     row_number over ts if needed).
 
-    `broadcast_changes` defaults to True — a CDC batch is normally tiny
-    next to the dimension, and the hint keeps the dimension un-shuffled.
-    Pass False when a change batch can exceed executor memory (bulk
-    backfills); the join then shuffles both sides on the key, and AQE
-    still converts back to broadcast at runtime if the batch is small.
+    The changes side is broadcast: a CDC batch is normally tiny next
+    to the dimension, and the hint keeps the dimension un-shuffled.
     """
-    chg_keyed = changes.select(
-        *key_cols, F.col(ts_col).alias("_chg_ts"))
-    if broadcast_changes:
-        chg_keyed = F.broadcast(chg_keyed)
+    chg_keyed = F.broadcast(changes.select(
+        *key_cols, F.col(ts_col).alias("_chg_ts")))
     closed = (
         dim.join(chg_keyed, key_cols, "left")
         .withColumn(

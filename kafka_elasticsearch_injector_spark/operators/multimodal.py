@@ -85,12 +85,11 @@ AUDIO_FEATURE_SCHEMA = ("doc_id bigint, n_samples int, n_frames int, "
                         "rms_mean double, zcr_mean double")
 
 
-def attach_audio(df: DataFrame, text_col: str = "text",
-                 sample_rate: int = 16000) -> DataFrame:
+def attach_audio(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Fabricate a deterministic audio column: the text's UTF-8 bytes
     reinterpreted as 16-bit little-endian PCM (truncated to an even
-    byte count), with sample-rate/sample-count metadata as sibling
-    typed columns — predicates on duration prune without touching the
+    byte count), with sample-rate (16 kHz) and sample-count metadata as
+    sibling typed columns — predicates on duration prune without touching the
     waveform bytes."""
     raw = F.encode(F.col(text_col), "UTF-8")
     even = F.substring(
@@ -99,7 +98,7 @@ def attach_audio(df: DataFrame, text_col: str = "text",
         "doc_id",
         even.alias("audio"),
         F.lit("audio/pcm16le").alias("media_type"),
-        F.lit(sample_rate).alias("sample_rate"),
+        F.lit(16000).alias("sample_rate"),
         (F.floor(F.octet_length(raw) / 2)).cast("int").alias("n_samples"),
         F.md5(even).alias("content_md5"),
     )

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import tokens, word_ngrams
+from .dedup import md5_32, tokens, word_ngrams
 
 # Marker tokens per language for the n-gram(1) heuristic language ID.
 # Deliberately tiny: the point is the *operator shape* (profile join +
@@ -191,11 +191,11 @@ def token_counts(df: DataFrame, id_col: str = "doc_id",
 MOD = 1_000_000_007
 
 
-def rolling_fingerprint(text: Column, prefix_len: int = 64) -> Column:
-    """Polynomial rolling hash over the first `prefix_len` chars:
+def rolling_fingerprint(text: Column) -> Column:
+    """Polynomial rolling hash over the first 64 chars:
     h = fold(h*31 + ascii(c)) mod 1e9+7. Stays in bigint range because the
     modulus is applied every step (max acc ≈ 31·(1e9+7)+255 ≪ 2^63)."""
-    idx = F.sequence(F.lit(1), F.least(F.length(text), F.lit(prefix_len)))
+    idx = F.sequence(F.lit(1), F.least(F.length(text), F.lit(64)))
     codes = F.transform(idx, lambda i: F.ascii(text.substr(i, F.lit(1))).cast("bigint"))
     return F.aggregate(
         codes, F.lit(0).cast("bigint"),
@@ -251,8 +251,8 @@ def _winnow_doc_arrays(df: DataFrame, k: int, w: int,
             " ", *[F.element_at(F.col("_toks"), i + j) for j in range(k)]))
     encs = F.transform(
         F.col("_grams"),
-        lambda g, i: F.conv(F.substring(F.md5(g), 1, 8), 16, 10)
-        .cast("bigint") * F.lit(65536) + (F.lit(65535) - (i + F.lit(1))))
+        lambda g, i: md5_32(g) * F.lit(65536)
+        + (F.lit(65535) - (i + F.lit(1))))
     # The sliding-min projection MUST reference `_encs` more than once:
     # CollapseProject inlines a non-cheap alias referenced exactly once,
     # and an inlined `_encs` sits UNDER the per-window lambda, so every
@@ -292,9 +292,7 @@ def winnow_stats(df: DataFrame, k: int = 3, w: int = 4,
 def winnow_pairs(df: DataFrame, k: int = 3, w: int = 4,
                  df_ceiling: int = 16, min_shared: int = 2,
                  id_col: str = "doc_id",
-                 text_col: str = "text",
-                 reliable: bool = False,
-                 staging_dir: str | None = None) -> DataFrame:
+                 text_col: str = "text") -> DataFrame:
     """MOSS overlap detection — the winnowing sketch's actual purpose:
     discover document pairs sharing selected fingerprints and score
     each pair by containment of the smaller sketch. Returns
@@ -332,17 +330,6 @@ def winnow_pairs(df: DataFrame, k: int = 3, w: int = 4,
     round-robin-shuffling the text cost more than the 0.6 s serial
     sketch it parallelized, and at real scale splits already provide
     the parallelism).
-
-    Durability trade (`reliable`): the default localCheckpoint stores
-    the sketch blocks in EXECUTOR storage with the lineage truncated —
-    fast and right for local[n] / on-demand nodes, but if an executor
-    dies (preemptible/spot nodes) its blocks are gone and there is no
-    lineage to recompute from: the job fails. `reliable=True` instead
-    stages the sketch through one parquet round-trip under
-    `staging_dir` (a durable path every executor can reach — DFS at
-    scale), trading one extra write for executor-loss survival; the
-    downstream plan is identical either way (it reads one materialized
-    sketch relation).
     """
     arr = _winnow_doc_arrays(df, k, w, id_col, text_col)
     fpa = F.array_distinct(F.transform(
@@ -357,15 +344,7 @@ def winnow_pairs(df: DataFrame, k: int = 3, w: int = 4,
     sketch = (arr.select(F.col(id_col).alias("doc"), fpa.alias("_fps"))
               .select("doc", F.size("_fps").alias("n_fp"),
                       F.explode_outer("_fps").alias("fp")))
-    if reliable:
-        if staging_dir is None:
-            raise ValueError(
-                "winnow_pairs(reliable=True) needs staging_dir: a "
-                "durable path (DFS at scale) every executor can read")
-        sketch.write.mode("overwrite").parquet(staging_dir)
-        fps = df.sparkSession.read.parquet(staging_dir)
-    else:
-        fps = sketch.localCheckpoint()
+    fps = sketch.localCheckpoint()
     dfreq = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     keep = fps.join(dfreq.filter(F.col("df") <= df_ceiling), "fp")
     a = keep.select("fp", F.col("doc").alias("doc_a"),

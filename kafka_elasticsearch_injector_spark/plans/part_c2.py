@@ -230,8 +230,10 @@ def q_dedup_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "global.",
 )
 def q_train_order(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.dedup import md5_32
+
     h = F.md5(F.col("doc_id").cast("string"))
-    shard = F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint"),
+    shard = F.pmod(md5_32(F.col("doc_id").cast("string")),
                    F.lit(8)).cast("int")
     w = Window.partitionBy("shard").orderBy("_h", "doc_id")
     return (

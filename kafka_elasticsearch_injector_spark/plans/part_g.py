@@ -563,20 +563,16 @@ def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "domain mix landed where the design asked (hash sampling "
         "converges at 1/√n; small sources can sit far off). One "
         "partial-aggregated rollup, conditional-count lanes share the "
-        "q_mixture_sample threshold expression verbatim; realized "
-        "rate is an integer-operand division, requested rate a plan "
+        "q_mixture_sample threshold expression (curation.mixture_draw); "
+        "realized rate is an integer-operand division, requested rate a plan "
         "literal.",
 )
 def q_mixture_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.curation import _TWO_32
+    from ..operators.curation import mixture_draw
     from .part_c import _MIX_DEFAULT, _MIX_RATES
 
     docs = table(spark, sf_dir, "documents")
-    u = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                16, 10).cast("bigint") / F.lit(_TWO_32))
-    rate = F.lit(float(_MIX_DEFAULT))
-    for key, r in sorted(_MIX_RATES.items()):
-        rate = F.when(F.col("source") == key, F.lit(float(r))).otherwise(rate)
+    u, rate = mixture_draw(_MIX_RATES, "source", _MIX_DEFAULT, "doc_id")
     return (docs.select("source", u.alias("_u"), rate.alias("_r"))
             .groupBy("source")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_total"),

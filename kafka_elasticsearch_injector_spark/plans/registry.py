@@ -1,8 +1,8 @@
 """Declared query inventory: the t2 contract.
 
 Every operator claimed in SURVEY.md §2 is declared here as a `QueryDef`:
-a PySpark plan builder plus (when SQL-expressible) the equivalent DuckDB
-oracle SQL. The driver runs both sides at sf0.01 and hash-compares.
+a PySpark plan builder plus the equivalent DuckDB oracle SQL. The driver
+runs both sides at sf0.01 and hash-compares.
 
 Determinism discipline (BASELINE.md):
 - float outputs rounded to 6 decimals on BOTH sides;
@@ -26,17 +26,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 @dataclass(frozen=True)
 class QueryDef:
-    """One declared query: Spark plan + DuckDB oracle (None → rows-only check)."""
+    """One declared query: Spark plan + DuckDB oracle SQL."""
 
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
     doc: str = ""
 
 
 QUERIES: dict[str, QueryDef] = {}
 
 
-def register(name: str, oracle: str | None, doc: str = ""):
+def register(name: str, oracle: str, doc: str = ""):
     """Decorator: add a (spark_fn, oracle_sql) pair to the inventory."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
@@ -151,5 +151,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     _load_all()
-    return {name: qd.oracle for name, qd in _ordered().items()
-            if qd.oracle is not None}
+    return {name: qd.oracle for name, qd in _ordered().items()}

@@ -71,17 +71,14 @@ def python_worker_module(master: str) -> str | None:
 
 
 def get_spark(app_name: str = "kafka-elasticsearch-injector-spark",
-              master: str | None = None,
-              shuffle_partitions: int | None = None,
               mode: str = "batch") -> SparkSession:
     """The configured session (see module docstring). On a local master
     Python tasks run under `pyspark_injector_worker`; on any other
     master, under PySpark's default worker."""
     gc_opts = gc_java_options(mode)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -54,12 +54,3 @@ class SchemaRegistryClient:
                 return json.loads(resp.read())["schema"]
         except Exception as ex:  # noqa: BLE001 — surface the id + url
             raise SchemaRegistryError(f"fetch {url}: {ex}") from ex
-
-    def __getstate__(self):
-        # Drop the warm cache when shipping to executors only if the
-        # fetcher can re-fetch; a dict-backed fetcher keeps its mapping.
-        return {"_base_url": self._base_url, "_fetcher": self._fetcher,
-                "_cache": dict(self._cache)}
-
-    def __setstate__(self, state):
-        self.__dict__.update(state)

@@ -1,18 +1,3 @@
-from .es_sink import (
-    STATS_SCHEMA,
-    ElasticBulkWriter,
-    HttpTransport,
-    NullTransport,
-    write_arrow_factory,
-)
-from .pipeline import (
-    build_elastic_records,
-    read_kafka_stream,
-    start_pipeline,
-)
-
-__all__ = [
-    "STATS_SCHEMA", "ElasticBulkWriter", "HttpTransport", "NullTransport",
-    "write_arrow_factory", "build_elastic_records", "read_kafka_stream",
-    "start_pipeline",
-]
+"""The injector service: Kafka source → records (pipeline.py) →
+Elasticsearch bulk sink (es_sink.py), with probes, metrics and the
+progress listener."""

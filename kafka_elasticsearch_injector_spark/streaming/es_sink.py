@@ -11,9 +11,9 @@ executor-side Arrow writer (`write_arrow_factory`) that runs as a
 - per-item triage: 201 created; 409 conflict → AlreadyExists, counted,
   NOT retried; 400 → dropped (bad request), counted; 429/5xx → retry
   queue with constant backoff (store.go:42-44) — the reference retries
-  forever; we default to bounded retries (cfg.max_retries) because an
-  unbounded loop can live-lock a partition (a reference bug noted in
-  SURVEY.md §4.1).
+  forever; ElasticBulkWriter bounds them (max_retries, 10 by default)
+  because an unbounded loop can live-lock a partition (a reference bug
+  noted in SURVEY.md §4.1).
 
 The writer calls one transport method, `bulk_create`, on a transport
 built on the executor: HttpTransport posts to the ES _bulk endpoint,
@@ -292,7 +292,6 @@ def write_arrow_factory(cfg, transport_factory):
     """
     batch_size = cfg.batch_size
     backoff_s = cfg.bulk_backoff_s
-    max_retries = cfg.max_retries
     max_bytes = cfg.bulk_max_bytes
 
     def write_arrow(batches: Iterator) -> Iterator:
@@ -305,8 +304,7 @@ def write_arrow_factory(cfg, transport_factory):
             if writer is None:
                 writer = ElasticBulkWriter(
                     transport_factory(), batch_size=batch_size,
-                    backoff_s=backoff_s, max_retries=max_retries,
-                    max_bytes=max_bytes)
+                    backoff_s=backoff_s, max_bytes=max_bytes)
             writer.write(list(zip(
                 batch.column("index_name").to_pylist(),
                 batch.column("doc_id").to_pylist(),

@@ -23,6 +23,11 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 
 class ProbeServer:
+    """The probe server; `.start()` serves it (port 0 → ephemeral, see
+    `.port`). Pass `metrics_fn` (e.g. InjectorMetrics.prometheus_text)
+    to also serve /metrics; route overrides come from
+    K8S_LIVENESS_ROUTE / K8S_READINESS_ROUTE via InjectorConfig."""
+
     def __init__(self, port: int, ready_fn: Callable[[], bool] | None = None,
                  metrics_fn: Callable[[], str] | None = None,
                  liveness_route: str = "/healthz",
@@ -81,16 +86,3 @@ class ProbeServer:
         self._server.shutdown()
         self._server.server_close()
 
-
-def start_probes(port: int,
-                 ready_fn: Callable[[], bool] | None = None,
-                 metrics_fn: Callable[[], str] | None = None,
-                 liveness_route: str = "/healthz",
-                 readiness_route: str = "/readiness") -> ProbeServer:
-    """Start the probe server (port 0 → ephemeral, see `.port`).
-    Pass `metrics_fn` (e.g. InjectorMetrics.prometheus_text) to also
-    serve /metrics; route overrides come from K8S_LIVENESS_ROUTE /
-    K8S_READINESS_ROUTE via InjectorConfig."""
-    return ProbeServer(port, ready_fn, metrics_fn,
-                       liveness_route=liveness_route,
-                       readiness_route=readiness_route).start()

@@ -63,5 +63,6 @@ else:
     import pandas  # noqa: F401
     import pyarrow  # noqa: F401
 
+    import kafka_elasticsearch_injector_spark.config  # noqa: F401
     import kafka_elasticsearch_injector_spark.sources.confluent  # noqa: F401
     import kafka_elasticsearch_injector_spark.streaming.es_sink  # noqa: F401

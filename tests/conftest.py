@@ -49,7 +49,6 @@ SLOW_TEST_PREFIXES = (
     "test_no_hasher_killer_output_types",
     "test_result_types_match_across_engines",
     "test_decontaminate_",
-    "test_scd2_no_broadcast_same_result",
     "test_mixture_sample_rate_edges_and_determinism",
     # file-IO round-trips and sketch certifications: integration work
     "test_include_key_avro",
@@ -60,7 +59,6 @@ SLOW_TEST_PREFIXES = (
     "test_vocab_growth_no_global",
     "test_dedup_recall_sample",
     "test_dedup_recall_sampled",
-    "test_winnow_pairs_reliable",
     "test_group_median_grid_matches",
     "test_drift_ks_bucket_mode",
     "test_stream_",

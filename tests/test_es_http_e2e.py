@@ -141,7 +141,7 @@ def _write_source(spark, path, rows):
 
 def _run_pipeline(spark, src_dir, ckpt, url):
     cfg = InjectorConfig(record_type="json", topics=("my-topic",),
-                         bulk_backoff_s=0.01, max_retries=5)
+                         bulk_backoff_s=0.01)
     source = (
         spark.readStream.schema(
             "key STRING, value STRING, topic STRING, partition INT, "
@@ -229,7 +229,7 @@ def test_streaming_pipeline_crash_recovery_over_shared_checkpoint(
     ).repartition(1).write.mode("overwrite").parquet(src_dir)
 
     cfg = InjectorConfig(record_type="json", topics=("my-topic",),
-                         batch_size=1, bulk_backoff_s=0.01, max_retries=3)
+                         batch_size=1, bulk_backoff_s=0.01)
 
     def run():
         source = (

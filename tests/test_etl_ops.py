@@ -42,23 +42,6 @@ def test_scd2_closes_and_appends(spark):
     assert len(rows) == 4
 
 
-def test_scd2_no_broadcast_same_result(spark):
-    # broadcast_changes=False (oversized change batches) must be a pure
-    # physical-strategy switch: identical rows, shuffle join instead.
-    dim = spark.createDataFrame(
-        [(1, "old", T0, None, True), (2, "keep", T0, None, True)],
-        "k INT, v STRING, valid_from TIMESTAMP, valid_to TIMESTAMP, "
-        "is_current BOOLEAN")
-    changes = spark.createDataFrame(
-        [(1, "new", T1)], "k INT, v STRING, ts TIMESTAMP")
-    a = {tuple(r) for r in
-         scd2_apply(dim, changes, ["k"], "ts").collect()}
-    b = {tuple(r) for r in
-         scd2_apply(dim, changes, ["k"], "ts",
-                    broadcast_changes=False).collect()}
-    assert a == b
-
-
 def test_profile_metrics_hand_computed(spark):
     from kafka_elasticsearch_injector_spark.operators.etl import profile
 

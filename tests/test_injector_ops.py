@@ -212,6 +212,22 @@ def test_config_from_env_roundtrip():
     assert c.blacklisted_columns == ("a", "b") and c.bulk_backoff_s == 0.5
 
 
+def test_every_config_field_is_set_by_from_env():
+    # The service is configured by environment variables only, so a field
+    # from_env leaves at its default is a setting no deployment can reach.
+    import dataclasses
+
+    passed: set[str] = set()
+
+    class Recorder(InjectorConfig):
+        def __init__(self, **kwargs):
+            passed.update(kwargs)
+
+    Recorder.from_env({})
+    fields = {f.name for f in dataclasses.fields(InjectorConfig)}
+    assert fields - passed == set(), "fields without an env var"
+
+
 def test_config_rejects_bad_record_type():
     with pytest.raises(ValueError, match="avro|json"):
         InjectorConfig(record_type="protobuf")
@@ -305,11 +321,11 @@ def test_probe_server_liveness_and_readiness():
     import urllib.request
 
     from kafka_elasticsearch_injector_spark.streaming.probes import (
-        start_probes,
+        ProbeServer,
     )
 
     state = {"ready": False}
-    srv = start_probes(0, ready_fn=lambda: state["ready"])
+    srv = ProbeServer(0, ready_fn=lambda: state["ready"]).start()
     base = f"http://127.0.0.1:{srv.port}"
     try:
         with urllib.request.urlopen(f"{base}/healthz") as r:
@@ -391,11 +407,12 @@ def test_probe_server_custom_routes():
     import urllib.request
 
     from kafka_elasticsearch_injector_spark.streaming.probes import (
-        start_probes,
+        ProbeServer,
     )
 
-    srv = start_probes(0, ready_fn=lambda: True,
-                       liveness_route="/alive", readiness_route="/ready")
+    srv = ProbeServer(0, ready_fn=lambda: True,
+                      liveness_route="/alive",
+                      readiness_route="/ready").start()
     base = f"http://127.0.0.1:{srv.port}"
     try:
         with urllib.request.urlopen(f"{base}/alive") as r:

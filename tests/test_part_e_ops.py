@@ -521,42 +521,6 @@ def test_winnow_matches_bruteforce_reference(spark):
     assert got == expect
 
 
-def test_winnow_pairs_reliable_staging_equals_default(spark, tmp_path):
-    """r8 verdict item #4: reliable=True must route the sketch through
-    a durable parquet staging dir (executor-loss-safe) and produce the
-    IDENTICAL pair relation as the localCheckpoint default; calling it
-    without a staging_dir is a loud error, and the executed plan reads
-    the staged files (no re-derivation from text)."""
-    import pytest as _pytest
-
-    from kafka_elasticsearch_injector_spark.operators.text import (
-        winnow_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy cat"),
-         (3, "completely unrelated words appear in this row"),
-         (4, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string")
-
-    with _pytest.raises(ValueError, match="staging_dir"):
-        winnow_pairs(docs, reliable=True)
-
-    default = winnow_pairs(docs)
-    staged = winnow_pairs(docs, reliable=True,
-                          staging_dir=str(tmp_path / "sketch"))
-    key = lambda r: (r.doc_a, r.doc_b)
-    assert sorted(staged.collect(), key=key) \
-        == sorted(default.collect(), key=key)
-    assert staged.count() > 0
-
-    plan = staged._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") >= 1, plan
-    # never re-derives from the in-memory docs relation (text):
-    assert "LocalTableScan" not in plan and "ExistingRDD" not in plan
-
-
 def test_bm25_two_scans_no_joins(spark, sf_dir):
     """r9 rewrite gate: BM25 is one stats pass + one scoring pass —
     exactly two text scans in the executed plan (the theoretical

@@ -1,4 +1,4 @@
-"""t2 rehearsal: every declared query with an oracle must hash-match DuckDB
+"""t2 rehearsal: every declared query must hash-match its DuckDB oracle
 on the local test scale factor. This is the same gate the driver runs at
 sf0.01 (CORRECTNESS_r{N}.json)."""
 
@@ -25,11 +25,7 @@ def duck(sf_dir):
 @pytest.mark.parametrize("name", ALL)
 def test_query_matches_oracle(name, spark, sf_dir, duck):
     qd = QUERIES[name]
-    df = qd.spark(spark, sf_dir)
-    if qd.oracle is None:
-        assert df.count() >= 0  # rows-only check, mirroring the driver
-        return
-    problems = compare(df, duck, qd.oracle, name)
+    problems = compare(qd.spark(spark, sf_dir), duck, qd.oracle, name)
     assert not problems, "\n".join(problems)
 
 
@@ -182,6 +178,36 @@ def test_banded_join_arms_match_oracle(name, arm, spark, sf001_dir,
     finally:
         spark.conf.set(threshold, prev)
         con.close()
+    assert not problems, "\n".join(problems)
+
+
+@pytest.mark.parametrize("name",
+                         ["q_dedup_minhash", "q_candidate_jac_histogram"])
+def test_unmasked_verify_matches_oracle(name, spark, sf001_dir,
+                                        monkeypatch):
+    """The other side of io.small_vocab_probe's branch is oracle-equal:
+    sf0.01's vocabulary fits the 64-bit mask, so the declared queries
+    verify with bit_count; with the probe reporting no small vocabulary
+    they verify with array_intersect instead. q_candidate_jac_histogram
+    runs at threshold 0, where the masked path also skips its filter."""
+    from kafka_elasticsearch_injector_spark import io
+
+    probed = []
+
+    def no_small_vocab(*args):
+        probed.append(args)
+        return None
+
+    monkeypatch.setattr(io, "small_vocab_probe", no_small_vocab)
+    con = duck_connection(sf001_dir)
+    try:
+        df = QUERIES[name].spark(spark, sf001_dir)
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        problems = compare(df, con, QUERIES[name].oracle, name)
+    finally:
+        con.close()
+    assert probed, "the declared query did not reach the patched probe"
+    assert "bit_count" not in plan, plan
     assert not problems, "\n".join(problems)
 
 

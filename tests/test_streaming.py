@@ -127,7 +127,7 @@ def test_metrics_endpoint_scrape_during_run(spark, tmp_path, fake_es):
         InjectorMetrics,
     )
     from kafka_elasticsearch_injector_spark.streaming.probes import (
-        start_probes,
+        ProbeServer,
     )
 
     _, url = fake_es
@@ -141,7 +141,7 @@ def test_metrics_endpoint_scrape_during_run(spark, tmp_path, fake_es):
 
     cfg = InjectorConfig(record_type="json", topics=("my-topic",))
     metrics = InjectorMetrics()
-    server = start_probes(0, metrics_fn=metrics.prometheus_text)
+    server = ProbeServer(0, metrics_fn=metrics.prometheus_text).start()
     source = (
         spark.readStream.schema(
             "key STRING, value STRING, topic STRING, partition INT, "
